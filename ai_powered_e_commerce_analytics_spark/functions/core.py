@@ -244,6 +244,20 @@ def pin(df: DataFrame, eager: bool = True) -> DataFrame:
     where the already-computed partitions live (test_checkpoint_knob
     asserts identical BPE merges through both paths).
 
+    Blast radius beyond the trainers: ``pin`` also shares a
+    multiply-referenced contraction inside about ten ONE-SHOT analytic
+    queries under ``plans/``. There:
+
+    - the default ``eager=True`` runs the pinned subtree as a Spark job
+      while the query DataFrame is BUILT, so constructing a query (for
+      ``explain`` or to run later) already scans the corpus, and a
+      failure after construction leaves the checkpoint blocks behind
+      until a persistent-RDD sweep or the session ends;
+    - under ``localCheckpoint`` an executor loss fails the whole query,
+      where an unpinned plan would recompute the lost partitions;
+    - with ``spark.graft.checkpointDir`` set, every call pays one
+      reliable distributed write instead.
+
     Checkpoint-file GC: reliable checkpoints are NOT reclaimed by Spark
     unless ``spark.cleaner.referenceTracking.cleanCheckpoints`` was true
     at SparkContext creation — ``session.get_spark`` sets it, so rounds'

@@ -1837,15 +1837,15 @@ ANALYTICS_SPECS = [
               ORDER_VALUE_OUTLIERS_SQL, ("grouped-zscore-outliers",)),
     QuerySpec("order_value_mad_outliers", order_value_mad_outliers,
               ORDER_VALUE_MAD_OUTLIERS_SQL, ("robust-mad-outliers",),
-              touched_round=9),  # r9 addition: composed-percentile robust stats
+              touched_round=16),  # r16: AUDIT row changed; r9 addition: composed-percentile robust stats
     QuerySpec("rfm_customer_segments", rfm_customer_segments,
               RFM_CUSTOMER_SEGMENTS_SQL, ("rfm-quartile-segmentation",),
-              touched_round=7),  # r7: exact_percentiles_scalable rework
+              touched_round=16),  # r16: AUDIT row changed; r7: exact_percentiles_scalable rework
     QuerySpec("monthly_revenue_mom", monthly_revenue_mom,
               MONTHLY_REVENUE_MOM_SQL, ("seasonality-mom-trailing",)),
     QuerySpec("customer_segment_scd2", customer_segment_scd2,
               CUSTOMER_SEGMENT_SCD2_SQL, ("scd2-gaps-and-islands",),
-              touched_round=7),  # r7: exact_percentiles_scalable rework
+              touched_round=16),  # r16: AUDIT row changed; r7: exact_percentiles_scalable rework
     QuerySpec("referential_integrity_report", referential_integrity_report,
               REFERENTIAL_INTEGRITY_SQL, ("dq-relationship-tests",),
               touched_round=7),  # r7: fused one-scan-per-fact rewrite
@@ -1857,8 +1857,8 @@ ANALYTICS_SPECS = [
               SHIP_DELAY_OLS_SQL, ("ols-sufficient-stats",)),
     QuerySpec("part_price_size_skyline", part_price_size_skyline,
               PART_PRICE_SIZE_SKYLINE_SQL, ("skyline-pareto-frontier",),
-              touched_round=10),  # r10 addition: dominance via bucketed prefix max
+              touched_round=16),  # r16: AUDIT row changed; r10 addition: dominance via bucketed prefix max
     QuerySpec("part_price_size_date_skyline", part_price_size_date_skyline,
               PART_PRICE_SIZE_DATE_SKYLINE_SQL, ("skyline-3d-staircase",),
-              touched_round=11),  # r11 addition: k-D via level-exploded staircase
+              touched_round=16),  # r16: AUDIT row changed; r11 addition: k-D via level-exploded staircase
 ]

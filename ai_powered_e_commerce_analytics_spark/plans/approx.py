@@ -369,11 +369,13 @@ APPROX_SPECS = [
         cms_heavy_hitters,
         CMS_HEAVY_HITTERS_SQL,
         ("approx-countmin-heavy-hitters",),
+        touched_round=16,  # r16: AUDIT row changed
     ),
     QuerySpec(
         "sliding_wau_hll_union",
         sliding_wau_hll_union,
         SLIDING_WAU_HLL_SQL,
         ("approx-hll-sketch-union-sliding",),
+        touched_round=16,  # r16: AUDIT row changed
     ),
 ]

@@ -690,6 +690,7 @@ FILTERING_SPECS = [
         doc_unigram_surprisal,
         DOC_UNIGRAM_SURPRISAL_SQL,
         ("perplexity-filter-unigram",),
+        touched_round=16,  # r16: AUDIT row changed
     ),
     QuerySpec(
         "doc_bigram_surprisal",

@@ -510,6 +510,7 @@ GRAPH_SPECS = [
         copurchase_rule_significance,
         COPURCHASE_RULE_SIGNIFICANCE_SQL,
         ("rule-gtest-significance",),
+        touched_round=16,  # r16: AUDIT row changed
     ),
     QuerySpec(
         "copurchase_triangles",
@@ -522,11 +523,13 @@ GRAPH_SPECS = [
         copurchase_item_similarity,
         COPURCHASE_ITEM_SIMILARITY_SQL,
         ("item-cf-jaccard",),
+        touched_round=16,  # r16: AUDIT row changed
     ),
     QuerySpec(
         "copurchase_association_rules",
         copurchase_association_rules,
         COPURCHASE_ASSOCIATION_RULES_SQL,
         ("association-rules-confidence-lift",),
+        touched_round=16,  # r16: AUDIT row changed
     ),
 ]

@@ -1601,12 +1601,14 @@ PRETRAIN_SPECS = [
         doc_unigram_perplexity,
         _doc_unigram_ppl_sql(),
         ("quality-lm-perplexity-filter",),
+        touched_round=16,  # r16: AUDIT row changed
     ),
     QuerySpec(
         "unigram_lm_em_round",
         unigram_lm_em_round,
         _unigram_sql(),
         ("tokenizer-unigram-lm-em",),
+        touched_round=16,  # r16: AUDIT row changed
     ),
     QuerySpec(
         "decontaminate_ngram_overlap",
@@ -1649,6 +1651,7 @@ PRETRAIN_SPECS = [
         source_temperature_mix,
         SOURCE_TEMPERATURE_MIX_SQL,
         ("mix-temperature-sampling",),
+        touched_round=16,  # r16: AUDIT row changed
     ),
     QuerySpec(
         "source_kl_divergence",

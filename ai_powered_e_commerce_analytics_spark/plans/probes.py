@@ -206,77 +206,76 @@ PLAN_PROBES = {
 }
 
 
-def executing_scan_census(df: DataFrame) -> dict:
-    """TRUE executing-scan census of ``df``'s CURRENT physical plan —
-    the count of parquet scans that actually run, not the count printed
-    by ``executedPlan().toString()`` (which re-prints every cached
-    relation's build plan at every ``InMemoryTableScan`` reference and
-    so over-counts; conversely the plain text hides which Exchange
-    subtrees AQE re-planned independently). Call AFTER an action so the
-    AQE plan is final. Walk rules (optimization r16 evidence protocol —
-    see plans/r16/scan_census.py and OPTIMIZATION_r16.md):
+_SCAN_NODES = ("FileSourceScanExec", "BatchScanExec")
 
-    - each physical node object is visited ONCE (AQE stage reuse shares
-      ``QueryStageExec`` instances between parents — a revisit is reuse,
-      not re-execution);
+
+def executing_plan_census(df: DataFrame) -> dict:
+    """Census of the physical nodes that actually EXECUTE in ``df``'s
+    current plan — not the nodes printed by ``explain`` or
+    ``executedPlan().toString()``, which re-print every cached
+    relation's build plan at every ``InMemoryTableScan`` reference (and,
+    for an adaptive cached build, its initial plan next to its final
+    one) and so over-count. Call AFTER an action so the AQE plans are
+    final. Walk rules (evidence protocol of OPTIMIZATION_r16.md):
+
     - ``AdaptiveSparkPlan`` descends into its current plan, query-stage
       wrappers into their materialized plans;
+    - a ``QueryStageExec`` revisited (same materialized plan, by
+      ``SparkPlan.id``) is AQE stage reuse and is walked once; every
+      other node counts at each position it occupies;
     - ``ReusedExchange`` stops (the subtree runs once at its original
       site);
     - ``InMemoryTableScan`` stops, but the cached relation's build plan
-      is walked ONCE per distinct ``CachedRDDBuilder`` (cache blocks
+      is walked ONCE per distinct ``cachedPlan().id()`` (cache blocks
       materialize once per run regardless of reference count).
 
-    Returns ``{"executing_scans": n, "cached_relations": n,
-    "scan_sources": {file: n}}``.
+    Returns ``{"nodes": {simple class name: n}, "executing_scans": n,
+    "cached_relations": n, "scan_sources": {file: n}}``. Wrapper nodes
+    (adaptive plan, query stages, reused exchanges, in-memory scans)
+    are followed, not counted.
     """
-    jvm = df.sparkSession._jvm
-    plan = df._jdf.queryExecution().executedPlan()
-    seen_caches: set[str] = set()
-    seen_nodes: set[int] = set()
-    scans = 0
+    seen_stages: set[int] = set()
+    seen_caches: set[int] = set()
+    nodes: dict[str, int] = {}
     sources: dict[str, int] = {}
 
-    def children(p):
-        seq = p.children()
-        return [seq.apply(i) for i in range(seq.size())]
-
     def walk(p):
-        nonlocal scans
-        oid = jvm.System.identityHashCode(p)
-        if oid in seen_nodes:
-            return
-        seen_nodes.add(oid)
         name = p.getClass().getSimpleName()
         if name == "AdaptiveSparkPlanExec":
             walk(p.executedPlan())
             return
         if name.endswith("QueryStageExec"):
-            walk(p.plan())
+            # QueryStageExec.id is the stage number, which restarts in
+            # every adaptive plan; key on its materialized plan instead
+            stage = p.plan()
+            if stage.id() not in seen_stages:
+                seen_stages.add(stage.id())
+                walk(stage)
             return
         if name == "ReusedExchangeExec":
             return
         if name == "InMemoryTableScanExec":
-            rel = p.relation()
-            key = str(jvm.System.identityHashCode(rel.cacheBuilder()))
-            if key not in seen_caches:
-                seen_caches.add(key)
-                walk(rel.cachedPlan())
+            build = p.relation().cachedPlan()
+            if build.id() not in seen_caches:
+                seen_caches.add(build.id())
+                walk(build)
             return
-        if name in ("FileSourceScanExec", "BatchScanExec"):
-            scans += 1
+        nodes[name] = nodes.get(name, 0) + 1
+        if name in _SCAN_NODES:
             try:
                 loc = p.metadata().get("Location").get()
                 src = loc.rsplit("/", 1)[-1].rstrip("]")
             except Exception:  # noqa: BLE001 - diagnostic label only
                 src = "?"
             sources[src] = sources.get(src, 0) + 1
-        for c in children(p):
-            walk(c)
+        seq = p.children()
+        for i in range(seq.size()):
+            walk(seq.apply(i))
 
-    walk(plan)
+    walk(df._jdf.queryExecution().executedPlan())
     return {
-        "executing_scans": scans,
+        "nodes": nodes,
+        "executing_scans": sum(nodes.get(n, 0) for n in _SCAN_NODES),
         "cached_relations": len(seen_caches),
         "scan_sources": sources,
     }

@@ -2254,6 +2254,7 @@ PROFILING_SPECS = [
         order_value_winsorized_stats,
         ORDER_VALUE_WINSORIZED_SQL,
         ("winsorized-robust-stats",),
+        touched_round=16,  # r16: AUDIT row changed
     ),
     QuerySpec(
         "join_key_skew_profile",
@@ -2291,7 +2292,7 @@ PROFILING_SPECS = [
         shipping_sla_percentiles,
         SHIPPING_SLA_PERCENTILES_SQL,
         ("sla-delay-percentiles",),
-        touched_round=7,  # r7: exact_percentiles_scalable rework
+        touched_round=16,  # r16: AUDIT row changed; r7: exact_percentiles_scalable rework
     ),
     QuerySpec(
         "customer_order_value_quartiles",
@@ -2308,7 +2309,7 @@ PROFILING_SPECS = [
         order_value_quantile_bins,
         ORDER_VALUE_QUANTILE_BINS_SQL,
         ("quantile-discretizer-bins",),
-        touched_round=10,  # r10 addition: equal-frequency binning
+        touched_round=16,  # r16: AUDIT row changed; r10 addition: equal-frequency binning
     ),
     QuerySpec(
         "dataset_card_documents",
@@ -2341,7 +2342,7 @@ PROFILING_SPECS = [
         customer_revenue_pareto,
         CUSTOMER_REVENUE_PARETO_SQL,
         ("pareto-decile-share",),
-        touched_round=7,  # r7: exact_percentiles_scalable rework
+        touched_round=16,  # r16: AUDIT row changed; r7: exact_percentiles_scalable rework
     ),
     QuerySpec(
         "nation_revenue_hhi",

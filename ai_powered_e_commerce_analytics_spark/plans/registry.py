@@ -1,8 +1,20 @@
-"""Assembled correctness-query registry (driver contract surface)."""
+"""Assembled correctness-query registry (driver contract surface).
+
+The driver oracle-checks the first 50 entries of ``QUERIES`` each round,
+so the registry order is the evidence-rotation policy. Each query's
+last-verified round is derived from the driver's ``CORRECTNESS_r*.json``
+files at the repo root (see ``driver_verified_rounds``): a new round's
+file enters the rotation with no edit here. ``QuerySpec.touched_round``
+is still bumped by hand when a query's plan changes, until a generated
+plan-fingerprint ledger can derive it too.
+"""
 
 from __future__ import annotations
 
+import json
+import re
 from collections.abc import Callable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -43,549 +55,38 @@ _ALL_SPECS: list[QuerySpec] = (
     + ER_SPECS
 )
 
-# Driver-verification history, one set per round, used to rotate the
-# driver's 50-query window by LEAST-RECENTLY-VERIFIED: queries never
-# driver-checked come first, then the round whose evidence is oldest, and
-# so on. This keeps every registry query's driver CORRECTNESS row at most
-# ~2 rounds old even as shared helpers evolve underneath it.
-#
-# NOTE: the round-1..3 sets below (and the _R5_ADDED/_R6_ADDED addition
-# lists) are retained as HISTORY only — every query they contain has
-# been re-verified by rounds 4-6 (verified disjoint/covering), so
-# _staleness orders purely on the r4/r5/r6 sets plus the current
-# round's additions.
-_R1_DRIVER_VERIFIED = {
-    "user_kpis", "shop_kpis", "date_kpis", "gold_enrichment_join",
-    "customers_without_orders", "acctbal_minmax_normalized",
-    "item_id_assignment", "item_id_assignment_ranged", "batch_assignment",
-    "pool_assignment", "union_all_orders", "top100_orders",
-    "top3_orders_per_customer", "tpch_q1_pricing_summary",
-    "tpch_q3_shipping_priority", "tpch_q5_local_supplier_volume",
-    "events_hourly_rollup", "events_user_sessions", "events_props_extract",
-    "salted_skew_join_brand_revenue", "tpch_q4_late_shipment_semi",
-    "tpch_q6_forecast_revenue", "tpch_q10_returned_revenue",
-    "tpch_q12_priority_pivot", "tpch_q14_promo_revenue",
-    "tpch_q16_supplier_variety", "tpch_q17_small_quantity_revenue",
-    "tpch_q18_large_orders", "tpch_q19_disjunctive_revenue",
-    "tpch_q22_idle_wealthy_customers", "running_revenue_per_customer",
-    "tpch_q2_min_cost_supplier", "tpch_q7_nation_volume",
-    "tpch_q8_market_share", "tpch_q9_product_profit",
-    "tpch_q11_important_parts", "tpch_q13_order_count_distribution",
-    "tpch_q15_top_supplier", "tpch_q20_excess_share_suppliers",
-    "tpch_q21_sole_late_supplier", "rollup_revenue_by_flag_status",
-    "cube_orders_by_status_priority", "order_value_percentiles",
-    "asof_last_click_before_purchase", "range_join_clicks_before_purchase",
-    "order_gaps_lag_lead", "customer_rank_battery", "rolling_weekly_revenue",
-    "customers_both_years", "customers_1996_only",
-}
-
-# Queries verified by round 2's driver window (CORRECTNESS_r02.json —
-# all 50 rows green). Their evidence is the freshest, so they rotate to
-# the back of the round-3 window.
-_R2_DRIVER_VERIFIED = {
-    "text_quality", "lang_id_heuristic", "token_stats_by_source",
-    "doc_fingerprint", "tfidf_top_terms", "doc_repetition_stats",
-    "boilerplate_shingle_ratio", "dedup_exact", "dedup_ngram_jaccard",
-    "dedup_minhash_lsh", "dedup_simhash", "dedup_simhash64",
-    "dedup_near_dup_survivors", "dedup_components", "dedup_survivors_cc",
-    "embedding_norms", "embedding_knn_bruteforce",
-    "embedding_knn_partial_topk", "dedup_embedding_cosine",
-    "embedding_lsh_buckets", "simsearch_lsh_bucket_join",
-    "simsearch_ivf_topk", "simsearch_ivf_recall",
-    "order_value_percentiles_approx", "approx_distinct_customers",
-    "stratified_sample_documents", "train_test_split_assignment",
-    "per_source_topk_sample", "decontaminate_ngram_overlap",
-    "doc_chunk_tokens", "pack_sequences_greedy", "source_mix_rebalance",
-    "multimodal_features", "multimodal_frame_sample",
-    "multimodal_metadata_stats", "order_priority_pivot_table",
-    "lineitem_price_stats", "user_kpis", "shop_kpis", "date_kpis",
-    "gold_enrichment_join", "customers_without_orders",
-    "acctbal_minmax_normalized", "item_id_assignment",
-    "item_id_assignment_ranged", "batch_assignment", "pool_assignment",
-    "union_all_orders", "top100_orders", "top3_orders_per_customer",
-}
-
-# Queries GREEN in round 3's driver window (CORRECTNESS_r03.json: 46 of
-# 50 rows). The 4 events/temporal queries in that window ERRORED — the
-# driver regenerated events.parquet with ts as TIMESTAMP_NTZ between
-# rounds — so they are deliberately ABSENT here AND demoted out of the
-# r1 set below: fixed in round 4 (spec.event_ts_us), they carry no green
-# evidence on the current data and must re-enter the window first.
-_R3_DRIVER_VERIFIED = {
-    "tpch_q1_pricing_summary", "tpch_q3_shipping_priority",
-    "tpch_q5_local_supplier_volume", "events_props_extract",
-    "salted_skew_join_brand_revenue", "order_gaps_lag_lead",
-    "customer_rank_battery", "rolling_weekly_revenue",
-    "customers_both_years", "customers_1996_only",
-    "tpch_q4_late_shipment_semi", "tpch_q6_forecast_revenue",
-    "tpch_q10_returned_revenue", "tpch_q12_priority_pivot",
-    "tpch_q14_promo_revenue", "tpch_q16_supplier_variety",
-    "tpch_q17_small_quantity_revenue", "tpch_q18_large_orders",
-    "tpch_q19_disjunctive_revenue", "tpch_q22_idle_wealthy_customers",
-    "running_revenue_per_customer", "tpch_q2_min_cost_supplier",
-    "tpch_q7_nation_volume", "tpch_q8_market_share",
-    "tpch_q9_product_profit", "tpch_q11_important_parts",
-    "tpch_q13_order_count_distribution", "tpch_q15_top_supplier",
-    "tpch_q20_excess_share_suppliers", "tpch_q21_sole_late_supplier",
-    "rollup_revenue_by_flag_status", "cube_orders_by_status_priority",
-    "order_value_percentiles", "user_kpis", "shop_kpis", "date_kpis",
-    "gold_enrichment_join", "customers_without_orders",
-    "acctbal_minmax_normalized", "item_id_assignment",
-    "item_id_assignment_ranged", "batch_assignment", "pool_assignment",
-    "union_all_orders", "top100_orders", "top3_orders_per_customer",
-}
-
-# Queries verified by round 4's driver window (CORRECTNESS_r04.json —
-# all 50 rows green: the 4 events/temporal fixes re-checked on the new
-# TIMESTAMP_NTZ data, all 13 round-3/4 additions, and the 33
-# least-recently-verified r2 queries). Freshest evidence → back of the
-# round-5 window.
-_R4_DRIVER_VERIFIED = {
-    "events_hourly_rollup", "events_user_sessions", "events_funnel",
-    "events_session_revenue", "salted_distinct_quantities",
-    "copurchase_pairs", "retention_cohorts", "cross_source_neardup_matrix",
-    "dedup_containment", "dedup_edit_distance_verify",
-    "lsh_candidate_efficiency", "minhash_estimate_error",
-    "embedding_dedup_components", "token_budget_curriculum",
-    "chunk_dedup_exact", "asof_last_click_before_purchase",
-    "range_join_clicks_before_purchase", "text_quality",
-    "lang_id_heuristic", "token_stats_by_source", "doc_fingerprint",
-    "tfidf_top_terms", "doc_repetition_stats", "boilerplate_shingle_ratio",
-    "dedup_exact", "dedup_ngram_jaccard", "dedup_minhash_lsh",
-    "dedup_simhash", "dedup_simhash64", "dedup_near_dup_survivors",
-    "dedup_components", "dedup_survivors_cc", "embedding_norms",
-    "embedding_knn_bruteforce", "embedding_knn_partial_topk",
-    "dedup_embedding_cosine", "embedding_lsh_buckets",
-    "simsearch_lsh_bucket_join", "simsearch_ivf_topk",
-    "simsearch_ivf_recall", "order_value_percentiles_approx",
-    "approx_distinct_customers", "stratified_sample_documents",
-    "train_test_split_assignment", "per_source_topk_sample",
-    "decontaminate_ngram_overlap", "doc_chunk_tokens",
-    "pack_sequences_greedy", "source_mix_rebalance", "multimodal_features",
-}
-
-# Queries ADDED in round 5 (no driver evidence yet). They deliberately
-# sort BETWEEN the stale r2/r3 groups and the fresh r4 group: the r5
-# window must re-certify the 50 queries whose evidence is now 2 rounds
-# old (keeping every row ≤2 rounds stale); the additions enter the
-# window next round, ahead of the then-stale r4 group.
-_R5_ADDED: set[str] = {
-    "quality_filter_battery",
-    "quality_filter_funnel",
-    "rfm_customer_segments",
-    "embedding_quantize_error",
-    "kmeans_lloyd_clusters",
-    "source_temperature_mix",
-    "session_path_topk",
-    "term_cooccurrence_pmi",
-    "doc_unigram_surprisal",
-    "lang_id_confusion",
-    "copurchase_pagerank",
-    "embedding_dim_stats",
-    "monthly_revenue_mom",
-    "cms_heavy_hitters",
-    "customer_segment_scd2",
-    "referential_integrity_report",
-    "source_kl_divergence",
-    "events_active_users",
-    "monthly_first_vs_repeat",
-    "multimodal_dedup_content_hash",
-    "bm25_rank_topk",
-    "neardup_threshold_sweep",
-    "dedup_cluster_size_histogram",
-    "order_value_outliers_zscore",
-    "decontaminate_exact_substring",
-    "events_transition_matrix",
-    "events_hourly_gapfill",
-    # round-5 session additions (same placement rationale)
-    "copurchase_triangles",
-    "semantic_dedup_semdedup",
-    "table_profile_orders",
-    "incremental_daily_revenue",
-    "daily_revenue_anomalies",
-    "events_dedup_within_window",
-    "part_name_er_pairs",
-    "order_value_histogram",
-    "tokenizer_vocab_coverage",
-    "copurchase_item_similarity",
-    "shipping_sla_percentiles",
-    "dataset_card_documents",
-    "customer_k_anonymity",
-    "sliding_wau_hll_union",
-    "copurchase_association_rules",
-    "customer_revenue_pareto",
-    "nation_revenue_hhi",
-}
-
-# Queries verified by round 5's driver window (CORRECTNESS_r05.json —
-# all 50 rows green: the 4 two-round-stale r2 rows plus the 46
-# r3-verified queries round 4 didn't reach). Freshest evidence → back
-# of the round-6 window, which is therefore the 44 round-5 additions
-# (zero driver evidence so far — they lead) + the 6 stalest
-# r4-verified rows.
-_R5_DRIVER_VERIFIED = {
-    "acctbal_minmax_normalized", "batch_assignment",
-    "cube_orders_by_status_priority", "customer_rank_battery",
-    "customers_1996_only", "customers_both_years",
-    "customers_without_orders", "date_kpis", "events_props_extract",
-    "gold_enrichment_join", "item_id_assignment",
-    "item_id_assignment_ranged", "lineitem_price_stats",
-    "multimodal_frame_sample", "multimodal_metadata_stats",
-    "order_gaps_lag_lead", "order_priority_pivot_table",
-    "order_value_percentiles", "pool_assignment",
-    "rolling_weekly_revenue", "rollup_revenue_by_flag_status",
-    "running_revenue_per_customer", "salted_skew_join_brand_revenue",
-    "shop_kpis", "top100_orders", "top3_orders_per_customer",
-    "tpch_q10_returned_revenue", "tpch_q11_important_parts",
-    "tpch_q12_priority_pivot", "tpch_q13_order_count_distribution",
-    "tpch_q14_promo_revenue", "tpch_q15_top_supplier",
-    "tpch_q16_supplier_variety", "tpch_q17_small_quantity_revenue",
-    "tpch_q18_large_orders", "tpch_q19_disjunctive_revenue",
-    "tpch_q1_pricing_summary", "tpch_q20_excess_share_suppliers",
-    "tpch_q21_sole_late_supplier", "tpch_q22_idle_wealthy_customers",
-    "tpch_q2_min_cost_supplier", "tpch_q3_shipping_priority",
-    "tpch_q4_late_shipment_semi", "tpch_q5_local_supplier_volume",
-    "tpch_q6_forecast_revenue", "tpch_q7_nation_volume",
-    "tpch_q8_market_share", "tpch_q9_product_profit",
-    "union_all_orders", "user_kpis",
-}
-
-# Queries ADDED in round 6 (history; none were added).
-_R6_ADDED: set[str] = set()
-
-# Queries verified by round 6's driver window (CORRECTNESS_r06.json —
-# all 50 rows green: the 44 round-5 additions plus the 6 stalest
-# r4-verified rows). Freshest evidence → back of the round-7 window.
-_R6_DRIVER_VERIFIED = {
-    "bm25_rank_topk", "cms_heavy_hitters", "copurchase_association_rules",
-    "copurchase_item_similarity", "copurchase_pagerank", "copurchase_pairs",
-    "copurchase_triangles", "customer_k_anonymity", "customer_revenue_pareto",
-    "customer_segment_scd2", "daily_revenue_anomalies",
-    "dataset_card_documents", "decontaminate_exact_substring",
-    "dedup_cluster_size_histogram", "doc_unigram_surprisal",
-    "embedding_dim_stats", "embedding_quantize_error", "events_active_users",
-    "events_dedup_within_window", "events_funnel", "events_hourly_gapfill",
-    "events_hourly_rollup", "events_session_revenue",
-    "events_transition_matrix", "events_user_sessions",
-    "incremental_daily_revenue", "kmeans_lloyd_clusters", "lang_id_confusion",
-    "monthly_first_vs_repeat", "monthly_revenue_mom",
-    "multimodal_dedup_content_hash", "nation_revenue_hhi",
-    "neardup_threshold_sweep", "order_value_histogram",
-    "order_value_outliers_zscore", "part_name_er_pairs",
-    "quality_filter_battery", "quality_filter_funnel",
-    "referential_integrity_report", "rfm_customer_segments",
-    "salted_distinct_quantities", "semantic_dedup_semdedup",
-    "session_path_topk", "shipping_sla_percentiles", "sliding_wau_hll_union",
-    "source_kl_divergence", "source_temperature_mix", "table_profile_orders",
-    "term_cooccurrence_pmi", "tokenizer_vocab_coverage",
-}
-
-# Queries ADDED in round 7 (history — all 6 verified green in round 7's
-# driver window, see _R7_DRIVER_VERIFIED).
-_R7_ADDED: set[str] = {
-    "term_doc_frequency_curve",
-    "doc_length_log2_histogram",
-    "customer_clv_cohort",
-    "ship_delay_ols_slope",
-    "events_dwell_percentiles",
-    "decontaminate_embedding_cosine",
-}
-
-# Queries verified by round 7's driver window (CORRECTNESS_r07.json —
-# all 50 rows green: the 6 round-7 additions plus the remaining 44
-# r4-verified rows). After round 7 every r4 row has been re-verified,
-# so r5/r6/r7 partition the whole pre-r8 registry (verified disjoint
-# and covering, 50+50+50 = 150).
-_R7_DRIVER_VERIFIED = {
-    "approx_distinct_customers", "asof_last_click_before_purchase",
-    "boilerplate_shingle_ratio", "chunk_dedup_exact",
-    "cross_source_neardup_matrix", "customer_clv_cohort",
-    "decontaminate_embedding_cosine", "decontaminate_ngram_overlap",
-    "dedup_components", "dedup_containment", "dedup_edit_distance_verify",
-    "dedup_embedding_cosine", "dedup_exact", "dedup_minhash_lsh",
-    "dedup_near_dup_survivors", "dedup_ngram_jaccard", "dedup_simhash",
-    "dedup_simhash64", "dedup_survivors_cc", "doc_chunk_tokens",
-    "doc_fingerprint", "doc_length_log2_histogram", "doc_repetition_stats",
-    "embedding_dedup_components", "embedding_knn_bruteforce",
-    "embedding_knn_partial_topk", "embedding_lsh_buckets", "embedding_norms",
-    "events_dwell_percentiles", "lang_id_heuristic",
-    "lsh_candidate_efficiency", "minhash_estimate_error",
-    "multimodal_features", "order_value_percentiles_approx",
-    "pack_sequences_greedy", "per_source_topk_sample",
-    "range_join_clicks_before_purchase", "retention_cohorts",
-    "ship_delay_ols_slope", "simsearch_ivf_recall", "simsearch_ivf_topk",
-    "simsearch_lsh_bucket_join", "source_mix_rebalance",
-    "stratified_sample_documents", "term_doc_frequency_curve",
-    "text_quality", "tfidf_top_terms", "token_budget_curriculum",
-    "token_stats_by_source", "train_test_split_assignment",
-}
+#: Repo root, where the driver writes one ``CORRECTNESS_r{N}.json`` per round.
+_EVIDENCE_DIR = Path(__file__).resolve().parents[2]
+_GREEN_FLAGS = ("rows_match", "schema_match", "hash_match")
 
 
-# Queries ADDED in round 8. All were verified by the round-8 driver
-# window EXCEPT bloom_pruned_part_revenue, which errored (numpy.int64
-# densify crash under the driver's Arrow-less session — fixed round 9,
-# operators/bloom.py). It therefore still has ZERO driver evidence and
-# leads the round-9 window via the never-checked partition.
-_R8_ADDED: set[str] = {
-    "bloom_pruned_part_revenue",
-    "table_profile_orders_hll",
-    "order_value_winsorized_stats",
-    "join_key_skew_profile",
-}
+def driver_verified_rounds(evidence_dir: Path = _EVIDENCE_DIR) -> dict[str, int]:
+    """Query name -> newest driver round with a green row for it.
 
-# Queries verified GREEN by round 8's driver window (CORRECTNESS_r08 —
-# 49 of 50 rows: 3 of the 4 round-8 additions, the six r7-rewritten
-# queries whose driver evidence the plan-aware rotation had flagged
-# stale, and 40 re-certified r5 rows). The one err row
-# (bloom_pruned_part_revenue) is deliberately ABSENT so it re-enters
-# the window at the front.
-_R8_DRIVER_VERIFIED = {
-    "acctbal_minmax_normalized", "batch_assignment", "customer_rank_battery",
-    "customer_revenue_pareto", "customer_segment_scd2", "customers_1996_only",
-    "customers_both_years", "customers_without_orders", "date_kpis",
-    "events_props_extract", "gold_enrichment_join", "item_id_assignment",
-    "item_id_assignment_ranged", "join_key_skew_profile",
-    "lineitem_price_stats", "multimodal_frame_sample",
-    "multimodal_metadata_stats", "order_gaps_lag_lead",
-    "order_priority_pivot_table", "order_value_winsorized_stats",
-    "pool_assignment", "referential_integrity_report", "rfm_customer_segments",
-    "rolling_weekly_revenue", "running_revenue_per_customer",
-    "salted_skew_join_brand_revenue", "shipping_sla_percentiles", "shop_kpis",
-    "table_profile_orders_hll", "tokenizer_vocab_coverage", "top100_orders",
-    "top3_orders_per_customer", "tpch_q10_returned_revenue",
-    "tpch_q12_priority_pivot", "tpch_q14_promo_revenue",
-    "tpch_q16_supplier_variety", "tpch_q17_small_quantity_revenue",
-    "tpch_q18_large_orders", "tpch_q19_disjunctive_revenue",
-    "tpch_q1_pricing_summary", "tpch_q22_idle_wealthy_customers",
-    "tpch_q2_min_cost_supplier", "tpch_q3_shipping_priority",
-    "tpch_q4_late_shipment_semi", "tpch_q5_local_supplier_volume",
-    "tpch_q6_forecast_revenue", "tpch_q7_nation_volume", "union_all_orders",
-    "user_kpis",
-}
+    Reads every ``CORRECTNESS_r{N}.json`` in ``evidence_dir``. A row is
+    green when its ``err`` is null and rows, schema and hash all match;
+    an errored or mismatched row credits nothing. With no CORRECTNESS
+    file present every query reads as never checked (round 0), so the
+    rotation falls back to registration order."""
+    last: dict[str, int] = {}
+    for path in evidence_dir.glob("CORRECTNESS_r*.json"):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", path.name)
+        if m is None:
+            continue
+        rnd = int(m.group(1))
+        for name, row in json.loads(path.read_text()).items():
+            if row.get("err") is None and all(row.get(k) for k in _GREEN_FLAGS):
+                last[name] = max(last.get(name, 0), rnd)
+    return last
 
 
-# Queries verified GREEN by round 9's driver window (CORRECTNESS_r09 —
-# all 50 rows green, zero err: bloom_pruned_part_revenue (the r8 err row,
-# fixed), the four oracle-gated r9 additions, and 45 stale r6 rows).
-# The four round-9 additions (customer_order_value_quartiles,
-# order_value_mad_outliers, customer_l_diversity, daily_revenue_ewma)
-# are members here; the former separate _R9_ADDED list was dead code
-# and was deleted per ADVICE r10 — staleness keys off the verified
-# sets only. (The r9 streamed-histogram pair lives in
-# streaming/jobs.py and is test-verified, not registry-gated.)
-_R9_DRIVER_VERIFIED = {
-    "bloom_pruned_part_revenue", "bm25_rank_topk", "cms_heavy_hitters",
-    "copurchase_item_similarity", "copurchase_pagerank", "copurchase_pairs",
-    "copurchase_triangles", "cube_orders_by_status_priority",
-    "customer_l_diversity", "customer_order_value_quartiles",
-    "daily_revenue_ewma", "decontaminate_exact_substring",
-    "dedup_cluster_size_histogram", "doc_unigram_surprisal",
-    "embedding_dim_stats", "embedding_quantize_error", "events_active_users",
-    "events_dedup_within_window", "events_funnel", "events_hourly_gapfill",
-    "events_hourly_rollup", "events_session_revenue",
-    "events_transition_matrix", "events_user_sessions", "kmeans_lloyd_clusters",
-    "lang_id_confusion", "monthly_first_vs_repeat", "monthly_revenue_mom",
-    "multimodal_dedup_content_hash", "neardup_threshold_sweep",
-    "order_value_mad_outliers", "order_value_outliers_zscore",
-    "order_value_percentiles", "quality_filter_battery",
-    "quality_filter_funnel", "rollup_revenue_by_flag_status",
-    "salted_distinct_quantities", "semantic_dedup_semdedup",
-    "session_path_topk", "sliding_wau_hll_union", "source_kl_divergence",
-    "source_temperature_mix", "term_cooccurrence_pmi",
-    "tpch_q11_important_parts", "tpch_q13_order_count_distribution",
-    "tpch_q15_top_supplier", "tpch_q20_excess_share_suppliers",
-    "tpch_q21_sole_late_supplier", "tpch_q8_market_share",
-    "tpch_q9_product_profit",
-}
-
-
-# Queries verified GREEN by round 10's driver window (CORRECTNESS_r10 —
-# all 50 rows green, zero err: the six oracle-gated r10 additions, the
-# nine remaining stale-r6 rows, and 35 stale r7 rows). After round 10
-# the oldest evidence anywhere is the 17-row r7 band (VERDICT r10
-# next-round #2), which therefore leads the round-11 window.
-_R10_DRIVER_VERIFIED = {
-    "approx_distinct_customers", "boilerplate_shingle_ratio",
-    "bpe_merges_topn", "bpe_token_counts", "copurchase_association_rules",
-    "cross_source_neardup_matrix", "customer_k_anonymity",
-    "customer_order_value_quartiles", "daily_revenue_anomalies",
-    "dataset_card_documents", "dedup_components", "dedup_containment",
-    "dedup_edit_distance_verify", "dedup_embedding_cosine", "dedup_exact",
-    "dedup_minhash_lsh", "dedup_near_dup_survivors", "dedup_ngram_jaccard",
-    "dedup_simhash", "dedup_simhash64", "dedup_survivors_cc",
-    "doc_bigram_surprisal", "doc_fingerprint", "doc_repetition_stats",
-    "embedding_dedup_components", "embedding_knn_bruteforce",
-    "embedding_knn_partial_topk", "embedding_lsh_buckets",
-    "embedding_norms", "incremental_daily_revenue",
-    "join_size_estimate_events_orders", "lang_id_heuristic",
-    "lsh_candidate_efficiency", "minhash_estimate_error",
-    "nation_revenue_hhi", "order_value_histogram",
-    "order_value_percentiles_approx", "order_value_quantile_bins",
-    "part_name_er_pairs", "part_price_size_skyline", "retention_cohorts",
-    "simsearch_ivf_recall", "simsearch_ivf_topk",
-    "simsearch_lsh_bucket_join", "stratified_sample_documents",
-    "table_profile_orders", "text_quality", "tfidf_top_terms",
-    "token_stats_by_source", "weighted_sample_aes",
-}
-
-
-# Queries verified GREEN by round 11's driver window (CORRECTNESS_r11 —
-# all 50 rows green, zero err: the seven oracle-gated r11 additions, the
-# four r11-touched PQ/BPE rows, the 17 remaining stale-r7 rows, and 22
-# stale r8 rows). After round 11 the oldest evidence anywhere is the
-# 27-row r8 band (VERDICT r11 next-round #1), which therefore leads the
-# round-12 window.
-_R11_DRIVER_VERIFIED = {
-    "acctbal_minmax_normalized", "asof_last_click_before_purchase",
-    "batch_assignment", "bpe_merges_topn", "bpe_token_counts",
-    "chunk_dedup_exact", "customer_clv_cohort", "customers_without_orders",
-    "date_kpis", "decontaminate_embedding_cosine",
-    "decontaminate_ngram_overlap", "doc_chunk_tokens",
-    "doc_length_log2_histogram", "doc_novelty_profile",
-    "embedding_covariance", "embedding_kcenter_coreset",
-    "embedding_pq_codebook", "events_dwell_percentiles",
-    "events_props_extract", "gold_enrichment_join", "item_id_assignment",
-    "item_id_assignment_ranged", "multimodal_features",
-    "multimodal_frame_sample", "multimodal_metadata_stats",
-    "order_priority_pivot_table", "pack_sequences_greedy",
-    "part_price_size_date_skyline", "per_source_topk_sample",
-    "pool_assignment", "range_join_clicks_before_purchase",
-    "salted_skew_join_brand_revenue", "ship_delay_ols_slope", "shop_kpis",
-    "simsearch_ivfpq_recall", "simsearch_ivfpq_topk", "source_mix_rebalance",
-    "term_doc_frequency_curve", "token_budget_curriculum",
-    "tokenizer_vocab_coverage", "top100_orders", "top3_orders_per_customer",
-    "tpch_q1_pricing_summary", "tpch_q3_shipping_priority",
-    "tpch_q5_local_supplier_volume", "train_test_split_assignment",
-    "train_test_split_leakage_safe", "union_all_orders", "user_kpis",
-    "weighted_sample_allocated",
-}
-
-
-# Queries verified GREEN by round 12's driver window (CORRECTNESS_r12 —
-# all 50 rows green, zero err: the eight oracle-gated r12 additions, the
-# three r12-touched PQ/IVF-PQ rows, all 27 stale-r8 rows, and 12 stale
-# r9 rows). After round 12 the oldest evidence anywhere is the 37-row
-# r9 band (VERDICT r12 next-round #1), which therefore leads the
-# round-13 window.
-_R12_DRIVER_VERIFIED = {
-    "bloom_pruned_part_revenue", "copurchase_pagerank", "copurchase_pairs",
-    "copurchase_rule_significance", "customer_rank_battery",
-    "customer_reorder_survival", "customer_revenue_pareto",
-    "customer_segment_scd2", "customers_1996_only", "customers_both_years",
-    "doc_pii_scan", "embedding_opq_rotation",
-    "embedding_pca_explained_variance", "embedding_pq_codebook",
-    "events_active_users", "events_funnel", "events_hourly_gapfill",
-    "events_hourly_rollup", "events_session_revenue",
-    "events_transition_matrix", "events_user_sessions",
-    "join_key_skew_profile", "lineitem_price_stats", "order_gaps_lag_lead",
-    "order_value_winsorized_stats", "referential_integrity_report",
-    "rfm_customer_segments", "rolling_weekly_revenue",
-    "running_revenue_per_customer", "salted_distinct_quantities",
-    "segment_reorder_survival", "session_path_topk",
-    "shipping_sla_percentiles", "simsearch_ivfpq_recall",
-    "simsearch_ivfpq_rerank", "simsearch_ivfpq_topk", "source_length_psi",
-    "table_profile_orders_hll", "tpch_q10_returned_revenue",
-    "tpch_q12_priority_pivot", "tpch_q14_promo_revenue",
-    "tpch_q16_supplier_variety", "tpch_q17_small_quantity_revenue",
-    "tpch_q18_large_orders", "tpch_q19_disjunctive_revenue",
-    "tpch_q22_idle_wealthy_customers", "tpch_q2_min_cost_supplier",
-    "tpch_q4_late_shipment_semi", "tpch_q6_forecast_revenue",
-    "tpch_q7_nation_volume",
-}
-
-
-# Queries verified GREEN by round 13's driver window (CORRECTNESS_r13 —
-# all 50 rows green, zero err: the eleven oracle-gated r13 additions,
-# the r13-touched dedup_simhash64, all 37 stale-r9 rows, and 1 stale r10
-# filler). After round 13 the oldest evidence anywhere is the 45-row r10
-# band (VERDICT r13 next-round #1), which therefore leads the round-14
-# window.
-_R13_DRIVER_VERIFIED = {
-    "bm25_rank_topk", "cms_heavy_hitters", "contrastive_pair_mining",
-    "copurchase_item_similarity", "copurchase_triangles",
-    "cube_orders_by_status_priority", "customer_l_diversity",
-    "daily_revenue_ewma", "decontaminate_exact_substring",
-    "dedup_cluster_size_histogram", "dedup_repeated_ngram_spans",
-    "dedup_simhash64", "doc_unigram_perplexity", "doc_unigram_surprisal",
-    "embedding_corr_drift", "embedding_dim_stats", "embedding_drift_psi",
-    "embedding_quantize_error", "events_dedup_within_window",
-    "hybrid_search_rrf", "kmeans_lloyd_clusters", "lang_id_confusion",
-    "llm_judge_bradley_terry", "monthly_first_vs_repeat",
-    "monthly_revenue_mom", "multimodal_dedup_content_hash",
-    "multimodal_dedup_phash", "neardup_threshold_sweep",
-    "order_value_mad_outliers", "order_value_outliers_zscore",
-    "order_value_percentiles", "quality_filter_battery",
-    "quality_filter_funnel", "retention_cohorts",
-    "rollup_revenue_by_flag_status", "semantic_dedup_semdedup",
-    "sentiment_annotator_kappa", "sliding_wau_hll_union",
-    "source_kl_divergence", "source_temperature_mix",
-    "term_cooccurrence_pmi", "text_quality", "tpch_q11_important_parts",
-    "tpch_q13_order_count_distribution", "tpch_q15_top_supplier",
-    "tpch_q20_excess_share_suppliers", "tpch_q21_sole_late_supplier",
-    "tpch_q8_market_share", "tpch_q9_product_profit",
-    "unigram_lm_em_round",
-}
-
-
-# Queries verified GREEN by round 14's driver window (CORRECTNESS_r14 —
-# all 50 rows green, zero err: the one oracle-gated r14 addition
-# (retrieval_ndcg_mrr), the four r14-touched rows (embedding_corr_drift,
-# llm_judge_bradley_terry, dedup_simhash64, multimodal_dedup_phash), and
-# all 45 stale-r10 rows). After round 14 the oldest evidence anywhere is
-# the 47-row r11 band (VERDICT r14 next-round #1) — the core relational
-# family among them — which therefore leads the round-15 window.
-_R14_DRIVER_VERIFIED = {
-    "approx_distinct_customers", "boilerplate_shingle_ratio",
-    "copurchase_association_rules", "cross_source_neardup_matrix",
-    "customer_k_anonymity", "customer_order_value_quartiles",
-    "daily_revenue_anomalies", "dataset_card_documents",
-    "dedup_components", "dedup_containment", "dedup_edit_distance_verify",
-    "dedup_embedding_cosine", "dedup_exact", "dedup_minhash_lsh",
-    "dedup_near_dup_survivors", "dedup_ngram_jaccard", "dedup_simhash",
-    "dedup_simhash64", "dedup_survivors_cc", "doc_bigram_surprisal",
-    "doc_fingerprint", "doc_repetition_stats", "embedding_corr_drift",
-    "embedding_dedup_components", "embedding_knn_bruteforce",
-    "embedding_knn_partial_topk", "embedding_lsh_buckets",
-    "embedding_norms", "incremental_daily_revenue",
-    "join_size_estimate_events_orders", "lang_id_heuristic",
-    "llm_judge_bradley_terry", "lsh_candidate_efficiency",
-    "minhash_estimate_error", "multimodal_dedup_phash",
-    "nation_revenue_hhi", "order_value_histogram",
-    "order_value_percentiles_approx", "order_value_quantile_bins",
-    "part_name_er_pairs", "part_price_size_skyline", "retrieval_ndcg_mrr",
-    "simsearch_ivf_recall", "simsearch_ivf_topk",
-    "simsearch_lsh_bucket_join", "stratified_sample_documents",
-    "table_profile_orders", "tfidf_top_terms", "token_stats_by_source",
-    "weighted_sample_aes",
-}
+_VERIFIED = driver_verified_rounds()
 
 
 def _last_verified_round(name: str) -> int:
     """Most recent driver round whose CORRECTNESS file holds a green row
     for this query name, or 0 if never driver-checked."""
-    if name in _R14_DRIVER_VERIFIED:
-        return 14
-    if name in _R13_DRIVER_VERIFIED:
-        return 13
-    if name in _R12_DRIVER_VERIFIED:
-        return 12
-    if name in _R11_DRIVER_VERIFIED:
-        return 11
-    if name in _R10_DRIVER_VERIFIED:
-        return 10
-    if name in _R9_DRIVER_VERIFIED:
-        return 9
-    if name in _R8_DRIVER_VERIFIED:
-        return 8
-    if name in _R7_DRIVER_VERIFIED:
-        return 7
-    if name in _R6_DRIVER_VERIFIED:
-        return 6
-    if name in _R5_DRIVER_VERIFIED:
-        return 5
-    if name in _R4_DRIVER_VERIFIED:
-        return 4
-    return 0
+    return _VERIFIED.get(name, 0)
 
 
 # Order matters: the external driver verifies the FIRST 50 entries against
@@ -599,16 +100,6 @@ def _last_verified_round(name: str) -> int:
 #   1. never driver-checked (new additions)           -> key 0
 #   2. plan touched since last driver verification    -> key 1
 #   3. by last-verified round ascending (oldest first) -> key 2 + round
-#
-# The round-15 window is therefore: the round-15 additions (never
-# checked — the two r14-queued registrations llm_judge_calibration and
-# retrieval_rank_overlap_rbo plus dedup_against_corpus_index), any query
-# whose plan or oracle round 15 touched, then the 47 remaining
-# r11-verified rows (the oldest evidence left in the registry — VERDICT
-# r14 next-round #1 — including the whole core relational/KPI family),
-# filling to 50. After round 15 no row's driver evidence should predate
-# round 12, which requires the round-15 new+touched budget to stay at
-# ≤ 3.
 #
 # touched_round EXEMPTION RULE (VERDICT r12 finding #2): a wrapper or
 # shared-helper sweep that is PROVEN plan-identical — the query's

@@ -1583,12 +1583,14 @@ RELATIONAL_SPECS = [
         copurchase_pagerank,
         COPURCHASE_PAGERANK_SQL,
         ("graph-pagerank-iterative",),
+        touched_round=16,  # r16: AUDIT row changed
     ),
     QuerySpec(
         "events_active_users",
         events_active_users,
         EVENTS_ACTIVE_USERS_SQL,
         ("dau-wau-mau",),
+        touched_round=16,  # r16: AUDIT row changed
     ),
     QuerySpec(
         "events_hourly_gapfill",

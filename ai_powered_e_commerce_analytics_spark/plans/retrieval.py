@@ -908,6 +908,7 @@ RETRIEVAL_SPECS = [
         retrieval_ndcg_mrr,
         RETRIEVAL_NDCG_MRR_SQL,
         ("retrieval-quality-eval",),
+        touched_round=16,  # r16: AUDIT row changed
     ),
     QuerySpec(
         "retrieval_rank_overlap_rbo",
@@ -917,5 +918,6 @@ RETRIEVAL_SPECS = [
         # Implemented + cross-engine-tested r14
         # (tests/test_retrieval.py); registered r15 per VERDICT r14
         # next-round #2 after being queued for window-budget reasons.
+        touched_round=16,  # r16: AUDIT row changed
     ),
 ]

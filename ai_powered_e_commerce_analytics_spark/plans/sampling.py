@@ -643,7 +643,7 @@ SAMPLING_SPECS = [
         weighted_sample_allocated,
         WEIGHTED_SAMPLE_ALLOCATED_SQL,
         ("sample-neyman-allocation",),
-        touched_round=11,  # r11 addition: largest-remainder Neyman budget
+        touched_round=16,  # r16: AUDIT row changed; r11 addition: largest-remainder Neyman budget
     ),
     QuerySpec(
         "train_test_split_leakage_safe",

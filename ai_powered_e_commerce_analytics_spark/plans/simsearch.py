@@ -1768,9 +1768,10 @@ def embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # past the exchange, onto the (opaque) partial subtree — so the
     # four exchange subtrees differ and ReusedExchange never fires:
     # the executed plan re-ran the corpus scan + fan-out four times at
-    # ANY scale (verified in plans/r15/embedding_covariance_before.txt,
-    # 4× Scan parquet). The eager checkpoint is one extra tiny job and
-    # makes the corpus pass execute exactly once (r15 optimization).
+    # ANY scale (4× Scan parquet; see OPTIMIZATION_r15.md, and
+    # OPTIMIZATION_r16.md for the executing-scan census). The eager
+    # checkpoint is one extra tiny job and makes the corpus pass
+    # execute exactly once (r15 optimization).
     sums = pin(
         covariance_partials_batched(e)
         .groupBy("i", "j")

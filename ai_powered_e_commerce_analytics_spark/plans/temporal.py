@@ -313,5 +313,6 @@ TEMPORAL_SPECS = [
               EVENTS_DEDUP_WITHIN_WINDOW_SQL, ("event-debounce-dedup",)),
     QuerySpec("events_dwell_percentiles",
               events_dwell_percentiles,
-              EVENTS_DWELL_PERCENTILES_SQL, ("dwell-gap-percentiles",)),
+              EVENTS_DWELL_PERCENTILES_SQL, ("dwell-gap-percentiles",),
+              touched_round=16),  # r16: AUDIT row changed
 ]

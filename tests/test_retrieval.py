@@ -34,12 +34,12 @@ def test_bm25_one_tokenization_pass(spark, sf_dir):
     # Intrinsic after the fix: the cached tokenization build + the
     # K-row source-recovery join's narrow scan.
     from ai_powered_e_commerce_analytics_spark.plans.probes import (
-        executing_scan_census,
+        executing_plan_census,
     )
 
     df = bm25_rank_topk(spark, sf_dir)
     df.collect()
-    census = executing_scan_census(df)
+    census = executing_plan_census(df)
     assert census["executing_scans"] == 2, census
     assert census["cached_relations"] == 1, census
 
@@ -230,15 +230,15 @@ def test_ndcg_executes_three_scans(spark, sf_dir):
     The r14 predecessor of this test text-counted FileScan lines in
     the final section of ``executedPlan().toString()`` and asserted
     ReusedExchange fired — and was FOOLED: nested AdaptiveSparkPlan
-    sections truncate that split, and the identity-dedup census
-    (probes.executing_scan_census) showed the barrier form actually
+    sections truncate that split, and the executing-node census
+    (probes.executing_plan_census) showed the barrier form actually
     executed 16 corpus scans (8 documents + 8 embeddings) with ZERO
     runtime reuse. The leg frames are now cached (optimization r16);
     the true executing count is 3: the cached tokenization build (1
     documents scan) + the cached cosine build (1 embeddings corpus
     scan + the 1-row query-vector probe's pushed-filter scan)."""
     from ai_powered_e_commerce_analytics_spark.plans.probes import (
-        executing_scan_census,
+        executing_plan_census,
     )
     from ai_powered_e_commerce_analytics_spark.plans.retrieval import (
         retrieval_ndcg_mrr,
@@ -246,7 +246,7 @@ def test_ndcg_executes_three_scans(spark, sf_dir):
 
     df = retrieval_ndcg_mrr(spark, sf_dir)
     df.collect()
-    census = executing_scan_census(df)
+    census = executing_plan_census(df)
     assert census["executing_scans"] == 3, census
     assert census["scan_sources"].get("documents.parquet") == 1, census
     assert census["scan_sources"].get("embeddings.parquet") == 2, census

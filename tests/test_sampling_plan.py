@@ -368,21 +368,21 @@ def test_weighted_allocated_allocation_arithmetic_exact(spark, sf_dir):
 
 def test_weighted_allocated_corpus_side_stays_contracted(spark, sf_dir):
     """The global budget must not smuggle a per-source corpus window
-    back in: the only Window in the executed plan is the O(|sources|)
+    back in: the only Window that executes is the O(|sources|)
     largest-remainder rank; the corpus side stays the Arrow-batched
     two-pass contraction."""
+    from ai_powered_e_commerce_analytics_spark.plans.probes import (
+        executing_plan_census,
+    )
     from ai_powered_e_commerce_analytics_spark.plans.sampling import (
         weighted_sample_allocated,
     )
 
-    import re
-
-    plan = _formatted_plan(weighted_sample_allocated(spark, sf_dir))
-    # Count tree-form nodes ("Window (id)") so windows inside the cached
-    # allocation's printed build plan are seen too (optimization r16:
-    # the O(|sources|) allocation is cached, which nests its subtree
-    # under an InMemoryRelation where the old line-anchored "(id)
-    # Window" detail regex missed it). WindowGroupLimit does not match.
-    window_nodes = re.findall(r"\bWindow \(\d+\)", plan)
-    assert len(window_nodes) == 1, plan
-    assert "MapInPandas" in plan, plan
+    df = weighted_sample_allocated(spark, sf_dir)
+    df.collect()
+    # Walk the executed plan's nodes: the allocation is cached, and the
+    # printed plan shows its adaptive build twice (final and initial
+    # plan), so a text count sees the one window twice.
+    census = executing_plan_census(df)
+    assert census["nodes"].get("WindowExec") == 1, census
+    assert census["nodes"].get("MapInPandasExec", 0) >= 1, census

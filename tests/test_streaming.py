@@ -24,9 +24,33 @@ from tests.test_sinks_pipeline import _bronze_rows
 
 
 def _await(query, timeout=120):
-    query.awaitTermination(timeout)
-    if query.isActive:
-        query.stop()
+    """Wait for an ``availableNow`` query to drain its input, then stop it.
+
+    A stream whose state uses a processing-time timeout
+    (``sessionize_stream``, ``debounce_stream``) never terminates under
+    ``availableNow``: Spark keeps planning no-data batches to fire the
+    timeouts. Such a query is drained once a batch with no new offsets
+    on any source completes after a batch that read rows (a restarted
+    query first re-runs its interrupted no-data batch, so that one alone
+    does not count). The deadline stays as the fallback. A query that
+    failed re-raises its error here, as ``awaitTermination`` does."""
+    deadline = time.monotonic() + timeout
+    while not query.awaitTermination(0.5):
+        if _drained(query.recentProgress) or time.monotonic() > deadline:
+            query.stop()
+            break
+
+
+def _drained(progress) -> bool:
+    read_rows = False
+    for p in progress:
+        if p["numInputRows"] > 0:
+            read_rows = True
+        elif read_rows and all(
+            s["startOffset"] == s["endOffset"] for s in p["sources"]
+        ):
+            return True
+    return False
 
 
 def test_bronze_to_silver_stream(spark, tmp_path):
