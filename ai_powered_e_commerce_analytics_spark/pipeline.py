@@ -77,7 +77,7 @@ def _archive_files(spark: SparkSession, files: list[str], archive_dir: str) -> l
     """S9 batch form: move consumed files; failures stay queued for the
     next run (at-least-once, reference data_loader.py:38-51)."""
     # FS resolved from each PATH (the files carry full URIs from
-    # input_file_name); cross-FS moves (file:// inputs, hdfs:// archive)
+    # inputFiles); cross-FS moves (file:// inputs, hdfs:// archive)
     # fall back to copy+delete inside move_file — a plain rename throws
     # 'Wrong FS' and archival would silently never happen.
     from .hadoop import hadoop_fs, hadoop_path, move_file
@@ -94,6 +94,16 @@ def _archive_files(spark: SparkSession, files: list[str], archive_dir: str) -> l
     return moved
 
 
+def _archive_inputs(spark: SparkSession, df: DataFrame, archive_dir: str | None) -> None:
+    """Archive every file ``df`` scans. ``inputFiles()`` reads the scan's
+    cached file index — no Spark job — and, unlike ``input_file_name()``,
+    it lists files that yield no rows, so an empty input is consumed too
+    instead of being re-listed on every run."""
+    if archive_dir:
+        if files := df.inputFiles():
+            _archive_files(spark, files, archive_dir)
+
+
 def run_etl_pipeline(
     spark: SparkSession,
     silver_to_process_dir: str,
@@ -108,6 +118,7 @@ def run_etl_pipeline(
     cfg = config or EngineConfig()
     silver = read_json_dir(spark, silver_to_process_dir, SILVER_REVIEWS)
     if silver.isEmpty():  # P5 (main.py:41-43)
+        _archive_inputs(spark, silver, archive_dir)  # files of zero rows
         return {"rows": 0}
     missing = validate_columns(silver, ["item_id", "review", "price"])
     if missing:  # P6 (tools.py:97-115)
@@ -129,14 +140,7 @@ def run_etl_pipeline(
         write_gold_snapshot(gold, gold_dir)
     finally:
         gold.unpersist()
-    if archive_dir:
-        files = [
-            r.file
-            for r in silver.select(
-                F.input_file_name().alias("file")
-            ).distinct().collect()
-        ]
-        _archive_files(spark, files, archive_dir)
+    _archive_inputs(spark, silver, archive_dir)
     return {"rows": n}
 
 
@@ -153,6 +157,7 @@ def run_review_pipeline(
     cfg = config or EngineConfig()
     bronze = read_json_dir(spark, bronze_new_dir, BRONZE_PRODUCTS)
     if bronze.isEmpty():
+        _archive_inputs(spark, bronze, archive_dir)  # files of zero rows
         return {"rows": 0}
     items = assign_item_ids(bronze, order_by=["date", "product_name", "price"])
     if cfg.demo_limit:  # L2 (cmd/main.go:49-52)
@@ -175,14 +180,7 @@ def run_review_pipeline(
         )
     finally:
         silver.unpersist()
-    if archive_dir:
-        files = [
-            r.file
-            for r in bronze.select(
-                F.input_file_name().alias("file")
-            ).distinct().collect()
-        ]
-        _archive_files(spark, files, archive_dir)
+    _archive_inputs(spark, bronze, archive_dir)
     return {"rows": n}
 
 

@@ -18,8 +18,12 @@ and PostgREST keyed upserts. Spark-first equivalents:
 - S10 bronze append -> plain JSON append with timestamped subdirs.
 
 Scale notes: the upsert rewrite is partitioned by key-hash bucket so a
-100 TB table only rewrites buckets that received updates; Delta/Iceberg
-MERGE is the production path and noted inline.
+100 TB table only rewrites the buckets that received updates. The bucket
+count follows the data: a table starts at one bucket and its modulus
+doubles whenever a commit stages more than ``maxPartitionBytes`` per
+bucket, so a ~2k-row KPI table stays one file and a 100 TB table settles
+near 128 MB per bucket. Delta/Iceberg MERGE is the production path and
+noted inline.
 """
 
 from __future__ import annotations
@@ -103,6 +107,25 @@ def write_bronze_batch(df: DataFrame, bronze_new_dir: str) -> str:
 _MANIFEST_RE = re.compile(r"_MANIFEST-v(\d{8})\.json$")
 
 
+def _manifest_entries(manifest: dict) -> tuple[int, list[tuple[int, int, str]]]:
+    """(table modulus ``M``, entries) of a committed manifest. Entry
+    ``(m, r, path)`` holds every row whose ``pmod(xxhash64(key), m)`` is
+    ``r``; entries are disjoint and every ``m`` divides ``M``. A legacy
+    manifest (top-level ``num_buckets``, residue-keyed ``buckets``) reads
+    as entries at that one modulus."""
+    if "entries" in manifest:
+        return int(manifest["modulus"]), [
+            (int(e["m"]), int(e["r"]), e["path"]) for e in manifest["entries"]
+        ]
+    nb = int(manifest["num_buckets"])
+    return nb, [(nb, int(r), rel) for r, rel in manifest["buckets"].items()]
+
+
+def _live_tx(manifest: dict) -> set[str]:
+    """Names of the ``data/tx_*`` dirs a manifest references."""
+    return {rel.split("/")[1] for _, _, rel in _manifest_entries(manifest)[1]}
+
+
 def _latest_manifest(spark: SparkSession, fs, table_path: str):
     """(version, manifest_dict) of the highest committed manifest, or
     (0, None) for a table that has never committed."""
@@ -177,7 +200,7 @@ def _gc_upsert_table(
 
     from .hadoop import fs_read_text, hadoop_path
 
-    live_tx = {rel.split("/")[1] for rel in manifest["buckets"].values()}
+    live_tx = _live_tx(manifest)
     prev_version = 0
     prev_path = None
     for status in fs.globStatus(
@@ -188,10 +211,7 @@ def _gc_upsert_table(
             prev_version = int(m.group(1))
             prev_path = status.getPath().toString()
     if prev_path is not None:
-        prev_manifest = json.loads(fs_read_text(spark, prev_path))
-        live_tx |= {
-            rel.split("/")[1] for rel in prev_manifest["buckets"].values()
-        }
+        live_tx |= _live_tx(json.loads(fs_read_text(spark, prev_path)))
     # Manifests 2+ generations old are dropped, and the tx dirs ONLY they
     # referenced go with them immediately — those are known-superseded
     # data, not unknown staging. Refs are collected before deletion.
@@ -202,12 +222,9 @@ def _gc_upsert_table(
         m = _MANIFEST_RE.search(status.getPath().getName())
         if m and int(m.group(1)) < prev_version:
             try:
-                old = json.loads(
-                    fs_read_text(spark, status.getPath().toString())
+                dead_tx |= _live_tx(
+                    json.loads(fs_read_text(spark, status.getPath().toString()))
                 )
-                dead_tx |= {
-                    rel.split("/")[1] for rel in old["buckets"].values()
-                }
             except Exception:  # noqa: BLE001 - unreadable old manifest
                 pass
             fs.delete(status.getPath(), False)
@@ -245,6 +262,22 @@ def _last_writer_wins(new: DataFrame, old: DataFrame, key: str) -> DataFrame:
     )
 
 
+def _staged_bucket_bytes(spark: SparkSession, fs, tx_dir: str) -> dict[int, int]:
+    """``{bucket: bytes}`` of a staged tx dir, from one recursive listing.
+    A bucket with no rows left has no dir and so no key."""
+    from .hadoop import hadoop_path
+
+    sizes: dict[int, int] = {}
+    files = fs.listFiles(hadoop_path(spark, tx_dir), True)
+    while files.hasNext():
+        status = files.next()
+        parent = status.getPath().getParent().getName()
+        if parent.startswith("__bucket="):
+            b = int(parent[len("__bucket="):])
+            sizes[b] = sizes.get(b, 0) + status.getLen()
+    return sizes
+
+
 def _occ_commit_loop(
     spark: SparkSession,
     changes: DataFrame,
@@ -260,18 +293,28 @@ def _occ_commit_loop(
 ) -> None:
     """THE merge-stage-commit protocol (one implementation for
     :func:`upsert_parquet` and :func:`apply_cdc_parquet`): hash-bucket
-    the change set, read only the touched buckets of the committed
-    table, delegate the semantic merge to ``merge_with_old(bucketed,
-    old_or_None)``, stage the result as an immutable tx dir, and commit
-    by versioned-manifest CAS with re-merge retry on a lost race. A
-    touched bucket whose output dir is absent (every row deleted) is
-    dropped from the manifest instead of dangling. ``snapshot``
+    the change set at the table's modulus ``M``, read only the manifest
+    entries its buckets route to, delegate the semantic merge to
+    ``merge_with_old(bucketed, old_or_None)``, stage the result as an
+    immutable tx dir, and commit by versioned-manifest CAS with re-merge
+    retry on a lost race. The read entries are replaced by the bucket
+    dirs the staged tx dir holds, so a bucket whose every row was
+    deleted drops out of the manifest instead of dangling. ``snapshot``
     localCheckpoints the bucketed change set so all its uses see one
-    deterministic frame."""
+    deterministic frame.
+
+    A new table starts at ``num_buckets``. When the staged bytes per
+    bucket dir exceed ``spark.sql.files.maxPartitionBytes`` the committed
+    ``M`` doubles (repeatedly if needed); entries keep their own modulus,
+    which divides every later ``M``, so untouched data stays where it is
+    and a touched entry splits when its keys next change."""
     from .hadoop import hadoop_fs, hadoop_path
 
     fs = hadoop_fs(spark, table_path)
     snap_rdd_ids: set[int] = set()
+    max_bucket_bytes = (
+        spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    )
 
     def _drop_snapshot_blocks() -> None:
         # Unpersist the PREVIOUS attempt's localCheckpoint blocks before
@@ -286,9 +329,12 @@ def _occ_commit_loop(
 
     for _attempt in range(max_attempts):
         version, manifest = _latest_manifest(spark, fs, table_path)
-        nb = int(manifest["num_buckets"]) if manifest is not None else num_buckets
+        if manifest is None:
+            modulus, entries = num_buckets, []
+        else:
+            modulus, entries = _manifest_entries(manifest)
 
-        bucket = F.pmod(F.xxhash64(F.col(key)), F.lit(nb)).cast("int")
+        bucket = F.pmod(F.xxhash64(F.col(key)), F.lit(modulus)).cast("int")
         bucketed = changes.withColumn("__bucket", bucket)
         if snapshot:
             pre = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
@@ -296,28 +342,27 @@ def _occ_commit_loop(
             snap_rdd_ids = (
                 set(spark.sparkContext._jsc.getPersistentRDDs().keys()) - pre
             )
-        touched = [r[0] for r in bucketed.select("__bucket").distinct().collect()]
 
-        old = None
-        if manifest is not None:
-            old_paths = [
-                f"{table_path}/{manifest['buckets'][str(b)]}"
-                for b in touched
-                if str(b) in manifest["buckets"]
-            ]
-            if old_paths:
-                # Bucket dirs are read directly (no partition discovery);
-                # recompute __bucket from the key — same deterministic
-                # hash. mergeSchema + allowMissingColumns = schema
-                # EVOLUTION (see upsert_parquet docstring).
-                old = (
-                    spark.read.option("mergeSchema", "true")
-                    .parquet(*old_paths)
-                    .withColumn(
-                        "__bucket",
-                        F.pmod(F.xxhash64(F.col(key)), F.lit(nb)).cast("int"),
-                    )
-                )
+        old, read = None, set()
+        if entries:  # a first commit has no old data to route to
+            touched = {
+                r[0] for r in bucketed.select("__bucket").distinct().collect()
+            }
+            # Each touched bucket h lies in at most one entry: the one
+            # with h % m == r (entries are disjoint; m divides M).
+            moduli = {m for m, _, _ in entries}
+            hit = {(m, h % m) for h in touched for m in moduli}
+            read = {e for e in entries if e[:2] in hit}
+        if read:
+            # Entry dirs are read directly (no partition discovery);
+            # recompute __bucket at M from the key — same deterministic
+            # hash. mergeSchema + allowMissingColumns = schema EVOLUTION
+            # (see upsert_parquet docstring).
+            old = (
+                spark.read.option("mergeSchema", "true")
+                .parquet(*[f"{table_path}/{rel}" for _, _, rel in read])
+                .withColumn("__bucket", bucket)
+            )
         merged = merge_with_old(bucketed, old)
         txid = uuid.uuid4().hex[:12]
         tx_dir = f"{table_path}/data/tx_{txid}"
@@ -328,16 +373,23 @@ def _occ_commit_loop(
             .parquet(tx_dir)
         )
 
-        buckets = dict(manifest["buckets"]) if manifest is not None else {}
-        for b in touched:
-            rel = f"data/tx_{txid}/__bucket={b}"
-            # A bucket whose every row was deleted writes NO output dir;
-            # its manifest entry must disappear, not dangle.
-            if fs.exists(hadoop_path(spark, f"{table_path}/{rel}")):
-                buckets[str(b)] = rel
-            else:
-                buckets.pop(str(b), None)
-        new_manifest = {"num_buckets": nb, "buckets": buckets}
+        staged = _staged_bucket_bytes(spark, fs, tx_dir)
+        new_entries = [e for e in entries if e not in read] + [
+            (modulus, b, f"data/tx_{txid}/__bucket={b}") for b in staged
+        ]
+        new_modulus = modulus
+        if staged:
+            per_dir = sum(staged.values()) / len(staged)
+            while per_dir > max_bucket_bytes:
+                per_dir /= 2
+                new_modulus *= 2
+        new_manifest = {
+            "modulus": new_modulus,
+            "entries": [
+                {"m": m, "r": r, "path": rel}
+                for m, r, rel in sorted(new_entries)
+            ],
+        }
         if _before_commit is not None:
             _before_commit()
         if _commit_manifest(spark, fs, table_path, version + 1, new_manifest):
@@ -360,7 +412,7 @@ def upsert_parquet(
     table_path: str,
     key: str,
     *,
-    num_buckets: int = 64,
+    num_buckets: int = 1,
     max_attempts: int = 5,
     _before_commit=None,
 ) -> None:
@@ -371,11 +423,16 @@ def upsert_parquet(
     Layout + commit protocol (manifest-based, ACID for readers)::
 
         table/
-          _MANIFEST-v00000003.json   # current: {"buckets": {b: "data/tx_x/__bucket=b"}}
+          _MANIFEST-v00000003.json   # current: {"modulus": 4, "entries": [
+                                     #   {"m": 2, "r": 0, "path": "data/tx_x/__bucket=0"},
+                                     #   {"m": 4, "r": 1, "path": "data/tx_y/__bucket=1"},
+                                     #   {"m": 4, "r": 3, "path": "data/tx_y/__bucket=3"}]}
           data/tx_x/__bucket=0/...   # immutable once written
-          data/tx_y/__bucket=7/...
+          data/tx_y/__bucket=1/...
 
-    Each upsert merges only the buckets its keys hash into, writes them
+    An entry ``(m, r)`` holds the keys with ``pmod(xxhash64(key), m) ==
+    r``. Each upsert hashes its keys at the table's modulus ``M``, reads
+    only the entries those buckets fall in, and writes the merge at ``M``
     to a NEW immutable ``data/tx_{id}`` dir, then commits by atomically
     renaming the next-version manifest into place (see
     :func:`_commit_manifest`). Readers resolve the file set exclusively
@@ -402,8 +459,18 @@ def upsert_parquet(
     (immutable data files + atomic metadata pointer + OCC commit). With
     delta-spark on the classpath the body becomes
     ``DeltaTable.merge(...)`` and gains file-level skipping; the bucket
-    layout below already bounds the rewrite to (touched buckets /
-    num_buckets) of the table.
+    layout already bounds the rewrite to the entries the touched
+    buckets fall in.
+
+    ``num_buckets`` is the modulus a NEW table starts at; an existing
+    table keeps its own. The modulus doubles after any commit that
+    staged more than ``spark.sql.files.maxPartitionBytes`` per bucket
+    dir. Entries written before a doubling keep their coarser modulus
+    (it divides the new one) and are split only when a later upsert
+    touches them, so growth never rewrites untouched data. Manifests of
+    the older fixed layout (``num_buckets`` plus residue-keyed
+    ``buckets``) read, time-travel and upsert as entries at that
+    modulus.
     """
     def merge(bucketed: DataFrame, old: DataFrame | None) -> DataFrame:
         # Last-writer-wins: updates rank before existing rows per key.
@@ -453,7 +520,7 @@ def apply_cdc_parquet(
     *,
     op_col: str = "op",
     seq_col: str | None = None,
-    num_buckets: int = 64,
+    num_buckets: int = 1,
     max_attempts: int = 5,
     _before_commit=None,
 ) -> None:
@@ -473,7 +540,7 @@ def apply_cdc_parquet(
     picking one would corrupt the table.
 
     Same layout, OCC commit loop, GC, and bounded bucket-rewrite cost
-    as :func:`upsert_parquet`: only the buckets the batch's keys hash
+    as :func:`upsert_parquet`: only the entries the batch's keys hash
     into are rewritten; deletes drop the key from its rewritten bucket
     (a delete for an absent key is a no-op). Readers see the change
     batch atomically via the manifest rename.
@@ -624,7 +691,7 @@ def read_upsert_table(
                 "one-generation retention window)"
             )
         manifest = json.loads(fs_read_text(spark, vpath))
-    paths = [f"{table_path}/{rel}" for rel in manifest["buckets"].values()]
+    paths = [f"{table_path}/{rel}" for _, _, rel in _manifest_entries(manifest)[1]]
     if not paths:
         raise FileNotFoundError(
             f"{table_path} is committed but EMPTY (every row deleted by "

@@ -788,7 +788,7 @@ def hourly_anomaly_stream(
     def process(batch: DataFrame, batch_id: int) -> None:
         if batch.isEmpty():
             return
-        upsert_parquet(spark, batch, state_table, "hour", num_buckets=8)
+        upsert_parquet(spark, batch, state_table, "hour")
         series = read_upsert_table(spark, state_table)
         # ONE scoring rule for stream and batch: the shared helper from
         # the batch daily_revenue_anomalies (cannot drift).

@@ -423,17 +423,19 @@ def main() -> None:
     # single detail line above is ~5 KB and the driver's tail capture
     # truncated it mid-dict in BOTH r14 and r15, leaving PERF with
     # n_common=0 and no per-query round-over-round comparison. Each
-    # chunk line is self-identifying and ~350 bytes, so whatever tail
-    # window the driver keeps yields parseable per-query entries
-    # (latest chunks survive even a very short tail). Additions only —
-    # the compact final-line contract below is unchanged.
+    # chunk line is self-identifying and holds 20 queries at 3
+    # significant figures, so the 120-query map is 6 lines: few enough
+    # that a tail window keeping the last handful of lines holds all of
+    # them. Additions only — the compact final-line contract below is
+    # unchanged.
     names_sorted = sorted(timings)
-    n_chunks = max(1, (len(names_sorted) + 9) // 10)
+    per_line = 20
+    n_chunks = max(1, -(-len(names_sorted) // per_line))
     for ci in range(n_chunks):
-        chunk = names_sorted[ci * 10 : (ci + 1) * 10]
+        chunk = names_sorted[ci * per_line : (ci + 1) * per_line]
         print(json.dumps({
             "bench_queries_part": f"{ci + 1}/{n_chunks}",
-            "queries": {n: timings[n] for n in chunk},
+            "queries": {n: float(f"{timings[n]:.3g}") for n in chunk},
         }))
     # The compact summary MUST be the final line: the driver parses the
     # tail of stdout and long lines get truncated (lost BENCH_r05).

@@ -76,26 +76,168 @@ def test_upsert_idempotent_replay(spark, tmp_path):
 
 def test_upsert_bounded_file_count(spark, tmp_path):
     # N upserts must NOT accumulate files or tx dirs without bound: every
-    # touched bucket is fully rewritten into the new tx dir (repartition
+    # touched entry is fully rewritten into the new tx dir (repartition
     # by bucket => one task => one file) and post-commit GC drops tx dirs
-    # the manifest no longer references and superseded manifests.
+    # the manifest no longer references and superseded manifests. A
+    # small table stays at the one bucket a new table starts with.
     path = str(tmp_path / "kpi3")
     for batch in range(6):
         df = spark.createDataFrame(
             [(i, float(batch)) for i in range(20)], "id long, v double"
         )
-        upsert_parquet(spark, df, path, "id", num_buckets=4)
+        upsert_parquet(spark, df, path, "id")
     for bucket_dir in glob.glob(f"{path}/data/tx_*/__bucket=*"):
         n_files = len(glob.glob(f"{bucket_dir}/*.parquet"))
         assert n_files == 1, f"{bucket_dir} has {n_files} files"
-    # every batch touches every bucket; GC keeps the current generation
+    # every batch touches the one bucket; GC keeps the current generation
     # plus ONE previous (retention grace for concurrent readers), so the
     # final two tx dirs / manifests survive and older ones are dropped.
     assert len(glob.glob(f"{path}/data/tx_*")) == 2
     assert len(glob.glob(f"{path}/_MANIFEST-v*.json")) == 2
     assert not glob.glob(f"{path}/_tmp_manifest_*"), "tmp manifest debris"
+    modulus, entries = _current_entries(path)
+    assert modulus == 1 and list(entries) == [(1, 0)]
+    assert len(glob.glob(f"{path}/{entries[(1, 0)]}/*.parquet")) == 1
     got = {r.id: r.v for r in read_upsert_table(spark, path).collect()}
     assert got == {i: 5.0 for i in range(20)}
+
+
+def _current_entries(path):
+    """(modulus, {(m, r): path}) of the table's newest manifest."""
+    with open(sorted(glob.glob(f"{path}/_MANIFEST-v*.json"))[-1]) as fh:
+        manifest = json.load(fh)
+    return manifest["modulus"], {
+        (e["m"], e["r"]): e["path"] for e in manifest["entries"]
+    }
+
+
+def _assert_disjoint(modulus, entries):
+    # (m1, r1) and (m2, r2) with m1 | m2 overlap iff r2 % m1 == r1.
+    assert all(modulus % m == 0 for m, _ in entries)
+    for i, (m1, r1) in enumerate(sorted(entries)):
+        for m2, r2 in sorted(entries)[i + 1:]:
+            assert r2 % m1 != r1, f"({m1}, {r1}) overlaps ({m2}, {r2})"
+
+
+def _bucket_of(spark, key, modulus):
+    return spark.range(1).select(
+        F.pmod(F.xxhash64(F.lit(key).cast("long")), F.lit(modulus))
+    ).first()[0]
+
+
+def test_upsert_splits_buckets_as_the_table_grows(spark, tmp_path):
+    # With maxPartitionBytes at 2 KB a 200-row bucket file (~1.7 KB)
+    # soon overflows, so repeated upserts must double the modulus. The
+    # table reads back as the dict model after every commit, entries
+    # stay disjoint, and a one-key upsert rewrites only the entry its
+    # key falls in while every other entry keeps its tx dir.
+    path = str(tmp_path / "grow")
+    schema = "id long, v double"
+    model: dict[int, float] = {}
+    moduli = []
+    prev = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "2048")
+    try:
+        for batch in range(5):
+            rows = [(i, float(batch)) for i in range(batch * 100, batch * 100 + 200)]
+            upsert_parquet(spark, spark.createDataFrame(rows, schema), path, "id")
+            model.update(rows)
+            got = {r.id: r.v for r in read_upsert_table(spark, path).collect()}
+            assert got == model
+            modulus, entries = _current_entries(path)
+            _assert_disjoint(modulus, entries)
+            moduli.append(modulus)
+        assert moduli == sorted(moduli) and moduli[-1] >= 4, moduli
+        # the last doubling is not yet applied: entries are coarser than M
+        modulus, before = _current_entries(path)
+        assert len(before) > 1 and max(m for m, _ in before) < modulus
+
+        upsert_parquet(spark, spark.createDataFrame([(7, -1.0)], schema), path, "id")
+        model[7] = -1.0
+        got = {r.id: r.v for r in read_upsert_table(spark, path).collect()}
+        assert got == model
+        h = _bucket_of(spark, 7, modulus)
+        (covering,) = [(m, r) for m, r in before if h % m == r]
+        _, after = _current_entries(path)
+        _assert_disjoint(modulus, after)
+        kept = {c: p for c, p in after.items() if c in before}
+        assert kept == {c: p for c, p in before.items() if c != covering}
+        split = [c for c in after if c not in before]
+        assert split and all(m == modulus and r % covering[0] == covering[1]
+                             for m, r in split)
+        assert len({after[c].split("/")[1] for c in split}) == 1
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
+
+
+def test_upsert_reads_and_extends_legacy_manifest(spark, tmp_path):
+    # A table committed by the fixed-modulus layout (top-level
+    # num_buckets, residue-keyed buckets) must still read, time-travel
+    # and upsert; the upsert rewrites only the touched bucket.
+    path = str(tmp_path / "legacy")
+    schema = "id long, v double"
+    v1 = {i: 1.0 for i in range(40)}
+    v2 = v1 | {i: 2.0 for i in range(0, 40, 3)}
+    for tx, model in (("tx_legacy1", v1), ("tx_legacy2", v2)):
+        (
+            spark.createDataFrame(sorted(model.items()), schema)
+            .withColumn("__bucket", F.pmod(F.xxhash64("id"), F.lit(4)).cast("int"))
+            .write.partitionBy("__bucket")
+            .parquet(f"{path}/data/{tx}")
+        )
+    for version, tx in ((1, "tx_legacy1"), (2, "tx_legacy2")):
+        with open(f"{path}/_MANIFEST-v{version:08d}.json", "w") as fh:
+            json.dump({
+                "num_buckets": 4,
+                "buckets": {str(b): f"data/{tx}/__bucket={b}" for b in range(4)},
+            }, fh)
+
+    def read(version=None):
+        df = read_upsert_table(spark, path, version=version)
+        return {r.id: r.v for r in df.collect()}
+
+    assert read() == v2
+    assert read(version=1) == v1
+    upsert_parquet(spark, spark.createDataFrame([(5, 9.0), (99, 9.0)], schema), path, "id")
+    assert read() == v2 | {5: 9.0, 99: 9.0}
+    assert read(version=2) == v2
+    modulus, entries = _current_entries(path)
+    touched = {_bucket_of(spark, k, 4) for k in (5, 99)}
+    assert modulus == 4
+    assert {r for (_, r), p in entries.items() if "tx_legacy2" in p} == (
+        set(range(4)) - touched
+    )
+
+
+def test_pipelines_archive_zero_row_inputs(spark, tmp_path):
+    # A file that yields no rows is consumed like any other: it is
+    # archived, not left to be re-listed on every later run.
+    bronze = tmp_path / "bronze_new"
+    (bronze / "sub").mkdir(parents=True)
+    rows = _bronze_rows(4)
+    for name, chunk in (("a.json", rows[:2]), ("sub/b.json", rows[2:])):
+        (bronze / name).write_text("".join(json.dumps(r) + "\n" for r in chunk))
+    (bronze / "sub" / "empty.json").write_text("")
+    archive = tmp_path / "bronze_old"
+    res = run_review_pipeline(
+        spark, str(bronze), str(tmp_path / "silver"), str(archive)
+    )
+    assert res == {"rows": 4}
+    assert not glob.glob(f"{bronze}/**/*.json", recursive=True)
+    assert sorted(os.listdir(archive)) == ["a.json", "b.json", "empty.json"]
+
+    # a directory of only zero-row files trips the empty guard and is
+    # still archived
+    silver = tmp_path / "silver_new"
+    silver.mkdir()
+    (silver / "empty.json").write_text("")
+    res = run_etl_pipeline(
+        spark, str(silver), str(tmp_path / "g"), str(tmp_path / "k"),
+        str(tmp_path / "silver_old"),
+    )
+    assert res == {"rows": 0}
+    assert not glob.glob(f"{silver}/*.json")
+    assert os.listdir(tmp_path / "silver_old") == ["empty.json"]
 
 
 def test_upsert_clears_uncommitted_debris(spark, tmp_path):
