@@ -435,13 +435,14 @@ def _corpus_index(spark, args) -> dict:
         load_corpus_index,
         sweep_corpus_index,
     )
+    from .sources import load_table
 
     if args.action == "init":
         docs = None
         if args.seed_dir:
-            docs = spark.read.parquet(
-                f"{args.seed_dir}/documents.parquet"
-            ).select("doc_id", "text")
+            docs = load_table(spark, args.seed_dir, "documents").select(
+                "doc_id", "text"
+            )
         return init_corpus_index(
             spark, args.index, docs,
             n_key_buckets=args.buckets or N_KEY_BUCKETS,

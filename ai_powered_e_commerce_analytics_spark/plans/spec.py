@@ -29,6 +29,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..sources.readers import load_table as t  # noqa: F401 - the plans' table read
+
 
 @dataclass(frozen=True)
 class QuerySpec:
@@ -56,16 +58,6 @@ def cents(col) -> "Column":  # noqa: F821
 
 def cents_sql(expr: str) -> str:
     return f"round({expr} * 100)::BIGINT"
-
-
-def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    if name == "events":
-        # The driver may hand us a session without our defaults; earlier
-        # generations of the events table were TIMESTAMP(NANOS) parquet,
-        # unreadable unless nanos surface as long. Harmless for the
-        # current TIMESTAMP(MICROS, ntz) encoding.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 _US_PER_DAY = 86_400_000_000

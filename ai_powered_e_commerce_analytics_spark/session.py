@@ -17,6 +17,10 @@ from pyspark.sql import SparkSession
 #: (reference config.yaml:22, models_schema.py:19-21, extractor.go:13).
 LLM_BATCH_SIZE = 25
 
+#: Generated classes the session keeps compiled
+#: (``spark.sql.codegen.cache.maxEntries``); see the note in get_spark.
+CODEGEN_CACHE_ENTRIES = 4096
+
 
 def get_spark(
     app_name: str = "ai-powered-e-commerce-analytics-spark",
@@ -89,6 +93,25 @@ def get_spark(
         # it must be set HERE, not per-pin; sessions built elsewhere must
         # set it themselves or GC the checkpoint dir out of band.
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
+        # -- Generated-class cache (static conf, read when the JVM first
+        # generates code). Spark keeps 100 compiled classes by default,
+        # and re-running a query whose classes were evicted pays Janino
+        # compilation and a fresh JIT of the reloaded classes again. One
+        # full sf0.1 bench.py iteration generates 1,942 distinct classes
+        # (counted with an unbounded cache, warm-up query included), so
+        # at 100 every iteration recompiled: ~2,630 compiles per
+        # iteration, against ~40 at this value (classes whose code
+        # differs run to run). 4096 is about twice that working set: the
+        # cache evicts per segment (4 of 1024), so the margin also
+        # absorbs uneven hashing. Cost at the end of a 3-iteration
+        # bench.py run (4 cores), against the default: +14.6 MB
+        # metaspace, +1.8 MB compressed class space, +19.3 MB code heap.
+        # Rejected: -XX:TieredStopAtLevel=1 (C1 only). It halved the
+        # perfbench CPU (queries-light 44.3 -> 21.3 s, medallion-stream
+        # 64.6 -> 32.6 s), whose passes are short, but took a 16-query
+        # sf0.1 bench.py subset from 61.1 to 100.3 s (+64%): long scans
+        # and aggregations need C2's code.
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.parquet.int96RebaseModeInRead", "CORRECTED")
         # -- Keep driver logs quiet in tests/bench.

@@ -359,12 +359,23 @@ def main() -> None:
         # iteration re-pins fresh artifacts.
         release_arranged_cache()
 
-    # Warm the JVM + parquet footers once so per-query numbers measure the
-    # plans, not first-touch JIT/IO noise.
+    # Generated-class compilations (Janino), counted per iteration into
+    # BENCH_DETAIL.json: a query that recompiles on a re-run shows here.
+    jvm = spark.sparkContext._jvm
+    compile_hist = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    # Warm up the JVM, the session and the first parquet read once. This
+    # does not warm the suite: the first iteration still compiles every
+    # query's generated classes and infers each table's schema. Later
+    # iterations reuse both (session.py sizes the class cache to the
+    # suite; sources.readers memoizes schemas), so the per-query MIN is
+    # a warm number, and codegen_compiles shows whether it was.
+    compiled = compile_hist.getCount()
     try:
         run("tpch_q1_pricing_summary")
     except Exception:
         pass  # a broken warmup query must not kill the whole bench
+    codegen_compiles = {"warmup": compile_hist.getCount() - compiled, "iterations": []}
 
     # One failing query records an error entry and the suite continues —
     # the round-3 bench was lost entirely to a single AnalysisException
@@ -372,6 +383,7 @@ def main() -> None:
     samples: dict[str, list[float]] = {name: [] for name in HEADLINE}
     errors: dict[str, str] = {}
     for _ in range(ITERS):
+        compiled = compile_hist.getCount()
         for name in HEADLINE:
             if name in errors:
                 continue
@@ -382,6 +394,7 @@ def main() -> None:
                 errors[name] = f"{type(exc).__name__}: {exc}"[:500]
                 continue
             samples[name].append(time.perf_counter() - start)
+        codegen_compiles["iterations"].append(compile_hist.getCount() - compiled)
 
     # A query that succeeded in an early iteration but errored later
     # appears in both samples and errors; keep the two mutually
@@ -408,7 +421,12 @@ def main() -> None:
         "n_queries": len(HEADLINE),
         "probe_s": probe,
     }
-    detail = dict(summary, queries=timings, queries_median=medians)
+    detail = dict(
+        summary,
+        queries=timings,
+        queries_median=medians,
+        codegen_compiles=codegen_compiles,
+    )
     try:  # per-query detail for the judge; never let IO kill the run
         detail_path = os.path.join(
             os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
