@@ -16,11 +16,20 @@ Spark-first shape: ONE ``mapInPandas`` operator carries the whole family.
   ``num_partitions x concurrency`` — size partitions to server capacity
   (the reference pins 4 to llama.cpp ``--parallel 4``).
 - **Validation + fallback** (F5-F6): strict per-batch cardinality check;
-  a failed batch emits null-sentiment rows carrying the batch's ACTUAL
-  item_ids (the reference fabricates ids ``i*25+c*25+j`` which can
-  mismatch — survey §7 deviation 6).
+  a failed batch emits null-field rows for the batch's ACTUAL rows (the
+  reference fabricates ids ``i*25+c*25+j`` which can mismatch — survey §7
+  deviation 6).
+- **In place** (J1/J3): the operator appends its generated columns to the
+  rows it reads. Only the prompt fields go to the client; every other
+  column passes through the Python worker untouched. The reference sends a
+  projection to the model and joins the answers back on ``item_id`` (a
+  hash-map merge in loader.go:30-62, a left join in
+  data_transformer.py:150). At scale that join-back is a shuffle of both
+  sides, or a broadcast of a fact-sized frame that cannot hold, and it
+  re-scans the input; and because ``item_id`` restarts at 1 on every
+  review run, a join over two runs' silver multiplies rows.
 - **Retry** (F7): in-task attempt loop, then an optional driver-level
-  anti-join pass re-enriches residual ids (P8/J4).
+  pass that re-enriches the null-filled rows (P8).
 
 Correctness runs use the deterministic stub client (FIXTURES.md §7); the
 real async client is config-swapped behind the same interface.
@@ -38,7 +47,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from ..functions.core import pin
 from ..schemas import REVIEWS, SENTIMENTS
 from ..session import LLM_BATCH_SIZE
 
@@ -331,7 +339,15 @@ class OllamaClient(OpenAICompatClient):
 
 def _validate_batch(result: list[dict], batch: list[dict], fields: list[str]) -> list[dict]:
     """F5: strict cardinality + id-set validation (the pydantic
-    ``minItems=25,maxItems=25`` contract, models_schema.py:16-22)."""
+    ``minItems=25,maxItems=25`` contract, models_schema.py:16-22).
+
+    Results are matched to the batch's rows by ``item_id``. A batch that
+    holds one id twice (a frame over several review runs, whose 1-based
+    ids restart) still validates, and both rows take the one result kept
+    for that id: the mapping is ambiguous there. It is rare, because a
+    batch never spans two input partitions and each silver file is its
+    own partition.
+    """
     want = [r["item_id"] for r in batch]
     got = {r["item_id"]: r for r in result}
     if len(result) != len(batch) or set(got) != set(want):
@@ -344,8 +360,8 @@ def _validate_batch(result: list[dict], batch: list[dict], fields: list[str]) ->
 def _enrich_map(
     client_factory: Callable[[], object],
     method: str,
-    out_fields: list[str],
-    null_fields: list[str],
+    prompt_cols: list[str],
+    fields: list[str],
     batch_size: int,
     max_attempts: int,
     retry_wait_s: float,
@@ -354,6 +370,9 @@ def _enrich_map(
     """Build the mapInPandas function. Must be a top-level closure over
     plain picklable values — the client is constructed INSIDE the task
     (connection objects don't survive pickling to executors).
+
+    Each 25-row slice sends its ``prompt_cols`` to the client and comes
+    back as the same rows with ``fields`` appended.
 
     F4: if the client exposes ``call_many`` (the async OpenAI-compatible
     client does), batches are dispatched in semaphore-bounded waves of
@@ -368,36 +387,30 @@ def _enrich_map(
         call = getattr(client, method)
         call_many = getattr(client, "call_many", None)
 
-        def finish(batch, batch_index, first_result, wave_attempted):
+        def finish(rows, batch, batch_index, first_result, wave_attempted):
             result, attempts_left = None, max_attempts
             if wave_attempted:  # the wave dispatch WAS attempt #1, even
                 attempts_left -= 1  # if it failed — total attempts per
                 # batch must match the no-fan-out contract exactly.
             if first_result is not None:
                 try:
-                    result = _validate_batch(first_result, batch, out_fields)
+                    result = _validate_batch(first_result, batch, fields)
                 except Exception:
                     result = None
             if result is None:
                 for attempt in range(attempts_left):  # F7: in-task retry
                     try:
                         result = _validate_batch(
-                            call(batch, batch_index), batch, out_fields
+                            call(batch, batch_index), batch, fields
                         )
                         break
                     except Exception:
                         if attempt + 1 < attempts_left and retry_wait_s:
                             time.sleep(retry_wait_s)
             if result is None:
-                # F6: null-fill fallback with the batch's ACTUAL ids.
-                result = [
-                    {"item_id": r["item_id"], **{f: None for f in null_fields}}
-                    for r in batch
-                ]
-            else:
-                for r, src in zip(result, batch):
-                    r["item_id"] = src["item_id"]
-            return pd.DataFrame(result, columns=["item_id"] + null_fields)
+                # F6: null-fill fallback on the batch's actual rows.
+                result = [dict.fromkeys(fields) for _ in batch]
+            return rows.assign(**{f: [r[f] for r in result] for f in fields})
 
         def flush(wave):
             wave_attempted = call_many is not None
@@ -406,8 +419,8 @@ def _enrich_map(
                     firsts = list(
                         call_many(
                             method,
-                            [b for b, _ in wave],
-                            [i for _, i in wave],
+                            [b for _, b, _ in wave],
+                            [i for _, _, i in wave],
                             concurrency,
                         )
                     )
@@ -420,16 +433,20 @@ def _enrich_map(
                     firsts += [None] * (len(wave) - len(firsts))
             else:
                 firsts = [None] * len(wave)
-            for (batch, idx), first in zip(wave, firsts):
-                yield finish(batch, idx, first, wave_attempted)
+            for (rows, batch, idx), first in zip(wave, firsts):
+                yield finish(rows, batch, idx, first, wave_attempted)
 
         batch_index = 0
-        wave: list[tuple[list[dict], int]] = []
+        wave: list[tuple[pd.DataFrame, list[dict], int]] = []
         for pdf in batches:
+            prompt = pdf[prompt_cols]
             for start in range(0, len(pdf), batch_size):  # F1: local re-chunk
-                wave.append(
-                    (pdf.iloc[start : start + batch_size].to_dict("records"), batch_index)
-                )
+                stop = start + batch_size
+                wave.append((
+                    pdf.iloc[start:stop],
+                    prompt.iloc[start:stop].to_dict("records"),
+                    batch_index,
+                ))
                 batch_index += 1
                 if len(wave) >= max(concurrency, 1):
                     yield from flush(wave)
@@ -438,6 +455,28 @@ def _enrich_map(
             yield from flush(wave)
 
     return fn
+
+
+def _enrich(
+    items: DataFrame,
+    client_factory: Callable[[], object],
+    method: str,
+    prompt_cols: list[str],
+    fields: list[T.StructField],
+    batch_size: int,
+    max_attempts: int,
+    retry_wait_s: float,
+    concurrency: int,
+) -> DataFrame:
+    """``items`` with the client's answer appended as ``fields``; a
+    same-named input column is replaced."""
+    names = [f.name for f in fields]
+    rows = items.drop(*names)
+    fn = _enrich_map(
+        client_factory, method, prompt_cols, names,
+        batch_size, max_attempts, retry_wait_s, concurrency,
+    )
+    return rows.mapInPandas(fn, T.StructType(rows.schema.fields + fields))
 
 
 def enrich_sentiments(
@@ -449,23 +488,22 @@ def enrich_sentiments(
     retry_wait_s: float = 0.0,      # 3.0 in prod; 0 for tests
     concurrency: int = 4,           # reference data_transformer.py:91
 ) -> DataFrame:
-    """items(item_id, review) → sentiments(item_id, sentiment bool?).
+    """items(item_id, review, ...) → the same rows + ``sentiment`` bool?
+    (gold = silver + sentiment, the reference's left join
+    data_transformer.py:150 without the join).
 
-    Project BEFORE the UDF barrier: Python UDF barriers block Catalyst
-    column pruning through them (survey §4.1), so the explicit
-    ``select`` keeps the Arrow exchange at 2 columns.
+    Only ``item_id`` and ``review`` are converted into the prompt; the
+    other columns ride through the Arrow exchange unchanged. Projecting
+    before the UDF barrier (survey §4.1) would shrink that exchange, but
+    the projection then has to be joined back to the rows it came from:
+    at scale a shuffle of both sides, or a broadcast of a frame as large
+    as the fact table, which cannot hold.
     """
-    fn = _enrich_map(
-        client_factory,
-        "classify_sentiments",
-        ["sentiment"],
-        ["sentiment"],
-        batch_size,
-        max_attempts,
-        retry_wait_s,
+    return _enrich(
+        items, client_factory, "classify_sentiments", ["item_id", "review"],
+        [SENTIMENTS["sentiment"]], batch_size, max_attempts, retry_wait_s,
         concurrency,
     )
-    return items.select("item_id", "review").mapInPandas(fn, SENTIMENTS)
 
 
 def enrich_reviews(
@@ -477,45 +515,35 @@ def enrich_reviews(
     retry_wait_s: float = 0.0,
     concurrency: int = 4,           # reference enricher.go:19
 ) -> DataFrame:
-    """items(item_id, description, category?) → reviews(item_id,
-    classification, review) — the Go review-generation pipeline's LLM stage
-    (enricher.go:140-163)."""
+    """items(item_id, description, category?, ...) → the same rows +
+    ``classification``, ``review`` — the Go review-generation pipeline's
+    LLM stage and its merge (enricher.go:140-163, loader.go:30-62)."""
     cols = [c for c in ("item_id", "description", "category") if c in items.columns]
-    fn = _enrich_map(
-        client_factory,
-        "generate_reviews",
-        ["classification", "review"],
-        ["classification", "review"],
-        batch_size,
-        max_attempts,
-        retry_wait_s,
-        concurrency,
+    return _enrich(
+        items, client_factory, "generate_reviews", cols,
+        [REVIEWS["classification"], REVIEWS["review"]],
+        batch_size, max_attempts, retry_wait_s, concurrency,
     )
-    return items.select(*cols).mapInPandas(fn, REVIEWS)
 
 
 def retry_residuals(
-    items: DataFrame,
     enriched: DataFrame,
     enrich_fn: Callable[[DataFrame], DataFrame],
 ) -> DataFrame:
-    """P8/J4: driver-level retry pass — anti-join finds items whose ids
-    didn't come back (ollama_client.py:87-95), re-enriches them once, and
-    unions. Left-anti is a broadcast-able join when residuals are rare.
+    """P8: driver-level retry pass (ollama_client.py:87-95). Rows whose
+    last generated column came back null (F6 null-fill) are enriched once
+    more and unioned with the rows that succeeded.
 
-    ``ok`` is eagerly localCheckpointed: it is referenced by BOTH the
-    union branch and the anti-join branch, and without pinning it the
-    LLM map re-executes per branch — 2x the cost, and with a
-    nondeterministic real client the two evaluations can disagree
-    (an id succeeding in one and failing in the other is emitted twice
-    or dropped). Checkpointing materializes one result both branches
-    share.
+    Both branches read ``enriched``, so pass a cached frame: unpinned, the
+    LLM map would run once per branch, and with a nondeterministic client
+    the two runs could disagree on which rows failed (a row emitted twice
+    or dropped). The pipelines call this only when the job that counted
+    the rows also found null ones.
     """
-    ok = enriched.where(
-        F.col(enriched.columns[-1]).isNotNull()
-    ).transform(pin)
-    residual = items.join(ok.select("item_id"), "item_id", "left_anti")
-    return ok.unionByName(enrich_fn(residual))
+    field = F.col(enriched.columns[-1])
+    return enriched.where(field.isNotNull()).unionByName(
+        enrich_fn(enriched.where(field.isNull()))
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -1,4 +1,4 @@
-"""KPI aggregations (SURVEY.md §2.4 A1-A5, §2.5 C1-C5, §2.3 J1-J2).
+"""KPI aggregations (SURVEY.md §2.4 A1-A5, §2.5 C1-C5, §2.3 J2).
 
 The reference computes each KPI table with TWO group-by passes over the
 same grouping (mean, then boolean-sums) joined back together
@@ -76,14 +76,6 @@ def date_kpis(gold: DataFrame, *, avg_col: str = "price") -> DataFrame:
     return gold.groupBy("date").agg(
         F.avg(avg_col).alias("average_profit_per_day")
     )
-
-
-def gold_join(silver: DataFrame, sentiments: DataFrame) -> DataFrame:
-    """J1: gold = silver LEFT JOIN sentiments ON item_id
-    (data_transformer.py:150). The sentiment side is one row per item with
-    2 narrow columns — broadcast it so the 100TB fact side never shuffles.
-    """
-    return silver.join(F.broadcast(sentiments), "item_id", "left")
 
 
 def all_kpis(gold: DataFrame) -> dict[str, DataFrame]:

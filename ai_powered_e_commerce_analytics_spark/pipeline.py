@@ -36,7 +36,7 @@ from .operators.enrich import (
     make_user_pool,
     retry_residuals,
 )
-from .operators.kpis import all_kpis, gold_join
+from .operators.kpis import all_kpis
 from .schemas import BRONZE_PRODUCTS, SILVER_REVIEWS, validate_columns
 from .sinks import upsert_kpi_tables, write_gold_snapshot, write_silver_chunks
 from .sources import read_json_dir
@@ -117,9 +117,6 @@ def run_etl_pipeline(
     """Sentiment + KPI pipeline (survey §3.1), one batch run."""
     cfg = config or EngineConfig()
     silver = read_json_dir(spark, silver_to_process_dir, SILVER_REVIEWS)
-    if silver.isEmpty():  # P5 (main.py:41-43)
-        _archive_inputs(spark, silver, archive_dir)  # files of zero rows
-        return {"rows": 0}
     missing = validate_columns(silver, ["item_id", "review", "price"])
     if missing:  # P6 (tools.py:97-115)
         raise ValueError(f"silver input missing columns: {missing}")
@@ -132,15 +129,25 @@ def run_etl_pipeline(
         retry_wait_s=cfg.retry_wait_s,
         concurrency=cfg.llm_concurrency,
     )
-    sentiments = retry_residuals(silver, enrich(silver), enrich)
-    gold = gold_join(silver, sentiments).cache()
+    # One scan of the input into one cached frame: the job that fills it
+    # gives the row count (the P5 empty guard, main.py:41-43) and the
+    # null-filled rows, and the KPI upserts and the gold write read it.
+    pinned = [enrich(silver).cache()]
     try:
-        n = gold.count()
-        upsert_kpi_tables(spark, all_kpis(gold), kpi_dir)
-        write_gold_snapshot(gold, gold_dir)
+        gold = pinned[0]
+        n, nulls = gold.agg(
+            F.count("*"), F.count_if(F.col("sentiment").isNull())
+        ).first()
+        if n:
+            if nulls:  # P8: re-enrich the null-filled rows once
+                gold = retry_residuals(gold, enrich).cache()
+                pinned.append(gold)
+            upsert_kpi_tables(spark, all_kpis(gold), kpi_dir)
+            write_gold_snapshot(gold, gold_dir)
     finally:
-        gold.unpersist()
-    _archive_inputs(spark, silver, archive_dir)
+        for df in pinned:
+            df.unpersist()
+    _archive_inputs(spark, silver, archive_dir)  # zero-row files too
     return {"rows": n}
 
 
@@ -156,31 +163,29 @@ def run_review_pipeline(
     """Review-generation pipeline (survey §3.2), one batch run."""
     cfg = config or EngineConfig()
     bronze = read_json_dir(spark, bronze_new_dir, BRONZE_PRODUCTS)
-    if bronze.isEmpty():
-        _archive_inputs(spark, bronze, archive_dir)  # files of zero rows
-        return {"rows": 0}
     items = assign_item_ids(bronze, order_by=["date", "product_name", "price"])
     if cfg.demo_limit:  # L2 (cmd/main.go:49-52)
         items = items.where(F.col("item_id") <= cfg.demo_limit)
-    reviews = enrich_reviews(
+    # Silver is the items with their reviews appended in place (J3,
+    # loader.go:30-62). Cached around the two actions (count + write):
+    # without it the LLM map re-executes per action. The count is also
+    # the empty guard.
+    silver = enrich_reviews(
         items,
         client_factory,
         batch_size=cfg.batch_size,
         max_attempts=cfg.max_attempts,
         retry_wait_s=cfg.retry_wait_s,
         concurrency=cfg.llm_concurrency,
-    )
-    # Cache around the two actions (count + write): without it the LLM
-    # map re-executes per action — 2x the most expensive stage.
-    silver = items.join(reviews, "item_id").cache()  # J3 (loader.go:30-62)
+    ).cache()
     try:
-        n = silver.count()
-        write_silver_chunks(
-            silver, silver_dir, max_records_per_file=cfg.silver_chunk_rows
-        )
+        if n := silver.count():
+            write_silver_chunks(
+                silver, silver_dir, max_records_per_file=cfg.silver_chunk_rows
+            )
     finally:
         silver.unpersist()
-    _archive_inputs(spark, bronze, archive_dir)
+    _archive_inputs(spark, bronze, archive_dir)  # zero-row files too
     return {"rows": n}
 
 

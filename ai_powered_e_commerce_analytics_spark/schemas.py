@@ -53,7 +53,8 @@ SENTIMENTS = T.StructType(
     ]
 )
 
-#: gold = silver LEFT JOIN sentiments ON item_id (data_transformer.py:150).
+#: gold = silver + sentiment, appended in place by ``enrich_sentiments``
+#: (the reference's left join on item_id, data_transformer.py:150).
 GOLD_FINAL = T.StructType(
     list(SILVER_REVIEWS.fields) + [T.StructField("sentiment", T.BooleanType())]
 )

@@ -21,6 +21,13 @@ LLM_BATCH_SIZE = 25
 #: (``spark.sql.codegen.cache.maxEntries``); see the note in get_spark.
 CODEGEN_CACHE_ENTRIES = 4096
 
+#: Streaming checkpoint manager a file:/// session uses; see get_spark.
+CHECKPOINT_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+LOCAL_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
 
 def get_spark(
     app_name: str = "ai-powered-e-commerce-analytics-spark",
@@ -130,4 +137,27 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # -- Streaming checkpoint renames. Every offset, commit and state-store
+    # delta file is written to a temp file and renamed into place, which
+    # is what makes a micro-batch's commit atomic. Spark's default manager
+    # renames through FileContext; on file:// without native Hadoop that
+    # path resolves symlinks by running a shell `readlink` on the source,
+    # the target and their .crc files, so every rename forks the JVM.
+    # Measured on a medallion-stream run (4 cores, seed 51): 1,080
+    # `readlink` forks, and the stream's state-store commits took 7.0 s;
+    # with the FileSystem-based manager no `readlink` and 0.54 s. The
+    # 353 `chmod` forks of the run remain: the local FileSystem sets the
+    # permissions of every file it creates, checkpoints included.
+    # Semantics: on file:// both managers check that the target is absent
+    # and then rename(2), so neither loses a guarantee. On HDFS the
+    # FileContext rename is one atomic no-overwrite NameNode call, so a
+    # session whose default filesystem is not file:/// keeps Spark's
+    # default. S3 renames are copies under either manager; a checkpoint
+    # there needs a store-specific manager, whatever the default FS.
+    if (
+        spark.sparkContext._jsc.hadoopConfiguration().get("fs.defaultFS")
+        == "file:///"
+        and spark.conf.get(CHECKPOINT_MANAGER_CONF, None) is None
+    ):
+        spark.conf.set(CHECKPOINT_MANAGER_CONF, LOCAL_CHECKPOINT_MANAGER)
     return spark

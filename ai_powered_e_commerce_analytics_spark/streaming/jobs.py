@@ -41,7 +41,7 @@ from ..operators.enrich import (
     enrich_reviews,
     enrich_sentiments,
 )
-from ..operators.kpis import all_kpis, gold_join
+from ..operators.kpis import all_kpis
 from ..schemas import BRONZE_PRODUCTS, GOLD_FINAL, SILVER_REVIEWS
 from ..sinks import upsert_kpi_tables, write_silver_chunks
 
@@ -101,8 +101,8 @@ def bronze_to_silver_stream(
         # Per-micro-batch 1-based ids — the reference's ids are per-run
         # (extractor.go:107-110); one micro-batch == one reference run.
         items = assign_item_ids(batch, order_by=["date", "product_name", "price"])
-        reviews = enrich_reviews(items, client_factory)
-        silver = items.join(reviews, "item_id")  # J3 (inner, loader.go:30-62)
+        # J3: reviews appended in place (loader.go:30-62).
+        silver = enrich_reviews(items, client_factory)
         # batch_id-keyed dir => crash-replay rewrites, never duplicates.
         write_silver_chunks(silver, silver_dir, batch_id=batch_id)
 
@@ -125,10 +125,10 @@ def silver_to_gold_stream(
     available_now: bool = True,
 ):
     """The Python ETL pipeline (survey §3.1) as one streaming job:
-    silver files → sentiment LLM → gold left join → 3 KPI upserts + gold
-    snapshot. Idempotent keyed MERGE makes replays safe (ST3/ST4 parity:
-    late rows rewrite their key's row, exactly like the reference's
-    on_conflict upsert)."""
+    silver files → sentiment LLM (gold = silver + sentiment) → 3 KPI
+    upserts + gold snapshot. Idempotent keyed MERGE makes replays safe
+    (ST3/ST4 parity: late rows rewrite their key's row, exactly like the
+    reference's on_conflict upsert)."""
     silver = _file_stream(
         spark, silver_dir, SILVER_REVIEWS, archive_dir=archive_dir
     )
@@ -136,8 +136,8 @@ def silver_to_gold_stream(
     def process(batch: DataFrame, batch_id: int) -> None:
         if batch.isEmpty():
             return
-        sentiments = enrich_sentiments(batch, client_factory)
-        gold = gold_join(batch, sentiments).cache()
+        # J1: sentiment appended in place (data_transformer.py:150).
+        gold = enrich_sentiments(batch, client_factory).cache()
         try:
             upsert_kpi_tables(spark, all_kpis(gold), kpi_dir)
             # overwrite, not append: batch_id makes the dir deterministic,

@@ -92,18 +92,46 @@ def test_failed_batch_null_fill(spark, items):
     assert sorted(r.item_id for r in out) == list(range(1, 64))
 
 
-def test_retry_residuals_anti_join(spark, items):
+def test_retry_residuals_reenriches_null_rows(spark, items):
+    # Batch 1 fails its one attempt and is null-filled; the driver-level
+    # pass enriches exactly those rows again and keeps the others.
     enriched = enrich_sentiments(
         items.repartition(1),
         client_factory=lambda: StubLLMClient(fail_batches=frozenset({1})),
         max_attempts=1,
-    )
-    fixed = retry_residuals(
-        items.repartition(1), enriched, lambda df: enrich_sentiments(df)
-    )
+    ).cache()
+    assert enriched.where(F.col("sentiment").isNull()).count() == 25
+    fixed = retry_residuals(enriched, lambda df: enrich_sentiments(df))
     out = fixed.orderBy("item_id").collect()
     assert sorted(r.item_id for r in out) == list(range(1, 64))
-    assert all(r.sentiment is not None for r in out)
+    assert all(r.sentiment == (r.item_id % 3 == 0) for r in out)
+    assert fixed.columns == items.columns + ["sentiment"]
+    enriched.unpersist()
+
+
+def test_enrich_appends_in_place(spark, items):
+    # The answer is appended to the rows read: every input column keeps
+    # its values, a same-named column is replaced, and only the prompt
+    # fields reach the client.
+    from ai_powered_e_commerce_analytics_spark.operators.enrich import (
+        StubLLMClient as Stub,
+    )
+
+    class PromptOnly(Stub):
+        def call_many(self, method, batches, indices, concurrency=4):
+            if any(set(r) != {"item_id", "review"} for b in batches for r in b):
+                raise ValueError("non-prompt field sent to the client")
+            return super().call_many(method, batches, indices, concurrency)
+
+    src = items.withColumn("sentiment", F.lit(None).cast("boolean"))
+    out = enrich_sentiments(src, PromptOnly, max_attempts=1)
+    assert out.columns == items.columns + ["sentiment"]
+    got = {r.item_id: r for r in out.collect()}
+    assert len(got) == 63
+    for want in items.collect():
+        row = got[want.item_id]
+        assert row[: len(want)] == tuple(want)
+        assert row.sentiment == (want.item_id % 3 == 0)
 
 
 def test_enrich_reviews_schema(spark, items):

@@ -528,6 +528,132 @@ def test_etl_pipeline_empty_guard(spark, tmp_path):
     assert res == {"rows": 0}
 
 
+def _kpis_over_silver(silver_dir: str) -> dict[str, list[tuple]]:
+    """The three KPI tables recomputed in DuckDB from silver's JSON files,
+    with the stub client's sentiment rule."""
+    import duckdb
+
+    from ai_powered_e_commerce_analytics_spark.operators.enrich import (
+        POSITIVE_TOKENS,
+    )
+
+    files = glob.glob(f"{silver_dir}/**/*.json", recursive=True)
+    positive = " OR ".join(
+        f"contains(lower(coalesce(review, '')), '{t}')" for t in POSITIVE_TOKENS
+    )
+    con = duckdb.connect()
+    con.execute(
+        f"""CREATE TABLE gold AS SELECT *, ({positive}) AS sentiment
+        FROM read_json({files!r}, format='newline_delimited', columns={{
+            price: 'DOUBLE', date: 'VARCHAR', id: 'VARCHAR',
+            shop_id: 'VARCHAR', review: 'VARCHAR'}})"""
+    )
+    out = {}
+    for name, key in (("user_kpis", "id"), ("shop_kpis", "shop_id")):
+        out[name] = con.execute(
+            f"""WITH agg AS (
+                SELECT {key}, avg(price) AS a,
+                  sum(CASE WHEN sentiment THEN 1 ELSE 0 END) AS p,
+                  sum(CASE WHEN NOT sentiment THEN 1 ELSE 0 END) AS n
+                FROM gold GROUP BY {key}),
+            l AS (SELECT *, p / CASE WHEN n > 0 THEN n ELSE 1 END AS s FROM agg)
+            SELECT {key}, a, p, n, s, CASE WHEN max(s) OVER () = min(s) OVER ()
+              THEN 0.0 ELSE (s - min(s) OVER ()) / (max(s) OVER () - min(s) OVER ())
+              END FROM l ORDER BY 1"""
+        ).fetchall()
+    out["date_kpis"] = con.execute(
+        "SELECT date, avg(price) FROM gold GROUP BY date ORDER BY 1"
+    ).fetchall()
+    return out
+
+
+def test_etl_over_two_review_runs_keeps_one_gold_row_per_silver_row(
+    spark, tmp_path
+):
+    # Two review runs write into one silver dir. item_id restarts at 1 in
+    # each run, so joining sentiments back on item_id would pair every
+    # silver row with both runs' answers (400 gold rows from 200).
+    silver_dir, gold_dir, kpi_dir = (str(tmp_path / d) for d in "sgk")
+    for run, month in enumerate(("2026-07", "2026-08")):
+        bronze = str(tmp_path / f"b{run}")
+        spark.createDataFrame(_bronze_rows(100, month)).coalesce(1).write.json(
+            bronze
+        )
+        assert run_review_pipeline(spark, bronze, silver_dir) == {"rows": 100}
+
+    assert run_etl_pipeline(spark, silver_dir, gold_dir, kpi_dir) == {"rows": 200}
+    gold = spark.read.schema(GOLD_FINAL).json(f"{gold_dir}/final_data_*")
+    assert gold.count() == 200
+
+    want = _kpis_over_silver(silver_dir)
+    review_cols = ["positive_reviews", "negative_reviews", "likeness_score",
+                   "normalized_likeness_score"]
+    for name, cols in (
+        ("user_kpis", ["id", "average_spent"] + review_cols),
+        ("shop_kpis", ["shop_id", "average_profit"] + review_cols),
+        ("date_kpis", ["date", "average_profit_per_day"]),
+    ):
+        got = sorted(
+            tuple(r) for r in
+            read_upsert_table(spark, f"{kpi_dir}/{name}").select(*cols).collect()
+        )
+        assert [g[0] for g in got] == [w[0] for w in want[name]], name
+        for g, w in zip(got, want[name]):
+            assert g[1:] == pytest.approx(w[1:]), (name, g, w)
+
+
+@pytest.mark.parametrize("fail", [False, True], ids=["ok", "raises"])
+def test_pipelines_release_what_they_pin(spark, tmp_path, fail):
+    # After a pipeline run the session's persisted RDDs are what they were
+    # before it, whether the run succeeded or raised, and a caller's own
+    # cache is left alone. Batch 0 of every task null-fills, so the ETL's
+    # driver-level retry pins a second frame.
+    from ai_powered_e_commerce_analytics_spark.operators.enrich import (
+        StubLLMClient,
+    )
+
+    def persisted() -> set[int]:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    held = spark.range(10).cache()
+    held.count()
+    try:
+        before = persisted()
+        assert before  # the caller's cache
+        bronze, silver, kpi = (str(tmp_path / d) for d in ("b", "s", "k"))
+        spark.createDataFrame(_bronze_rows(60)).coalesce(1).write.json(bronze)
+        cfg = EngineConfig(max_attempts=1)
+        null_first = lambda: StubLLMClient(fail_batches=frozenset({0}))  # noqa: E731
+
+        if fail:
+            def broken():
+                raise RuntimeError("model server down")
+
+            with pytest.raises(Exception, match="model server down"):
+                run_review_pipeline(
+                    spark, bronze, silver, config=cfg, client_factory=broken
+                )
+            assert persisted() == before
+        assert run_review_pipeline(
+            spark, bronze, silver, config=cfg, client_factory=null_first
+        ) == {"rows": 60}
+        assert persisted() == before
+
+        etl = lambda: run_etl_pipeline(  # noqa: E731
+            spark, silver, str(tmp_path / "g"), kpi,
+            config=cfg, client_factory=null_first,
+        )
+        if fail:
+            open(kpi, "w").close()  # a file where the KPI tables' dir goes
+            with pytest.raises(Exception):
+                etl()
+        else:
+            assert etl() == {"rows": 60}
+        assert persisted() == before
+    finally:
+        held.unpersist()
+
+
 def test_collector_run(spark, tmp_path):
     bronze_dir = str(tmp_path / "bronze")
     calls = iter(range(100))

@@ -53,6 +53,21 @@ def _drained(progress) -> bool:
     return False
 
 
+def test_file_session_checkpoints_through_filesystem_manager(spark, tmp_path):
+    # A file:/// session renames checkpoint files through the Hadoop
+    # FileSystem, not FileContext (whose local rename forks `readlink`).
+    jvm = spark._jvm
+    manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    created = manager.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(str(tmp_path / "ckpt")),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    assert created.getClass().getName() == (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    )
+
+
 def test_bronze_to_silver_stream(spark, tmp_path):
     bronze = str(tmp_path / "bronze_new")
     silver = str(tmp_path / "silver")
