@@ -1,11 +1,17 @@
 """A session compiles and infers once: re-running a query reuses its
 generated classes, and re-reading a table reuses its inferred schema
-until the table or the inference confs change."""
+until the table or the inference confs change. Its driver JVM runs one
+C1 and one C2 compiler thread."""
 
 from __future__ import annotations
 
 from ai_powered_e_commerce_analytics_spark.plans import query_map
 from ai_powered_e_commerce_analytics_spark.plans.spec import t
+from ai_powered_e_commerce_analytics_spark.session import (
+    DEFAULT_JAVA_OPTIONS_CONF,
+    DRIVER_JIT_OPTIONS,
+    with_driver_java_options,
+)
 
 # In a fresh session these generate 174 distinct classes at sf0.001,
 # more than Spark's default cache of 100 holds.
@@ -96,3 +102,26 @@ def test_inference_conf_change_does_not_reuse_the_entry(spark, tmp_path):
     finally:
         spark.conf.set(key, saved)
 
+
+def test_driver_jvm_has_one_c1_and_one_c2_thread(spark):
+    jvm = spark.sparkContext._jvm
+    bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+    )
+    assert bean.getVMOption("CICompilerCount").getValue() == "2"
+
+
+def test_driver_java_options_put_the_engine_flag_first():
+    assert with_driver_java_options(None) == {DEFAULT_JAVA_OPTIONS_CONF: DRIVER_JIT_OPTIONS}
+    extra = "-Xms2g -XX:+AlwaysPreTouch"
+    caller = {
+        DEFAULT_JAVA_OPTIONS_CONF: "-XX:CICompilerCount=4 -Dfoo=bar",
+        "spark.driver.extraJavaOptions": extra,
+        "spark.sql.shuffle.partitions": "8",
+    }
+    assert with_driver_java_options(caller) == {
+        DEFAULT_JAVA_OPTIONS_CONF: "-XX:CICompilerCount=2 -XX:CICompilerCount=4 -Dfoo=bar",
+        "spark.driver.extraJavaOptions": extra,
+        "spark.sql.shuffle.partitions": "8",
+    }
+    assert caller[DEFAULT_JAVA_OPTIONS_CONF] == "-XX:CICompilerCount=4 -Dfoo=bar"
