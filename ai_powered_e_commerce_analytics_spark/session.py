@@ -21,10 +21,13 @@ LLM_BATCH_SIZE = 25
 #: (``spark.sql.codegen.cache.maxEntries``); see the note in get_spark.
 CODEGEN_CACHE_ENTRIES = 4096
 
-#: JIT compiler threads of the driver JVM: one C1 and one C2, the least
-#: tiered compilation allows; see the note in get_spark.
-DRIVER_JIT_OPTIONS = "-XX:CICompilerCount=2"
-DEFAULT_JAVA_OPTIONS_CONF = "spark.driver.defaultJavaOptions"
+#: HotSpot compiler directives of the driver JVM: the code that builds a
+#: query (code generators, class loaders, serializers, parsers) compiles
+#: with C1 only; see the note in get_spark.
+JIT_DIRECTIVES = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jit_directives.json")
+DRIVER_JIT_OPTIONS = (
+    f'-XX:+UnlockDiagnosticVMOptions -XX:CompilerDirectivesFile="{JIT_DIRECTIVES}"'
+)
 
 #: Streaming checkpoint manager a file:/// session uses; see get_spark.
 CHECKPOINT_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
@@ -32,17 +35,6 @@ LOCAL_CHECKPOINT_MANAGER = (
     "org.apache.spark.sql.execution.streaming.checkpointing."
     "FileSystemBasedCheckpointFileManager"
 )
-
-
-def with_driver_java_options(extra_conf: dict[str, str] | None) -> dict[str, str]:
-    """The caller's confs with the engine's driver JVM flags put first in
-    ``spark.driver.defaultJavaOptions``. A caller's own value there follows
-    the engine's, so its flags win on duplicates; every other key,
-    ``spark.driver.extraJavaOptions`` included, passes through untouched."""
-    conf = dict(extra_conf or {})
-    caller = conf.get(DEFAULT_JAVA_OPTIONS_CONF, "").strip()
-    conf[DEFAULT_JAVA_OPTIONS_CONF] = f"{DRIVER_JIT_OPTIONS} {caller}".strip()
-    return conf
 
 
 def get_spark(
@@ -129,9 +121,43 @@ def get_spark(
         # absorbs uneven hashing. Cost at the end of a 3-iteration
         # bench.py run (4 cores), against the default: +14.6 MB
         # metaspace, +1.8 MB compressed class space, +19.3 MB code heap.
-        # The driver JVM's JIT threads are set with the caller's confs
-        # below (DRIVER_JIT_OPTIONS).
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        # -- Driver JIT: the code that builds a query compiles with C1 only
+        # (JIT_DIRECTIVES, a HotSpot compiler-directives file). Each query
+        # runs a burst of code that is hot for a moment and then idle:
+        # Janino compiling the generated classes, ASM (closure cleaning,
+        # lambda spinning), class loading, Java serialization of tasks,
+        # ANTLR and Hadoop's XML configuration parsing, Scala runtime
+        # reflection. By default C2 compiles all of it: in a perfbench
+        # queries-light run (4 cores, seed 61, JFR) C2 spent 35.6 s
+        # compiling, 6.8 s on Janino and 3.7 s on serialization against
+        # 0.8 s on the generated query classes. The directives mark those
+        # packages not C2-compilable, so the tiered policy moves their hot
+        # methods from profiled C1 code to plain C1 code (tier 1) instead
+        # of queueing them for C2. Spark's operators, Catalyst and the
+        # generated classes keep C2. MEASUREMENTS
+        # Rejected: -XX:CICompilerCount=2 (one C1 and one C2 thread; JDK 17
+        # picks 3 on 4 cores, 4 on 8, 15 on 32). perfbench scaled_cpu_s
+        # fell 21% (queries-light) and 18% (medallion-stream), but a
+        # 16-query sf0.1 bench.py subset took 10.6% longer as a sum of
+        # per-query minimums (4 of 4 pairs): hot query code waits behind
+        # the bursts in the single C2 queue. Rejected:
+        # -XX:TieredStopAtLevel=1 (C1 only): perfbench CPU halved
+        # (queries-light 44.3 -> 21.3 s, medallion-stream 64.6 -> 32.6 s),
+        # but the same subset went from 61.1 to 100.3 s (+64%): long scans
+        # and aggregations need C2's code. Rejected: tier-4 thresholds x10,
+        # queries-light -33% but the subset 27.0-28.6 s -> 41.7 s (+46%).
+        # No effect: -XX:Tier4LoadFeedback=1 (queries-light 33.96 ->
+        # 33.09 s).
+        # Scope: only the driver JVM, and only when get_spark launches it
+        # (like spark.driver.memory, it does nothing once a JVM exists).
+        # Local mode has no separate executor JVM; a cluster's executors
+        # run long task streams and keep their defaults. The JVM prints
+        # "1 compiler directives added" on its stdout at launch. The
+        # caller's confs come after this one, so a caller who sets
+        # spark.driver.defaultJavaOptions replaces it; spark-submit appends
+        # spark.driver.extraJavaOptions (perfbench's fixed heap) after it.
+        .config("spark.driver.defaultJavaOptions", DRIVER_JIT_OPTIONS)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.parquet.int96RebaseModeInRead", "CORRECTED")
         # -- Keep driver logs quiet in tests/bench.
@@ -146,44 +172,7 @@ def get_spark(
     # plans already hint shuffle_hash explicitly (PageRank), which also
     # keeps the SHJ build-side-fits-memory risk scoped instead of
     # global.
-    #
-    # -- Driver JIT: one C1 and one C2 compiler thread (DRIVER_JIT_OPTIONS;
-    # JDK 17 picks 3 on 4 cores, 4 on 8 and 15 on 32). A query session runs
-    # bursts of code that is hot for a moment and then never again:
-    # Janino, Java serialization of tasks, closure cleaning, SQL parsing.
-    # A perfbench queries-light cold pass (4 cores, seed 61) used 24.5 s
-    # of CPU, 14.0 s of it on C2 threads and 2.6 s on C1 threads against
-    # 2.4 s on executor task threads; of C2's 19 s of compile time (JFR),
-    # 6.1 s compiled Janino, 5.8 s java.* (mostly task serialization) and
-    # 0.5 s the generated query classes. With a single C2 thread HotSpot's
-    # tiered policy filters those bursts by itself: tier-4 thresholds rise
-    # with the C2 queue's length (Tier4LoadFeedback) and queued methods
-    # that went cold are dropped (TieredCompileTaskTimeout), while code
-    # that stays hot still reaches C2. Against the default 3 threads
-    # (4 cores, 10 perfbench pairs each): scaled_cpu_s -21% on
-    # queries-light and -18% on medallion-stream; JIT compile time over
-    # a traced run fell from 26.3 to 13.6 s and from 26.9 to 15.3 s;
-    # traced executor task CPU did not move (0.59 vs 0.56 s, 4.78 vs
-    # 4.56 s). The cost is in long runs: hot query code reaches C2
-    # later. A 16-query sf0.1 bench.py subset took 10.6% longer as a
-    # sum of per-query minimums (4 of 4 pairs; 12% over 6 iterations)
-    # while the JVM's CPU did not rise. Details in CHANGES.md.
-    # Rejected: -XX:TieredStopAtLevel=1 (C1 only). It halved the
-    # perfbench CPU (queries-light 44.3 -> 21.3 s, medallion-stream
-    # 64.6 -> 32.6 s), whose passes are short, but took a 16-query sf0.1
-    # bench.py subset from 61.1 to 100.3 s (+64%): long scans and
-    # aggregations need C2's code. Rejected: tier-4 thresholds x10; it cut
-    # queries-light by 33% but took the same subset from 27.0-28.6 s to
-    # 41.7 s (+46%). No effect: -XX:Tier4LoadFeedback=1 (queries-light
-    # 33.96 -> 33.09 s).
-    # Scope: only the driver JVM, and only when get_spark launches it;
-    # like spark.driver.memory, the flag does nothing once a JVM exists.
-    # Local mode has no separate executor JVM. A cluster's executors run
-    # long task streams, where C2's throughput is the point, so their
-    # options are left alone. The flag goes in defaultJavaOptions because
-    # spark-submit puts it before extraJavaOptions, which callers set
-    # themselves (perfbench's fixed heap) and would otherwise replace it.
-    for k, v in with_driver_java_options(extra_conf).items():
+    for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

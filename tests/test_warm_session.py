@@ -1,17 +1,15 @@
 """A session compiles and infers once: re-running a query reuses its
 generated classes, and re-reading a table reuses its inferred schema
-until the table or the inference confs change. Its driver JVM runs one
-C1 and one C2 compiler thread."""
+until the table or the inference confs change. Its driver JVM compiles
+the code that builds a query with C1 only."""
 
 from __future__ import annotations
 
+import json
+
 from ai_powered_e_commerce_analytics_spark.plans import query_map
 from ai_powered_e_commerce_analytics_spark.plans.spec import t
-from ai_powered_e_commerce_analytics_spark.session import (
-    DEFAULT_JAVA_OPTIONS_CONF,
-    DRIVER_JIT_OPTIONS,
-    with_driver_java_options,
-)
+from ai_powered_e_commerce_analytics_spark.session import JIT_DIRECTIVES
 
 # In a fresh session these generate 174 distinct classes at sf0.001,
 # more than Spark's default cache of 100 holds.
@@ -103,25 +101,36 @@ def test_inference_conf_change_does_not_reuse_the_entry(spark, tmp_path):
         spark.conf.set(key, saved)
 
 
-def test_driver_jvm_has_one_c1_and_one_c2_thread(spark):
-    jvm = spark.sparkContext._jvm
-    bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
-        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+def test_driver_jvm_keeps_query_building_code_out_of_c2(spark):
+    """The JVM's own directive stack (jcmd Compiler.directives_print, read
+    through the DiagnosticCommand MBean) holds the package's patterns with
+    C2 excluded, ahead of the default directive."""
+    jvm, gateway = spark.sparkContext._jvm, spark.sparkContext._gateway
+
+    def array(cls, *items):
+        out = gateway.new_array(cls, len(items))
+        for i, item in enumerate(items):
+            out[i] = item
+        return out
+
+    # The platform MBeanServer's class is not exported to py4j, so its
+    # invoke is called through the public interface.
+    cls = jvm.java.lang.Class.forName
+    invoke = cls("javax.management.MBeanServerConnection").getMethod("invoke", array(
+        jvm.java.lang.Class, cls("javax.management.ObjectName"), cls("java.lang.String"),
+        cls("[Ljava.lang.Object;"), cls("[Ljava.lang.String;"),
+    ))
+    printed = invoke.invoke(
+        jvm.java.lang.management.ManagementFactory.getPlatformMBeanServer(),
+        array(
+            jvm.java.lang.Object,
+            jvm.javax.management.ObjectName("com.sun.management:type=DiagnosticCommand"),
+            "compilerDirectivesPrint", None, None,
+        ),
     )
-    assert bean.getVMOption("CICompilerCount").getValue() == "2"
-
-
-def test_driver_java_options_put_the_engine_flag_first():
-    assert with_driver_java_options(None) == {DEFAULT_JAVA_OPTIONS_CONF: DRIVER_JIT_OPTIONS}
-    extra = "-Xms2g -XX:+AlwaysPreTouch"
-    caller = {
-        DEFAULT_JAVA_OPTIONS_CONF: "-XX:CICompilerCount=4 -Dfoo=bar",
-        "spark.driver.extraJavaOptions": extra,
-        "spark.sql.shuffle.partitions": "8",
-    }
-    assert with_driver_java_options(caller) == {
-        DEFAULT_JAVA_OPTIONS_CONF: "-XX:CICompilerCount=2 -XX:CICompilerCount=4 -Dfoo=bar",
-        "spark.driver.extraJavaOptions": extra,
-        "spark.sql.shuffle.partitions": "8",
-    }
-    assert caller[DEFAULT_JAVA_OPTIONS_CONF] == "-XX:CICompilerCount=4 -Dfoo=bar"
+    ours = printed.split("Directive:")[1]
+    matching = ours.split("matching: ")[1].split("\n")[0]
+    (directive,) = json.load(open(JIT_DIRECTIVES))
+    assert set(matching.split(", ")) == set(directive["match"])
+    c1, c2 = ours.split(" c1 directives:")[1].split(" c2 directives:")
+    assert "Exclude:false" in c1 and "Exclude:true" in c2
