@@ -129,13 +129,20 @@ def get_spark(
         # lambda spinning), class loading, Java serialization of tasks,
         # ANTLR and Hadoop's XML configuration parsing, Scala runtime
         # reflection. By default C2 compiles all of it: in a perfbench
-        # queries-light run (4 cores, seed 61, JFR) C2 spent 35.6 s
-        # compiling, 6.8 s on Janino and 3.7 s on serialization against
-        # 0.8 s on the generated query classes. The directives mark those
+        # queries-light run (both passes in one JVM, 4 cores, seed 61,
+        # JFR) C2 spent 35.6 s compiling, 6.8 s on Janino and 3.7 s on
+        # serialization against about 0.8 s on the generated classes. The directives mark those
         # packages not C2-compilable, so the tiered policy moves their hot
         # methods from profiled C1 code to plain C1 code (tier 1) instead
         # of queueing them for C2. Spark's operators, Catalyst and the
-        # generated classes keep C2. MEASUREMENTS
+        # generated classes keep C2, and the compiler thread count stays
+        # the JDK's default for the host. With the directives the same
+        # run spent 22.5 s in C2. Against no directives (4 cores, 6
+        # perfbench pairs each): scaled_cpu_s -12.3% on queries-light and
+        # -13.8% on medallion-stream, every pair better; JIT compile time
+        # of a traced run 21.2 -> 16.2 s and 27.3 -> 21.8 s, with executor
+        # task CPU unmoved. Details, and the sf0.1 bench.py pairs, are in
+        # CHANGES.md.
         # Rejected: -XX:CICompilerCount=2 (one C1 and one C2 thread; JDK 17
         # picks 3 on 4 cores, 4 on 8, 15 on 32). perfbench scaled_cpu_s
         # fell 21% (queries-light) and 18% (medallion-stream), but a
