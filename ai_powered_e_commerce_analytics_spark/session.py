@@ -21,9 +21,9 @@ LLM_BATCH_SIZE = 25
 #: (``spark.sql.codegen.cache.maxEntries``); see the note in get_spark.
 CODEGEN_CACHE_ENTRIES = 4096
 
-#: HotSpot compiler directives of the driver JVM: the code that builds a
-#: query (code generators, class loaders, serializers, parsers) compiles
-#: with C1 only; see the note in get_spark.
+#: HotSpot compiler directives of the driver JVM: code that runs once per
+#: new query or call site (Janino, lambda spinning, XML parsing, Scala
+#: reflection) compiles with C1 only; see the note in get_spark.
 JIT_DIRECTIVES = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jit_directives.json")
 DRIVER_JIT_OPTIONS = (
     f'-XX:+UnlockDiagnosticVMOptions -XX:CompilerDirectivesFile="{JIT_DIRECTIVES}"'
@@ -122,33 +122,38 @@ def get_spark(
         # bench.py run (4 cores), against the default: +14.6 MB
         # metaspace, +1.8 MB compressed class space, +19.3 MB code heap.
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
-        # -- Driver JIT: the code that builds a query compiles with C1 only
-        # (JIT_DIRECTIVES, a HotSpot compiler-directives file). Each query
-        # runs a burst of code that is hot for a moment and then idle:
-        # Janino compiling the generated classes, ASM (closure cleaning,
-        # lambda spinning), class loading, Java serialization of tasks,
-        # ANTLR and Hadoop's XML configuration parsing, Scala runtime
-        # reflection. By default C2 compiles all of it: in a perfbench
+        # -- Driver JIT: code that runs once per new query or call site
+        # compiles with C1 only (JIT_DIRECTIVES, a HotSpot
+        # compiler-directives file): Janino compiling the generated
+        # classes, the JDK's lambda spinning and its ASM, Hadoop's XML
+        # configuration parser and Scala runtime reflection. By default C2
+        # compiles it as soon as a burst makes it hot: in a perfbench
         # queries-light run (both passes in one JVM, 4 cores, seed 61,
-        # JFR) C2 spent 35.6 s compiling, 6.8 s on Janino and 3.7 s on
-        # serialization against about 0.8 s on the generated classes. The directives mark those
+        # JFR) C2 spent 35.6 s compiling, 6.8 s of it on Janino, against
+        # about 0.8 s on the generated classes. The directives mark those
         # packages not C2-compilable, so the tiered policy moves their hot
         # methods from profiled C1 code to plain C1 code (tier 1) instead
-        # of queueing them for C2. Spark's operators, Catalyst and the
-        # generated classes keep C2, and the compiler thread count stays
-        # the JDK's default for the host. With the directives the same
-        # run spent 22.5 s in C2. Against no directives (4 cores, 6
-        # perfbench pairs each): scaled_cpu_s -12.3% on queries-light and
-        # -13.8% on medallion-stream, every pair better; JIT compile time
-        # of a traced run 21.2 -> 16.2 s and 27.3 -> 21.8 s, with executor
-        # task CPU unmoved. Details, and the sf0.1 bench.py pairs, are in
-        # CHANGES.md.
+        # of queueing them for C2. A session that re-runs its queries
+        # comes back to this code only for the few classes it recompiles
+        # (about 40 per sf0.1 bench.py iteration, with the codegen cache
+        # above), so its steady state keeps C2 where it runs.
+        # The compiler thread count stays the JDK's default for the host.
+        # Against no directives (4 cores, perfbench pairs): scaled_cpu_s
+        # -6.7% on queries-light (5 of 5 pairs) and -1.0% on
+        # medallion-stream (3 of 4); the runs are in CHANGES.md.
+        # Rejected: a wider list that also excluded Java serialization,
+        # ANTLR, Hadoop's Configuration, class loading and ASM closure
+        # cleaning. perfbench scaled_cpu_s fell 12.3% and 13.8%, but that
+        # code runs for every task, scan or job, and 16 short sf0.1 queries
+        # re-run 5 times read 7.6% slower (2 runs per side; this list read
+        # 6.60 / 6.77 s against 7.67 / 6.91 s without directives).
         # Rejected: -XX:CICompilerCount=2 (one C1 and one C2 thread; JDK 17
         # picks 3 on 4 cores, 4 on 8, 15 on 32). perfbench scaled_cpu_s
         # fell 21% (queries-light) and 18% (medallion-stream), but a
         # 16-query sf0.1 bench.py subset took 10.6% longer as a sum of
-        # per-query minimums (4 of 4 pairs): hot query code waits behind
-        # the bursts in the single C2 queue. Rejected:
+        # per-query minimums (4 of 4 pairs), likely because hot query code
+        # waits behind the bursts in the single C2 queue (not traced per
+        # method). Rejected:
         # -XX:TieredStopAtLevel=1 (C1 only): perfbench CPU halved
         # (queries-light 44.3 -> 21.3 s, medallion-stream 64.6 -> 32.6 s),
         # but the same subset went from 61.1 to 100.3 s (+64%): long scans

@@ -1,7 +1,7 @@
 """A session compiles and infers once: re-running a query reuses its
 generated classes, and re-reading a table reuses its inferred schema
 until the table or the inference confs change. Its driver JVM compiles
-the code that builds a query with C1 only."""
+code that runs once per new query (Janino and the like) with C1 only."""
 
 from __future__ import annotations
 
@@ -101,7 +101,7 @@ def test_inference_conf_change_does_not_reuse_the_entry(spark, tmp_path):
         spark.conf.set(key, saved)
 
 
-def test_driver_jvm_keeps_query_building_code_out_of_c2(spark):
+def test_driver_jvm_keeps_one_off_code_out_of_c2(spark):
     """The JVM's own directive stack (jcmd Compiler.directives_print, read
     through the DiagnosticCommand MBean) holds the package's patterns with
     C2 excluded, ahead of the default directive."""
