@@ -139,7 +139,7 @@ def get_spark(
         # above), so its steady state keeps C2 where it runs.
         # The compiler thread count stays the JDK's default for the host.
         # Against no directives (4 cores, perfbench pairs): scaled_cpu_s
-        # -6.7% on queries-light (5 of 5 pairs) and -1.0% on
+        # -5.1% on queries-light (9 of 10 pairs) and -1.0% on
         # medallion-stream (3 of 4); the runs are in CHANGES.md.
         # Rejected: a wider list that also excluded Java serialization,
         # ANTLR, Hadoop's Configuration, class loading and ASM closure
