@@ -503,6 +503,7 @@ def _audit(spark, args) -> dict:
     import re
     from collections import Counter
 
+    from .functions.core import released
     from .plans import QUERIES
     from .plans.probes import PLAN_PROBES
 
@@ -513,8 +514,9 @@ def _audit(spark, args) -> dict:
             continue
         probe = PLAN_PROBES.get(spec.name)
         try:
-            df = (probe or spec.spark)(spark, args.sf_dir)
-            plan = df._jdf.queryExecution().executedPlan().toString()
+            with released(spark):
+                df = (probe or spec.spark)(spark, args.sf_dir)
+                plan = df._jdf.queryExecution().executedPlan().toString()
         except Exception as exc:  # noqa: BLE001 - audit must not die mid-list
             out[spec.name] = {"error": f"{type(exc).__name__}: {exc}"[:200]}
             continue
@@ -566,8 +568,6 @@ def _audit(spark, args) -> dict:
         }
         if probe is not None:
             out[spec.name]["probe"] = True  # one pre-checkpoint round
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            rdd.unpersist(False)
     return out
 
 

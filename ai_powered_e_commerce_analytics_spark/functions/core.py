@@ -6,11 +6,19 @@ deliberately built on ``md5`` (not ``xxhash64``) so the exact same value is
 computable in ANSI SQL by the DuckDB correctness oracle; swap
 ``portable_hash64`` for ``F.xxhash64`` in production if oracle parity is
 not needed (xxhash64 is ~3x faster, same distribution properties).
+
+The one exception is the sharing seam at the end of the module
+(:func:`share`, :func:`release`, :func:`released`): every persist,
+checkpoint and release in the package goes through it.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+import logging
+from contextlib import contextmanager
+from contextvars import ContextVar
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -211,70 +219,119 @@ def unordered_pair_rows(
     )
 
 
-#: Session conf key opting iterative-state pinning into RELIABLE
-#: checkpoints (see :func:`pin`). Unset/empty -> localCheckpoint.
+#: Session conf key opting checkpoint shares into RELIABLE checkpoints
+#: (see :func:`share`). Unset/empty -> localCheckpoint.
 RELIABLE_CHECKPOINT_CONF = "spark.graft.checkpointDir"
 
+log = logging.getLogger(__name__)
 
-def pin(df: DataFrame, eager: bool = True) -> DataFrame:
-    """Sever lineage on an iterative-loop state frame (VERDICT r10 #3).
+#: The innermost :func:`released` scope's shares; None outside any.
+_SCOPE: ContextVar[list | None] = ContextVar("shares", default=None)
 
-    The iterative trainers (connected components, PageRank, the BPE
-    merge loop) re-reference the previous round's state several times,
-    so without truncation the logical plan grows exponentially with the
-    round count. Two ways to truncate:
+
+def share(df, how: str):
+    """Share a multiply-referenced frame: the engine's one sharing seam.
+
+    ``how="persist"`` caches lazily (the first action fills the cache; a
+    cached plan keeps its hash partitioning for later joins).
+    ``how="checkpoint"`` materializes NOW and severs lineage, which the
+    iterative trainers (connected components, the BPE merge loop) need
+    so their logical plans do not grow with the round count, and which
+    lets AQE size the stored partitions. A broadcast variable is shared
+    with ``how="persist"``. Inside :func:`released` the share is
+    registered in the innermost scope, which frees it on exit; outside
+    any scope nothing tracks it and it lives until Spark's GC or the
+    session ends.
+
+    Rule: consume a plan inside the scope that shared its inputs. A
+    released persist recomputes from lineage, but a released checkpoint
+    or broadcast fails the next action that reads it.
+
+    Checkpoint policy (written once, here):
 
     - ``localCheckpoint`` (the default): executor-local blocks, zero
-      disk/DFS traffic — but lineage is SEVERED, so on a real cluster
-      an executor loss makes the pinned partitions unrecoverable and
-      fails the job mid-training. Exactly right for ``local[n]`` and
-      for jobs cheap to re-run end-to-end.
-    - reliable ``checkpoint``: partitions are written to the
-      fault-tolerant directory named by the session conf
-      ``spark.graft.checkpointDir`` (propagated to
-      ``sparkContext.setCheckpointDir``), so a lost executor recovers
-      the state from storage and a multi-hour trainer survives node
-      churn. Costs one distributed write per round — the right trade
-      whenever (rounds x state size) is large next to re-run cost.
+      disk/DFS traffic, but lineage is SEVERED, so on a real cluster an
+      executor loss makes the stored partitions unrecoverable and fails
+      the job. Exactly right for ``local[n]`` and for jobs cheap to
+      re-run end to end.
+    - reliable ``checkpoint``: partitions are written to the directory
+      named by the session conf ``spark.graft.checkpointDir``
+      (propagated to ``sparkContext.setCheckpointDir``), so a lost
+      executor recovers the state from storage. Costs one distributed
+      write per share, the right trade whenever (rounds x state size) is
+      large next to re-run cost. Flip it per session with
+      ``spark.conf.set("spark.graft.checkpointDir", dir)``;
+      ``spark.conf.unset(...)`` restores the local path. Results are
+      identical either way (tests/test_checkpoint_knob.py).
 
-    The knob is a SESSION conf so deployments flip it without touching
-    query code: ``spark.conf.set("spark.graft.checkpointDir", dir)``
-    before running; ``spark.conf.unset(...)`` restores the local path.
-    Emitted results are identical either way — pinning only changes
-    where the already-computed partitions live (test_checkpoint_knob
-    asserts identical BPE merges through both paths).
-
-    Blast radius beyond the trainers: ``pin`` also shares a
-    multiply-referenced contraction inside about ten ONE-SHOT analytic
-    queries under ``plans/``. There:
-
-    - the default ``eager=True`` runs the pinned subtree as a Spark job
-      while the query DataFrame is BUILT, so constructing a query (for
-      ``explain`` or to run later) already scans the corpus, and a
-      failure after construction leaves the checkpoint blocks behind
-      until a persistent-RDD sweep or the session ends;
-    - under ``localCheckpoint`` an executor loss fails the whole query,
-      where an unpinned plan would recompute the lost partitions;
-    - with ``spark.graft.checkpointDir`` set, every call pays one
-      reliable distributed write instead.
+    Blast radius beyond the trainers: checkpoint shares also serve about
+    ten ONE-SHOT analytic queries under ``plans/``. There building the
+    query DataFrame runs the shared subtree as a Spark job, so
+    constructing a query (for ``explain`` or to run later) already scans
+    its input; under ``localCheckpoint`` an executor loss fails the
+    whole query where an unshared plan would recompute the lost
+    partitions; and with ``spark.graft.checkpointDir`` set every call
+    pays one reliable distributed write.
 
     Checkpoint-file GC: reliable checkpoints are NOT reclaimed by Spark
     unless ``spark.cleaner.referenceTracking.cleanCheckpoints`` was true
-    at SparkContext creation — ``session.get_spark`` sets it, so rounds'
-    directories are deleted as their RDDs fall out of scope. A session
-    built elsewhere (or a pre-existing context) must set that static
-    conf itself or GC ``spark.graft.checkpointDir`` out of band; without
-    it a long trainer leaves one directory per pinned round.
+    at SparkContext creation. ``session.get_spark`` sets it, so a
+    round's directory is deleted once its RDD falls out of scope. A
+    session built elsewhere must set that static conf itself or GC the
+    directory out of band.
     """
-    spark = df.sparkSession
-    try:
-        ckpt_dir = spark.conf.get(RELIABLE_CHECKPOINT_CONF, None)
-    except Exception:  # pragma: no cover - conf layer quirks
-        ckpt_dir = None
-    if ckpt_dir:
-        sc = df.sparkSession.sparkContext
+    if how not in ("persist", "checkpoint"):
+        raise ValueError(f"share: how must be persist or checkpoint: {how!r}")
+    if not isinstance(df, DataFrame):
+        if how == "checkpoint":
+            raise ValueError("share: a broadcast is shared with how='persist'")
+    elif how == "persist":
+        df = df.persist()
+    elif ckpt_dir := df.sparkSession.conf.get(RELIABLE_CHECKPOINT_CONF, None):
         # setCheckpointDir is idempotent for the same path; cheap enough
-        # to call per pin and keeps the conf the single source of truth.
-        sc.setCheckpointDir(ckpt_dir)
-        return df.checkpoint(eager=eager)
-    return df.localCheckpoint(eager=eager)
+        # per call, and keeps the conf the single source of truth.
+        df.sparkSession.sparkContext.setCheckpointDir(ckpt_dir)
+        df = df.checkpoint(eager=True)
+    else:
+        df = df.localCheckpoint(eager=True)
+    scope = _SCOPE.get()
+    if scope is not None:
+        scope.append(df)
+    return df
+
+
+def release(x) -> None:
+    """Free one share now (a loop dropping its superseded round).
+
+    A persisted frame is unpersisted and a broadcast destroyed, neither
+    blocking. A checkpoint lives outside the CacheManager, so
+    ``unpersist()`` is a no-op on it: the RDD behind its ``LogicalRDD``
+    root is unpersisted instead."""
+    if not isinstance(x, DataFrame):
+        x.destroy(blocking=False)
+    elif x.is_cached:
+        x.unpersist()
+    else:
+        root = x._jdf.queryExecution().analyzed()
+        if root.nodeName() == "LogicalRDD":
+            root.rdd().unpersist(False)
+
+
+@contextmanager
+def released(spark: SparkSession):
+    """Scope the shares made inside it: on exit, on success or on error,
+    every frame and broadcast :func:`share` registered here is released
+    (see :func:`release`). Scopes nest; a share joins the innermost. On
+    a stopped session the release is skipped, its blocks being gone."""
+    shares: list = []
+    token = _SCOPE.set(shares)
+    try:
+        yield
+    finally:
+        _SCOPE.reset(token)
+        if spark.sparkContext._jsc is not None:
+            for x in reversed(shares):
+                try:
+                    release(x)
+                except Exception:  # noqa: BLE001 - never mask the body's error
+                    log.warning("released: could not free %r", x, exc_info=True)

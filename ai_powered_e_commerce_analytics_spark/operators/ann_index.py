@@ -64,7 +64,7 @@ from ..plans.simsearch import (
     adc_topk,
     ivf_assignment,
 )
-from ..functions.core import pin
+from ..functions.core import share
 from ..sources.bucketing import write_bucketed
 from ..sources.manifest import (
     load_json_manifest,
@@ -506,9 +506,9 @@ def append_to_index(
         # insertInto is POSITIONAL: match the table's column order
         "vec_id", "m", "pq_cid", "ivf_cid"
     )
-    # pin: the encoded rows are re-used by the re-append check below —
+    # checkpoint: the encoded rows are re-used by the re-append check below —
     # without it every retry would re-run the encode map
-    rows = pin(rows, eager=True)
+    rows = share(rows, "checkpoint")
     n = rows.count()
     rows.write.insertInto(manifest["table"], overwrite=False)
     for _ in range(5):
@@ -628,7 +628,7 @@ def ivfpq_search(
             )
             # materialize within the conf window so the pruned scan is
             # the executed scan even if the caller collects later
-            out = pin(out, eager=True)
+            out = share(out, "checkpoint")
         finally:
             spark.conf.set(_AUTO_BUCKET_CONF, prev)
     return out

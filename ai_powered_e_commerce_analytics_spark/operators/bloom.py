@@ -53,6 +53,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.core import released, share
+
 
 @dataclass(frozen=True)
 class BloomParams:
@@ -125,57 +127,56 @@ def bloom_build(
     kc = _cols(key_col)
     keys_nn = keys.select(*kc).where(_all_not_null(kc))
     n = expected_items
-    pinned = False
-    if n is None:
-        # the sizing agg and the bit fold both scan the build side —
-        # persist the projected keys across the two eager jobs so the
-        # (potentially multi-GB) source is read once
-        keys_nn = keys_nn.persist()
-        pinned = True
-        n = keys_nn.agg(
-            F.approx_count_distinct(F.struct(*kc)).alias("n")
-        ).first()["n"]
-    n = max(int(n), 1)
-    m_bits = max(64, int(math.ceil(-n * math.log(fpp) / (math.log(2) ** 2))))
-    if m_bits // 8 > max_filter_bytes:
-        if pinned:
-            keys_nn.unpersist()
-        raise ValueError(
-            f"bloom_build: sized filter ({m_bits // 8:,} bytes for "
-            f"n={n:,} keys at fpp={fpp}) exceeds max_filter_bytes="
-            f"{max_filter_bytes:,}. A filter this large lives in one "
-            "array cell and cannot be broadcast sanely. Relax fpp, "
-            "pre-aggregate the build keys, or shard: split the build "
-            "side into key ranges and run bloom_build/bloom_prune per "
-            "range so each shard's filter stays under the bound."
+    # the sizing agg and the bit fold both scan the build side — one
+    # scope persists the projected keys across the two eager jobs so
+    # the (potentially multi-GB) source is read once, and frees them on
+    # the oversize raise too
+    with released(spark):
+        if n is None:
+            keys_nn = share(keys_nn, "persist")
+            n = keys_nn.agg(
+                F.approx_count_distinct(F.struct(*kc)).alias("n")
+            ).first()["n"]
+        n = max(int(n), 1)
+        m_bits = max(
+            64, int(math.ceil(-n * math.log(fpp) / (math.log(2) ** 2)))
         )
-    # k from fpp directly (-log2 p), NOT from m/n: the m >= 64 floor
-    # would otherwise inflate k into dozens of probe expressions for a
-    # tiny build side; extra floored bits only lower the realized fpp.
-    k = max(1, round(-math.log(fpp) / math.log(2)))
-    n_words = (m_bits + 63) // 64
-    pos = F.explode(
-        F.array(*_positions(kc, m_bits, k))
-    ).alias("__pos")
-    # Arrow collect + numpy densify: the sparse words come back as two
-    # columnar int64 buffers and scatter into the dense bitset without
-    # per-word Python objects — the driver hop stays within a small
-    # constant of the m/8-byte filter it exists to broadcast.
+        if m_bits // 8 > max_filter_bytes:
+            raise ValueError(
+                f"bloom_build: sized filter ({m_bits // 8:,} bytes for "
+                f"n={n:,} keys at fpp={fpp}) exceeds max_filter_bytes="
+                f"{max_filter_bytes:,}. A filter this large lives in one "
+                "array cell and cannot be broadcast sanely. Relax fpp, "
+                "pre-aggregate the build keys, or shard: split the build "
+                "side into key ranges and run bloom_build/bloom_prune per "
+                "range so each shard's filter stays under the bound."
+            )
+        # k from fpp directly (-log2 p), NOT from m/n: the m >= 64 floor
+        # would otherwise inflate k into dozens of probe expressions for
+        # a tiny build side; extra floored bits only lower the realized
+        # fpp.
+        k = max(1, round(-math.log(fpp) / math.log(2)))
+        n_words = (m_bits + 63) // 64
+        pos = F.explode(
+            F.array(*_positions(kc, m_bits, k))
+        ).alias("__pos")
+        # Arrow collect + numpy densify: the sparse words come back as
+        # two columnar int64 buffers and scatter into the dense bitset
+        # without per-word Python objects — the driver hop stays within
+        # a small constant of the m/8-byte filter it exists to broadcast.
+        sparse = (
+            keys_nn.select(pos)
+            .groupBy(F.shiftrightunsigned("__pos", 6).alias("__w"))
+            .agg(
+                F.bit_or(
+                    F.expr("shiftleft(1L, int(__pos % 64))")
+                ).alias("__b")
+            )
+            .toPandas()
+        )
     import numpy as np
     import pandas as pd
 
-    sparse = (
-        keys_nn.select(pos)
-        .groupBy(F.shiftrightunsigned("__pos", 6).alias("__w"))
-        .agg(
-            F.bit_or(
-                F.expr("shiftleft(1L, int(__pos % 64))")
-            ).alias("__b")
-        )
-        .toPandas()
-    )
-    if pinned:
-        keys_nn.unpersist()
     dense = np.zeros(n_words, dtype=np.int64)
     if len(sparse):
         dense[sparse["__w"].to_numpy()] = sparse["__b"].to_numpy()

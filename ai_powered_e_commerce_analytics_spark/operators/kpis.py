@@ -81,7 +81,8 @@ def date_kpis(gold: DataFrame, *, avg_col: str = "price") -> DataFrame:
 def all_kpis(gold: DataFrame) -> dict[str, DataFrame]:
     """The reference's full KPI fan-out (main.py:53-55) off ONE cached
     enriched frame — the reference re-traverses it 4x (survey §4.1).
-    Caller is responsible for ``gold.cache()`` / ``unpersist()``.
+    The caller shares ``gold`` (``share(gold, "persist")``) inside a
+    ``released()`` scope that outlives the three KPI plans.
     """
     return {
         "user_kpis": user_kpis(gold),

@@ -26,6 +26,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .functions.core import released, share
 from .operators.enrich import (
     StubLLMClient,
     assign_from_pool,
@@ -132,21 +133,16 @@ def run_etl_pipeline(
     # One scan of the input into one cached frame: the job that fills it
     # gives the row count (the P5 empty guard, main.py:41-43) and the
     # null-filled rows, and the KPI upserts and the gold write read it.
-    pinned = [enrich(silver).cache()]
-    try:
-        gold = pinned[0]
+    with released(spark):
+        gold = share(enrich(silver), "persist")
         n, nulls = gold.agg(
             F.count("*"), F.count_if(F.col("sentiment").isNull())
         ).first()
         if n:
             if nulls:  # P8: re-enrich the null-filled rows once
-                gold = retry_residuals(gold, enrich).cache()
-                pinned.append(gold)
+                gold = share(retry_residuals(gold, enrich), "persist")
             upsert_kpi_tables(spark, all_kpis(gold), kpi_dir)
             write_gold_snapshot(gold, gold_dir)
-    finally:
-        for df in pinned:
-            df.unpersist()
     _archive_inputs(spark, silver, archive_dir)  # zero-row files too
     return {"rows": n}
 
@@ -170,21 +166,19 @@ def run_review_pipeline(
     # loader.go:30-62). Cached around the two actions (count + write):
     # without it the LLM map re-executes per action. The count is also
     # the empty guard.
-    silver = enrich_reviews(
-        items,
-        client_factory,
-        batch_size=cfg.batch_size,
-        max_attempts=cfg.max_attempts,
-        retry_wait_s=cfg.retry_wait_s,
-        concurrency=cfg.llm_concurrency,
-    ).cache()
-    try:
+    with released(spark):
+        silver = enrich_reviews(
+            items,
+            client_factory,
+            batch_size=cfg.batch_size,
+            max_attempts=cfg.max_attempts,
+            retry_wait_s=cfg.retry_wait_s,
+            concurrency=cfg.llm_concurrency,
+        ).transform(share, "persist")
         if n := silver.count():
             write_silver_chunks(
                 silver, silver_dir, max_records_per_file=cfg.silver_chunk_rows
             )
-    finally:
-        silver.unpersist()
     _archive_inputs(spark, bronze, archive_dir)  # zero-row files too
     return {"rows": n}
 
@@ -317,38 +311,38 @@ def run_pretrain_pipeline(
     from .plans.sampling import train_test_split_assignment
     from .plans.textops import dedup_survivors_cc, text_quality
 
-    quality_ids = (
-        text_quality(spark, sf_dir)
-        .where(F.col("quality_score") >= min_quality)
-        .select("doc_id")
-    )
-    clean_ids = (
-        decontaminate_ngram_overlap(spark, sf_dir)
-        .where(~F.col("contaminated"))
-        .select("doc_id")
-    )
-    survivor_ids = dedup_survivors_cc(spark, sf_dir).select("doc_id")
-    split = train_test_split_assignment(spark, sf_dir).select(
-        "doc_id", "source", "split"
-    )
-
-    selected = (
-        quality_ids.join(clean_ids, "doc_id")
-        .join(survivor_ids, "doc_id")
-        .join(split, "doc_id")
-        .cache()
-    )
-    chunks = doc_chunk_tokens(spark, sf_dir).join(
-        selected.select("doc_id", "split"), "doc_id"
-    )
-    try:
+    # One scope over the whole run: it releases the shares of the
+    # composed stages too, not just the selected frame.
+    with released(spark):
+        quality_ids = (
+            text_quality(spark, sf_dir)
+            .where(F.col("quality_score") >= min_quality)
+            .select("doc_id")
+        )
+        clean_ids = (
+            decontaminate_ngram_overlap(spark, sf_dir)
+            .where(~F.col("contaminated"))
+            .select("doc_id")
+        )
+        survivor_ids = dedup_survivors_cc(spark, sf_dir).select("doc_id")
+        split = train_test_split_assignment(spark, sf_dir).select(
+            "doc_id", "source", "split"
+        )
+        selected = share(
+            quality_ids.join(clean_ids, "doc_id")
+            .join(survivor_ids, "doc_id")
+            .join(split, "doc_id"),
+            "persist",
+        )
+        chunks = doc_chunk_tokens(spark, sf_dir).join(
+            selected.select("doc_id", "split"), "doc_id"
+        )
         selected.write.mode("overwrite").parquet(f"{out_dir}/selected_docs")
         chunks.write.mode("overwrite").partitionBy("split").parquet(
             f"{out_dir}/chunks"
         )
-        total = text_quality(spark, sf_dir).count()
         stats = {
-            "total_docs": total,
+            "total_docs": text_quality(spark, sf_dir).count(),
             "quality_pass": quality_ids.count(),
             "decontaminated_pass": clean_ids.count(),
             "dedup_survivors": survivor_ids.count(),
@@ -361,7 +355,5 @@ def run_pretrain_pipeline(
                 .collect()
             },
         }
-    finally:
-        selected.unpersist()
     log.info("pretrain pipeline: %s", stats)
     return stats

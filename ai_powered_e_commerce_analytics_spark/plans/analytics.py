@@ -41,7 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.core import pin
+from ..functions.core import share
 from .quantiles import exact_percentiles_scalable
 from .spec import QuerySpec, cents, cents_sql, t
 
@@ -430,7 +430,7 @@ def order_value_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         t(spark, sf_dir, "orders")
         .groupBy("o_orderpriority", x.alias("price_c"))
         .agg(F.count("*").alias("cnt"))
-        .transform(pin)
+        .transform(share, "checkpoint")
     )
     med = exact_percentiles_scalable(
         dv, "price_c", (0.5,), ("med_c",), ("o_orderpriority",),
@@ -452,7 +452,7 @@ def order_value_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         # carries it through to the final fold
         .groupBy("o_orderpriority", "dev_c")
         .agg(F.sum("cnt").alias("cnt"), F.max("med_c").alias("med_c"))
-        .transform(pin)  # feeds the MAD fold AND the final fold
+        .transform(share, "checkpoint")  # feeds the MAD fold AND the final fold
     )
     # Degenerate-group fallback (code review r9, Iglewicz-Hosmer's
     # published prescription): when >=50% of a group shares one exact
@@ -596,7 +596,7 @@ def rfm_customer_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").cast("long").alias("frequency"),
             F.sum(cents("o_totalprice")).alias("monetary_cents"),
         )
-        .transform(pin)
+        .transform(share, "checkpoint")
     )
     ref = per_cust.agg(F.max("last_order").alias("__ref"))
     rfm = per_cust.crossJoin(F.broadcast(ref)).select(
@@ -766,7 +766,7 @@ def customer_segment_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_custkey", F.year("o_orderdate").cast("int").alias("yr")
         )
         .agg(F.sum(cents("o_totalprice")).alias("spend_cents"))
-        .transform(pin)
+        .transform(share, "checkpoint")
     )
     th = exact_percentiles_scalable(
         yearly, "spend_cents", (0.25, 0.50, 0.75), ("q25", "q50", "q75"),
@@ -1340,7 +1340,7 @@ def part_price_size_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("price_c")
         .agg(F.max("size").alias("max_size"))
-        .transform(pin)
+        .transform(share, "checkpoint")
     )
     rng = pts.agg(F.min("price_c").alias("__lo"), F.max("price_c").alias("__hi"))
     b = pts.crossJoin(F.broadcast(rng)).withColumn(
@@ -1484,14 +1484,14 @@ def part_price_size_date_skyline(
         # final plan, not the frozen 32-partition pre-AQE shuffle (the
         # quantiles arrangement lesson — a persist here measured
         # slower).
-        .transform(pin)
+        .transform(share, "checkpoint")
     )
     pts = (
         base.groupBy("price_c", "size")
         .agg(F.max("last_ship_day").alias("day"))
         # contraction-grain (price-domain x size-domain); feeds rng,
         # the level explode (2 refs) — pinned for the same reason
-        .transform(pin)
+        .transform(share, "checkpoint")
     )
     rng = pts.agg(F.min("price_c").alias("__lo"), F.max("price_c").alias("__hi"))
     b = pts.crossJoin(F.broadcast(rng)).withColumn(

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import tokens
-from ..functions.core import pin
+from ..functions.core import share
 from .spec import QuerySpec, t
 from .textops import _TOKS_SQL
 
@@ -161,11 +161,11 @@ def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("doc_id").isNotNull())
         .select(F.explode(tokens("text")).alias("term"))
         .repartition("term")
-        .persist()
+        .transform(share, "persist")
     )
     bucket_structs = cms_bucket_structs
-    exact = (
-        tok.groupBy("term").agg(F.count("*").alias("true_count")).persist()
+    exact = share(
+        tok.groupBy("term").agg(F.count("*").alias("true_count")), "persist"
     )
     cms = (
         tok.select(F.explode(bucket_structs(F.col("term"))).alias("b"))
@@ -295,9 +295,9 @@ def sliding_wau_hll_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sketch agg AND the exact-WAU verifier — as bare references each
     # re-ran the events scan (census: 3 executing scans). Narrow
     # (day, user_id) rows.
-    day_users = pin(ev.select(
+    day_users = share(ev.select(
         event_date(ev).alias("day"), "user_id"
-    ).where(F.col("user_id").isNotNull()))
+    ).where(F.col("user_id").isNotNull()), "checkpoint")
     spine = day_users.select("day").distinct()
 
     horizon = F.explode(

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import tokens
-from ..functions.core import pin
+from ..functions.core import share
 from .spec import QuerySpec, t
 from .textops import STOPWORDS, _STOP_SQL, _TOKS_SQL
 
@@ -236,10 +236,10 @@ def doc_unigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     # total AND the ln-p table — the barrier's ReuseExchange never fired
     # (census: 3 executing documents scans), so each reference re-ran
     # the tokenization.
-    tok = pin(docs.select(
+    tok = share(docs.select(
         "doc_id", F.explode(tokens("text")).alias("term")
-    ))
-    freq = tok.groupBy("term").agg(F.count("*").alias("c")).persist()
+    ), "checkpoint")
+    freq = share(tok.groupBy("term").agg(F.count("*").alias("c")), "persist")
     total = freq.agg(F.sum("c").alias("n_total"))
     lp = freq.crossJoin(F.broadcast(total)).select(
         "term",
@@ -347,11 +347,13 @@ def doc_bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
         # documents FileScans; cache substitution is pre-pruning). The
         # cache holds the same rows the barrier's shuffle already
         # wrote, MEMORY_AND_DISK.
-        .persist()
+        .transform(share, "persist")
     )
     # freq likewise feeds ctx AND the lp join with divergent pruning —
     # vocab²-grain contraction, cheap to cache
-    freq = bg.groupBy("w1", "w2").agg(F.count("*").alias("c")).persist()
+    freq = share(
+        bg.groupBy("w1", "w2").agg(F.count("*").alias("c")), "persist"
+    )
     ctx = freq.groupBy("w1").agg(F.sum("c").alias("c1"))
     lp = freq.join(ctx, "w1").select(
         "w1",
@@ -581,7 +583,7 @@ def source_length_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select("source", bucket.alias("b"))
         .groupBy("source", "b")
         .agg(F.count("*").alias("c_sb"))
-        .persist()
+        .transform(share, "persist")
     )
     src_tot = sb.groupBy("source").agg(F.sum("c_sb").alias("n_s"))
     corpus = sb.groupBy("b").agg(F.sum("c_sb").alias("c_b"))

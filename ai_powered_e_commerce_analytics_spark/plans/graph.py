@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.core import pin, unordered_pair_rows
+from ..functions.core import share, unordered_pair_rows
 from .spec import QuerySpec, t
 
 MIN_SUPPORT = 2   # co-order count floor for a co-purchase edge
@@ -62,7 +62,7 @@ def _supported_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         # every consumer stage — the honest in-suite A/B read the
         # persist form ~15% SLOWER than r15's recompute, while the
         # pin materializes the AQE-final coalesced layout once.
-        .transform(pin)
+        .transform(share, "checkpoint")
     )
 
 
@@ -84,7 +84,7 @@ def copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = (
         _supported_edges(spark, sf_dir)
         .select("x", "y")
-        .transform(pin)
+        .transform(share, "checkpoint")
     )
     # Undirected degree per vertex (one narrow agg over both endpoints).
     deg = (
@@ -103,7 +103,7 @@ def copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(kx < ky, F.col("x")).otherwise(F.col("y")).alias("src"),
         F.when(kx < ky, F.col("y")).otherwise(F.col("x")).alias("dst"),
         F.when(kx < ky, ky).otherwise(kx).alias("dst_key"),
-    ).transform(pin)
+    ).transform(share, "checkpoint")
     # Wedges at the low vertex: (src -> v, src -> w) with v before w in
     # the orientation order; closed iff oriented edge v -> w exists.
     e1 = oriented.select(
@@ -206,12 +206,13 @@ def copurchase_item_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # distinct contraction (census: 3 lineitem scans; now 2 — the
     # basket pass and this one). Eager checkpoint, not persist — see
     # _supported_edges' note.
-    deg = pin(
+    deg = share(
         t(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
         .distinct()
         .groupBy("l_partkey")
-        .agg(F.count("*").alias("n_orders"))
+        .agg(F.count("*").alias("n_orders")),
+        "checkpoint",
     )
     da = deg.select(
         F.col("l_partkey").alias("part_a"), F.col("n_orders").alias("deg_a")

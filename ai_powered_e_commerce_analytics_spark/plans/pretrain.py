@@ -39,8 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions import portable_hash64, tokens, word_shingles
-from ..functions.core import pin
-from ..functions.core import portable_hash64_sql
+from ..functions.core import portable_hash64_sql, release, released, share
 from .spec import QuerySpec, t
 from .textops import SHINGLE_K, _SHINGLES_SQL, _TOKS_SQL
 
@@ -53,13 +52,6 @@ CHUNK_TOKENS = 40         # context-window chunk size
 CHUNK_STRIDE = 30         # 10-token overlap between consecutive chunks
 
 PACK_BUDGET = 512         # tokens per packed bin
-
-# pack_sequences_greedy arrangement cache — bounded keyed pin cache
-# (r8: same hardening as plans/quantiles.py; a second call no longer
-# evicts an unconsumed sibling's persist)
-from .pincache import PinnedPlanCache  # noqa: E402 - after constants block
-
-_PACK_ARRANGED_CACHE = PinnedPlanCache(capacity=4)
 
 MIX_GATE_BUCKETS = 10_000  # hash-gate resolution (basis points)
 
@@ -254,12 +246,8 @@ def pack_sequences_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
         counted.repartitionByRange("source", "doc_id")
         .sortWithinPartitions("source", "doc_id")
         .withColumn("pid", F.spark_partition_id())
-        .persist()
+        .transform(share, "persist")
     )
-    # Bounded pin (oldest evicted beyond capacity — repeat invocations
-    # can't accumulate unboundedly, and an unconsumed sibling keeps its
-    # persist; an evicted frame only costs recompute, never correctness).
-    _PACK_ARRANGED_CACHE.pin(arranged)
     subtotals = arranged.groupBy("pid", "source").agg(
         F.sum("n_tokens").alias("subtotal")
     ).collect()
@@ -272,7 +260,7 @@ def pack_sequences_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
         running[row["source"]] = (
             running.get(row["source"], 0) + row["subtotal"]
         )
-    bc = spark.sparkContext.broadcast(base)
+    bc = share(spark.sparkContext.broadcast(base), "persist")
 
     def _offsets(batches):
         carry: dict[object, int] = {}
@@ -646,7 +634,7 @@ def source_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_docs"),
             F.sum("n_tok").alias("src_tokens"),
         )
-        .transform(pin)
+        .transform(share, "checkpoint")
     )
     totals = per_source.agg(F.sum("src_tokens").alias("total_tokens"))
     with_p = per_source.crossJoin(F.broadcast(totals)).select(
@@ -738,7 +726,7 @@ def source_kl_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     st = (
         tok.groupBy("source", "term")
         .agg(F.count("*").alias("c_st"))
-        .transform(pin)  # 3 downstream consumers
+        .transform(share, "checkpoint")  # 3 downstream consumers
     )
     per_source = st.groupBy("source").agg(F.sum("c_st").alias("c_s"))
     per_term = st.groupBy("term").agg(F.sum("c_st").alias("c_t"))
@@ -1068,8 +1056,8 @@ def bpe_merges_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``_bpe_apply_merge`` / ``_bpe_sql``). Pair counting uses ADJACENT
     (overlapping) occurrences, Sennrich's ``get_stats`` convention.
     """
-    merges, cur = _bpe_train(spark, sf_dir)
-    cur.unpersist()
+    with released(spark):
+        merges, _ = _bpe_train(spark, sf_dir)
     return spark.createDataFrame(
         merges,
         "merge_rank int, left_sym string, right_sym string, "
@@ -1080,12 +1068,13 @@ def bpe_merges_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _bpe_train(spark: SparkSession, sf_dir: str):
     """Run the ``BPE_MERGES`` training rounds; returns ``(merges,
     final_state)`` — the merge tuples and the post-training word-state
-    frame (lineage-pinned via ``pin`` — localCheckpoint by default,
-    reliable checkpoint under the ``spark.graft.checkpointDir`` conf
-    for executor-loss-safe training on a real cluster, VERDICT r10 #3;
-    the merge-table consumer unpersists it,
-    the token-count consumer keeps it live under its returned plan)."""
-    cur = pin(_bpe_word_state(spark, sf_dir))
+    frame (a checkpoint share — localCheckpoint by default, reliable
+    checkpoint under the ``spark.graft.checkpointDir`` conf for
+    executor-loss-safe training on a real cluster, VERDICT r10 #3; the
+    merge-table consumer releases it with its scope, the token-count
+    consumer keeps it live under its returned plan). Each superseded
+    round is released as soon as the next one is materialized."""
+    cur = share(_bpe_word_state(spark, sf_dir), "checkpoint")
     merges: list[tuple] = []
     for k in range(1, BPE_MERGES + 1):
         best = _bpe_pair_argmax(cur).collect()
@@ -1093,10 +1082,10 @@ def _bpe_train(spark: SparkSession, sf_dir: str):
             break  # vocabulary fully merged before BPE_MERGES rounds
         l, r, cnt = best[0]["l"], best[0]["r"], int(best[0]["cnt"])
         merges.append((k, l, r, l + r, cnt))
-        nxt = pin(cur.select(
+        nxt = share(cur.select(
             _bpe_apply_merge(l, r).alias("syms"), "freq"
-        ))
-        cur.unpersist()
+        ), "checkpoint")
+        release(cur)
         cur = nxt
     return merges, cur
 
@@ -1287,7 +1276,7 @@ def _uni_model(spark: SparkSession, sf_dir: str):
     # references (measured: 8 documents FileScans in
     # unigram_lm_em_round's executed plan, 5 in doc_unigram_perplexity;
     # caching words + lp collapses each query to its intrinsic scans)
-    words = _uni_words(spark, sf_dir).persist()
+    words = share(_uni_words(spark, sf_dir), "persist")
     spans = words.select(
         "w", "freq", "n", F.explode(F.expr(_UNI_SPANS_EXPR)).alias("s")
     ).select(
@@ -1313,7 +1302,7 @@ def _uni_model(spark: SparkSession, sf_dir: str):
             .cast("long")
             .alias("lp"),
         )
-    ).persist()  # vocab-grain; 2 references (span attach + EM output)
+    ).transform(share, "persist")  # vocab-grain; 2 references (span + EM)
     word_sp = (
         spans.join(F.broadcast(lp.select("piece", "lp")), "piece")
         .groupBy("w", "freq", "n")

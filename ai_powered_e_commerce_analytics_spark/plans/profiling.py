@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.core import pin
+from ..functions.core import share
 from .quantiles import exact_percentiles_scalable
 from .spec import QuerySpec, cents, cents_sql, t
 
@@ -559,7 +559,7 @@ def shipping_sla_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     dv = (
         j.groupBy("o_orderpriority", "delay_days")
         .agg(F.count("*").alias("cnt"))
-        .transform(pin)
+        .transform(share, "checkpoint")
     )
     stats = dv.groupBy("o_orderpriority").agg(
         F.sum("cnt").alias("n_lineitems"),
@@ -1038,7 +1038,7 @@ def customer_revenue_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("o_custkey", cents("o_totalprice").alias("c"))
         .groupBy("o_custkey")
         .agg(F.sum("c").alias("spend_c"))
-        .transform(pin)
+        .transform(share, "checkpoint")
     )
     qs = [i / _PARETO_BUCKETS for i in range(1, _PARETO_BUCKETS)]
     names = [f"__c{i}" for i in range(1, _PARETO_BUCKETS)]
@@ -1565,7 +1565,7 @@ def sentiment_annotator_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     # executed plan; cache substitution collapses them to one)
     cells = lab.groupBy("label_a", "label_b").agg(
         F.count("*").cast("long").alias("n")
-    ).persist()
+    ).transform(share, "persist")
     rowt = cells.groupBy("label_a").agg(F.sum("n").alias("row_total"))
     colt = cells.groupBy("label_b").agg(F.sum("n").alias("col_total"))
     # pe_num = Σ_c row_c * col_c over classes present on BOTH sides (a

@@ -65,34 +65,12 @@ attempt.
 from __future__ import annotations
 
 import math
-import os
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.core import pin
-from .pincache import PinnedPlanCache
-
-# Each call pins its arranged frame + rank-base broadcast for the life
-# of the returned (lazy) plan. Bounded keyed cache (see pincache.py):
-# in-flight helper plans coexist up to capacity — the r7 single-slot
-# version silently evicted a sibling's persist mid-use (ADVICE r7).
-# Since r9 eviction DESTROYS broadcasts (pincache.py contract), so an
-# evicted-then-executed plan fails loudly instead of silently
-# re-running its arrangement. Every in-repo consumer today consumes
-# each helper plan at construction (eager localCheckpoint or immediate
-# collect/write), so at most ~2 pins are ever unconsumed; capacity 8
-# is cheap headroom for a future consumer that HOLDS several lazy
-# helper plans before executing any — the regime where the
-# destroy-on-evict contract would otherwise bite first. That consumer
-# can raise the dial via SPARK_GRAFT_PINCACHE_CAPACITY (ADVICE r9: the
-# static capacity was the only knob), and eviction logs an actionable
-# warning before Spark's bare 'Broadcast destroyed' ever surfaces.
-_ARRANGED_CACHE = PinnedPlanCache(
-    capacity=int(os.environ.get("SPARK_GRAFT_PINCACHE_CAPACITY", "8")),
-    name="quantiles._ARRANGED_CACHE",
-)
+from ..functions.core import release, share
 
 #: Widest per-group range-partition span (computed exactly, as a
 #: distributed agg over the full subtotal frame) the auto spill will
@@ -106,9 +84,7 @@ _MAX_SPILL_GROUP_SPAN = 16
 
 
 def release_arranged_cache() -> None:
-    """Unpersist every cached arranged frame / broadcast (best-effort).
-    Call between bench iterations or at session teardown."""
-    _ARRANGED_CACHE.release()
+    """No-op kept for perfbench/workloads.py:22, which imports it."""
 
 
 def exact_percentiles_scalable(
@@ -210,12 +186,12 @@ def exact_percentiles_scalable(
     # instead of a constant (guide §2 — scale-adaptive partitioning;
     # AQE coalescing merges only ADJACENT partitions, so each partition
     # stays a contiguous (group, value) range and the rank math is
-    # untouched). pin() also honours the reliable-checkpoint knob.
-    arranged = pin(
+    # untouched). share() also honours the reliable-checkpoint knob.
+    arranged = share(
         dv.repartitionByRange(*gc, value_col)
         .sortWithinPartitions(*gc, value_col)
         .withColumn("__pid", F.spark_partition_id()),
-        eager=True,
+        "checkpoint",
     )
 
     # -- 3a. per-(pid, group) subtotals -> per-partition rank bases ----
@@ -338,14 +314,12 @@ def exact_percentiles_scalable(
             # computed by the subtotal job) as the pre-contracted
             # input: the window fold re-shuffles on the group keys
             # anyway, but the corpus scan + contraction are not
-            # repaid. Pinned like the range path's plan artifacts.
-            _ARRANGED_CACHE.pin(arranged)
+            # repaid.
             return _windowed_percentiles(
                 arranged.drop("__pid"), value_col, qs, out_names, gc,
                 count_col=count_col,
             )
-        # arranged is an eager checkpoint: its blocks are reclaimed by
-        # RDD GC / the bench's persistent-RDD sweep, not unpersist()
+        release(arranged)
         raise ValueError(
             f"exact_percentiles_scalable: grain {gc} produced "
             f"{total_rows} (partition x group) subtotal rows, over the "
@@ -380,8 +354,7 @@ def exact_percentiles_scalable(
         running[k] = running.get(k, 0) + row["__sub"]
         if mean_col is not None:
             wsum[k] = wsum.get(k, 0.0) + row["__wsub"]
-    bc = spark.sparkContext.broadcast(base_map)
-    _ARRANGED_CACHE.pin(arranged, bc)
+    bc = share(spark.sparkContext.broadcast(base_map), "persist")
 
     # -- 3b. global rank interval of each value-run (zero shuffle) -----
     # The partitions are already sorted by (group, value); a pandas walk

@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions import likeness_score, with_minmax_normalized
-from ..functions.core import pin, unordered_pair_rows
+from ..functions.core import share, unordered_pair_rows
 from .spec import (
     QuerySpec,
     cents,
@@ -984,12 +984,12 @@ def copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # serves as degree table AND node table (``groupBy src`` emits each
     # node exactly once), and the ranks frame carries ``wdeg`` so each
     # round reads ndeg exactly once — see _pr_round.
-    edges = edges.repartition("src").persist()
+    edges = share(edges.repartition("src"), "persist")
     ndeg = (
         edges.groupBy("src").agg(F.sum("w").alias("wdeg")).select(
             F.col("src").alias("nsrc"), "wdeg"
         )
-    ).persist()
+    ).transform(share, "persist")
     n_nodes = ndeg.count()  # O(1) driver scalar; materializes both pins
 
     init = F.round(F.lit(float(_PR_GRID)) / F.lit(n_nodes), 0).cast("long")
@@ -1004,7 +1004,7 @@ def copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     for _ in range(PAGERANK_ITERS):
         # persist, not checkpoint: keeps hashpartitioning(node) visible
         # to the next round's routing join (see the pin-layout note)
-        ranks = _pr_round(edges, ndeg, ranks, teleport).persist()
+        ranks = share(_pr_round(edges, ndeg, ranks, teleport), "persist")
     return (
         ranks.select(
             F.col("node").alias("part_key"),
@@ -1327,7 +1327,7 @@ def events_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.where(F.col("user_id").isNotNull())
         .select("user_id", event_date(ev).alias("act_date"))
         .distinct()
-        .transform(pin)
+        .transform(share, "checkpoint")
     )
     bounds = activity.agg(
         F.min("act_date").alias("min_d"), F.max("act_date").alias("max_d")

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions import tokens
+from ..functions.core import share
 from .spec import QuerySpec, t
 from .textops import _TOKS_SQL
 
@@ -105,7 +106,7 @@ def _bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
             ],
         )
         .repartition("doc_id")
-        .persist()
+        .transform(share, "persist")
     )
     stats = toked.agg(
         F.count("doc_id").cast("double").alias("n"),
@@ -419,7 +420,7 @@ def _retrieval_leg_frames(spark: SparkSession, sf_dir: str):
         _bm25_scored(spark, sf_dir)
         .select("doc_id", "score")
         .repartition("doc_id")
-        .persist()
+        .transform(share, "persist")
     )
     e = t(spark, sf_dir, "embeddings").select(
         "vec_id",
@@ -436,7 +437,7 @@ def _retrieval_leg_frames(spark: SparkSession, sf_dir: str):
         .crossJoin(F.broadcast(q))
         .select(F.col("vec_id").alias("doc_id"), cos.alias("cos"))
         .repartition("doc_id")
-        .persist()
+        .transform(share, "persist")
     )
     lex50 = scored.orderBy(F.desc("score"), "doc_id").limit(BM25_TOP_K)
     lex_r = lex50.select(
@@ -445,7 +446,7 @@ def _retrieval_leg_frames(spark: SparkSession, sf_dir: str):
         .over(Window.orderBy(F.desc("score"), "doc_id"))
         .cast("long")
         .alias("lex_rank"),
-    ).repartition("doc_id").persist()
+    ).repartition("doc_id").transform(share, "persist")
     sem50 = semall.orderBy(F.desc("cos"), "doc_id").limit(BM25_TOP_K)
     sem_r = sem50.select(
         "doc_id",
@@ -453,7 +454,7 @@ def _retrieval_leg_frames(spark: SparkSession, sf_dir: str):
         .over(Window.orderBy(F.desc("cos"), "doc_id"))
         .cast("long")
         .alias("sem_rank"),
-    ).repartition("doc_id").persist()
+    ).repartition("doc_id").transform(share, "persist")
     return scored, semall, lex_r, sem_r
 
 
@@ -519,7 +520,7 @@ def retrieval_ndcg_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
     # once — narrow (doc_id, rel) rows
     judged = scored.join(semall, "doc_id", "left").select(
         "doc_id", rel.alias("rel")
-    ).persist()
+    ).transform(share, "persist")
     term = lambda c: F.coalesce(  # noqa: E731
         F.lit(1.0) / (F.lit(float(RRF_K)) + F.col(c).cast("double")),
         F.lit(0.0),

@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions import portable_hash64
-from ..functions.core import portable_hash64_sql
+from ..functions.core import portable_hash64_sql, share
 from .spec import QuerySpec, t
 
 SAMPLE_PCT = 10          # stratified sample keeps ~10% per source
@@ -379,7 +379,7 @@ def weighted_sample_allocated(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n"),
         F.sum("n_chars").alias("s"),
         F.sum(F.col("n_chars") * F.col("n_chars")).alias("ss"),
-    ).persist()
+    ).transform(share, "persist")
     wt = st.select(
         "source",
         F.round(
@@ -408,7 +408,7 @@ def weighted_sample_allocated(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).cast("long"),
         )
         .select("source", "k_alloc")
-        .persist()
+        .transform(share, "persist")
     )
     max_k = int(alloc.agg(F.max("k_alloc")).collect()[0][0] or 0)
 

@@ -27,7 +27,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.core import pin
+from ..functions.core import share
 from .spec import QuerySpec, t
 
 EMBED_DIM = 64
@@ -1772,10 +1772,11 @@ def embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # OPTIMIZATION_r16.md for the executing-scan census). The eager
     # checkpoint is one extra tiny job and makes the corpus pass
     # execute exactly once (r15 optimization).
-    sums = pin(
+    sums = share(
         covariance_partials_batched(e)
         .groupBy("i", "j")
-        .agg(F.sum("v").alias("v"))
+        .agg(F.sum("v").alias("v")),
+        "checkpoint",
     )
     return covariance_from_sums(sums)
 
@@ -3196,7 +3197,7 @@ def semantic_dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned = (
         _assign_batched(e, "emb", [("vec_id", "long"), ("emb", "array<double>")], cents)
         .select("vec_id", F.col("cid").alias("cluster_id"), "emb")
-        .transform(pin)
+        .transform(share, "checkpoint")
     )
     # Witness pass vectorized (r15 optimization): the earlier
     # cid-equi self-join evaluated the interpreted-HOF dot on every

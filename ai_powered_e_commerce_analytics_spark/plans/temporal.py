@@ -41,7 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.core import pin
+from ..functions.core import share
 from .spec import QuerySpec, cents, cents_sql, event_ts_us, t
 
 _HOUR_US = 3_600_000_000
@@ -261,7 +261,7 @@ def events_dwell_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("gap_us").isNotNull())
         # eager localCheckpoint: the gap frame feeds the stats agg AND
         # the percentile pass — one events scan + one user window.
-        .transform(pin)
+        .transform(share, "checkpoint")
     )
     stats = gaps.groupBy("event_type").agg(
         F.count("*").alias("n_gaps"),

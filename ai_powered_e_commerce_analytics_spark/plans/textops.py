@@ -25,7 +25,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions import jaccard, portable_hash64, tokens, word_shingles
-from ..functions.core import pin, portable_hash64_sql, unordered_pair_rows
+from ..functions.core import (
+    portable_hash64_sql,
+    release,
+    share,
+    unordered_pair_rows,
+)
 from .spec import QuerySpec, t
 
 STOPWORDS = ("the", "a", "of", "and", "in")
@@ -170,7 +175,7 @@ def lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         lang_id_heuristic(spark, sf_dir)
         .groupBy("lang", "predicted_lang")
         .agg(F.count("*").alias("n_docs"))
-        .transform(pin)  # 3 consumers; cells are |langs|² rows
+        .transform(share, "checkpoint")  # 3 consumers; cells are |langs|² rows
     )
     truth = cells.groupBy("lang").agg(F.sum("n_docs").alias("n_true"))
     pred = cells.groupBy("predicted_lang").agg(
@@ -407,7 +412,7 @@ def _lsh_hashed(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("hs"),
         )
         .repartition("doc_id")
-        .persist()
+        .transform(share, "persist")
     )
 
 
@@ -717,7 +722,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scans). Doc-grain (doc_id, simhash) longs; eager checkpoint so the
     # materialized layout is AQE-coalesced (a persist froze the 32
     # pre-AQE partitions and measured slower — OPTIMIZATION_r16.md).
-    docs = pin(_simhash_docs(t(spark, sf_dir, "documents")))
+    docs = share(_simhash_docs(t(spark, sf_dir, "documents")), "checkpoint")
     usig = docs.select("simhash").distinct()
     a, b = usig.alias("a"), usig.alias("b")
     sig_pairs = (
@@ -900,9 +905,9 @@ def hamming_band_pairs(
     AQE-final coalesced layout once (partitioning visibility is not
     load-bearing here — every consumer re-keys by band or endpoint).
     """
-    docs = pin(items.select(
+    docs = share(items.select(
         F.col(id_col).alias("__id"), F.col(sig_col).alias("__sig")
-    ))
+    ), "checkpoint")
     usig = docs.select("__sig").distinct()
     bands = _band_rows(usig, band_bits, n_bands)
     # Guard ordering matters: the size check must complete BEFORE any
@@ -1267,7 +1272,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         terms.groupBy("doc_id", "term")
         .agg(F.count("*").alias("tf"))
         .repartition("term")
-        .persist()
+        .transform(share, "persist")
     )
     df_ = (
         tf.groupBy("term")
@@ -1394,9 +1399,11 @@ def _connected_components(pairs: DataFrame) -> DataFrame:
     round even though the cache keeps execution flat; past ~8 rounds the
     exponential plan tree OOMs the driver just rendering its explain
     string. The checkpoint truncates lineage to the stored partitions,
-    making per-round plan size O(1). Pinning goes through
-    ``functions.core.pin``: localCheckpoint by default (executor-local,
-    zero DFS traffic — but unrecoverable after an executor loss), or a
+    making per-round plan size O(1), and each superseded round is
+    released as soon as the next is stored. Each round is a checkpoint
+    share (``functions.core.share``): localCheckpoint by default
+    (executor-local, zero DFS traffic — but unrecoverable after an
+    executor loss), or a
     reliable ``checkpoint(dir)`` when the session sets
     ``spark.graft.checkpointDir`` — the production form on a
     1000-executor cluster where a node loss must not kill a long job
@@ -1419,29 +1426,30 @@ def _connected_components(pairs: DataFrame) -> DataFrame:
     # Verified to fire on BOTH pin paths (localCheckpoint and reliable
     # checkpoint); the sum is the same associative exact-long fold over
     # the same rows, so the fixpoint test sees identical values.
-    edges = _cc_edges(pairs).repartition("dst").persist()
+    edges = share(_cc_edges(pairs).repartition("dst"), "persist")
     seed_obs = Observation()
-    labels = pin(
+    labels = share(
         _cc_seed(edges).observe(seed_obs, F.sum("label").alias("s")),
-        eager=True,
+        "checkpoint",
     )
     prev_sum = seed_obs.get["s"]
     for _ in range(20):  # >= log2(diameter) rounds; dup clusters are shallow
         obs = Observation()
-        new_labels = pin(
+        new_labels = share(  # checkpoint: truncate lineage
             _cc_round(edges, labels).observe(
                 obs, F.sum("label").alias("s")
             ),
-            eager=True,  # truncate lineage
+            "checkpoint",
         )
         cur_sum = obs.get["s"]
+        release(labels)  # superseded round, already read by new_labels
         labels = new_labels
         if cur_sum == prev_sum:  # labels are monotone non-increasing
             break
         prev_sum = cur_sum
     else:  # pragma: no cover
         raise RuntimeError("connected components did not converge")
-    edges.unpersist()
+    release(edges)
     return labels
 
 
@@ -1797,14 +1805,14 @@ def term_cooccurrence_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             F.array_sort(F.array_distinct(tokens("text"))).alias("dt"),
         )
-        .transform(pin)
+        .transform(share, "checkpoint")
     )
     total = dt.agg(F.count("doc_id").alias("n_docs"))
     marg = (
         dt.select(F.explode("dt").alias("term"))
         .groupBy("term")
         .agg(F.count("*").alias("df"))
-        .persist()
+        .transform(share, "persist")
     )
     pairs = (
         unordered_pair_rows(dt, "dt", "term_a", "term_b")

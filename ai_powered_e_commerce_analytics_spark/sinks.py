@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from .functions.core import pin
+from .functions.core import released, share
 
 
 def write_gold_snapshot(df: DataFrame, gold_dir: str, *, fmt: str = "json") -> str:
@@ -300,8 +300,8 @@ def _occ_commit_loop(
     retry on a lost race. The read entries are replaced by the bucket
     dirs the staged tx dir holds, so a bucket whose every row was
     deleted drops out of the manifest instead of dangling. ``snapshot``
-    localCheckpoints the bucketed change set so all its uses see one
-    deterministic frame.
+    shares the bucketed change set as a checkpoint so all its uses see
+    one deterministic frame; each attempt's scope releases it.
 
     A new table starts at ``num_buckets``. When the staged bytes per
     bucket dir exceed ``spark.sql.files.maxPartitionBytes`` the committed
@@ -311,95 +311,83 @@ def _occ_commit_loop(
     from .hadoop import hadoop_fs, hadoop_path
 
     fs = hadoop_fs(spark, table_path)
-    snap_rdd_ids: set[int] = set()
     max_bucket_bytes = (
         spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
     )
-
-    def _drop_snapshot_blocks() -> None:
-        # Unpersist the PREVIOUS attempt's localCheckpoint blocks before
-        # re-merging — without this every contention retry pins another
-        # copy of the change set in executor storage for the life of the
-        # session. Only ids that appeared across OUR checkpoint call are
-        # touched (never a caller's cached frames).
-        for rid, rdd in spark.sparkContext._jsc.getPersistentRDDs().items():
-            if rid in snap_rdd_ids:
-                rdd.unpersist(False)
-        snap_rdd_ids.clear()
-
     for _attempt in range(max_attempts):
-        version, manifest = _latest_manifest(spark, fs, table_path)
-        if manifest is None:
-            modulus, entries = num_buckets, []
-        else:
-            modulus, entries = _manifest_entries(manifest)
+        # One scope per attempt: its snapshot is released once the
+        # attempt commits or loses the race, so contention retries never
+        # pin one copy of the change set each for the session's life.
+        with released(spark):
+            version, manifest = _latest_manifest(spark, fs, table_path)
+            if manifest is None:
+                modulus, entries = num_buckets, []
+            else:
+                modulus, entries = _manifest_entries(manifest)
 
-        bucket = F.pmod(F.xxhash64(F.col(key)), F.lit(modulus)).cast("int")
-        bucketed = changes.withColumn("__bucket", bucket)
-        if snapshot:
-            pre = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
-            bucketed = bucketed.transform(pin)
-            snap_rdd_ids = (
-                set(spark.sparkContext._jsc.getPersistentRDDs().keys()) - pre
+            bucket = F.pmod(F.xxhash64(F.col(key)), F.lit(modulus)).cast("int")
+            bucketed = changes.withColumn("__bucket", bucket)
+            if snapshot:
+                bucketed = share(bucketed, "checkpoint")
+
+            old, read = None, set()
+            if entries:  # a first commit has no old data to route to
+                touched = {
+                    r[0]
+                    for r in bucketed.select("__bucket").distinct().collect()
+                }
+                # Each touched bucket h lies in at most one entry: the one
+                # with h % m == r (entries are disjoint; m divides M).
+                moduli = {m for m, _, _ in entries}
+                hit = {(m, h % m) for h in touched for m in moduli}
+                read = {e for e in entries if e[:2] in hit}
+            if read:
+                # Entry dirs are read directly (no partition discovery);
+                # recompute __bucket at M from the key — same
+                # deterministic hash. mergeSchema + allowMissingColumns =
+                # schema EVOLUTION (see upsert_parquet docstring).
+                old = (
+                    spark.read.option("mergeSchema", "true")
+                    .parquet(*[f"{table_path}/{rel}" for _, _, rel in read])
+                    .withColumn("__bucket", bucket)
+                )
+            merged = merge_with_old(bucketed, old)
+            txid = uuid.uuid4().hex[:12]
+            tx_dir = f"{table_path}/data/tx_{txid}"
+            (
+                merged.repartition("__bucket")
+                .write.mode("overwrite")
+                .partitionBy("__bucket")
+                .parquet(tx_dir)
             )
 
-        old, read = None, set()
-        if entries:  # a first commit has no old data to route to
-            touched = {
-                r[0] for r in bucketed.select("__bucket").distinct().collect()
+            staged = _staged_bucket_bytes(spark, fs, tx_dir)
+            new_entries = [e for e in entries if e not in read] + [
+                (modulus, b, f"data/tx_{txid}/__bucket={b}") for b in staged
+            ]
+            new_modulus = modulus
+            if staged:
+                per_dir = sum(staged.values()) / len(staged)
+                while per_dir > max_bucket_bytes:
+                    per_dir /= 2
+                    new_modulus *= 2
+            new_manifest = {
+                "modulus": new_modulus,
+                "entries": [
+                    {"m": m, "r": r, "path": rel}
+                    for m, r, rel in sorted(new_entries)
+                ],
             }
-            # Each touched bucket h lies in at most one entry: the one
-            # with h % m == r (entries are disjoint; m divides M).
-            moduli = {m for m, _, _ in entries}
-            hit = {(m, h % m) for h in touched for m in moduli}
-            read = {e for e in entries if e[:2] in hit}
-        if read:
-            # Entry dirs are read directly (no partition discovery);
-            # recompute __bucket at M from the key — same deterministic
-            # hash. mergeSchema + allowMissingColumns = schema EVOLUTION
-            # (see upsert_parquet docstring).
-            old = (
-                spark.read.option("mergeSchema", "true")
-                .parquet(*[f"{table_path}/{rel}" for _, _, rel in read])
-                .withColumn("__bucket", bucket)
-            )
-        merged = merge_with_old(bucketed, old)
-        txid = uuid.uuid4().hex[:12]
-        tx_dir = f"{table_path}/data/tx_{txid}"
-        (
-            merged.repartition("__bucket")
-            .write.mode("overwrite")
-            .partitionBy("__bucket")
-            .parquet(tx_dir)
-        )
-
-        staged = _staged_bucket_bytes(spark, fs, tx_dir)
-        new_entries = [e for e in entries if e not in read] + [
-            (modulus, b, f"data/tx_{txid}/__bucket={b}") for b in staged
-        ]
-        new_modulus = modulus
-        if staged:
-            per_dir = sum(staged.values()) / len(staged)
-            while per_dir > max_bucket_bytes:
-                per_dir /= 2
-                new_modulus *= 2
-        new_manifest = {
-            "modulus": new_modulus,
-            "entries": [
-                {"m": m, "r": r, "path": rel}
-                for m, r, rel in sorted(new_entries)
-            ],
-        }
-        if _before_commit is not None:
-            _before_commit()
-        if _commit_manifest(spark, fs, table_path, version + 1, new_manifest):
-            _gc_upsert_table(spark, fs, table_path, version + 1, new_manifest)
-            _drop_snapshot_blocks()  # staged data is committed to disk
-            return
-        # Lost the version CAS to a concurrent writer: the merge is based
-        # on a stale table state. Drop the staged attempt and re-merge.
-        fs.delete(hadoop_path(spark, tx_dir), True)
-        _drop_snapshot_blocks()
+            if _before_commit is not None:
+                _before_commit()
+            nxt = version + 1
+            if _commit_manifest(spark, fs, table_path, nxt, new_manifest):
+                _gc_upsert_table(spark, fs, table_path, nxt, new_manifest)
+                return
+            # Lost the version CAS to a concurrent writer: the merge is
+            # based on a stale table state. Drop the staged attempt and
+            # re-merge.
+            fs.delete(hadoop_path(spark, tx_dir), True)
     raise RuntimeError(
         f"{op_name} at {table_path} lost the commit race {max_attempts} "
         "times — giving up (sustained writer contention)"

@@ -34,7 +34,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.window import Window
 
-from ..functions.core import pin, unordered_pair_rows
+from ..functions.core import released, share, unordered_pair_rows
 from ..operators.enrich import (
     StubLLMClient,
     assign_item_ids,
@@ -137,15 +137,13 @@ def silver_to_gold_stream(
         if batch.isEmpty():
             return
         # J1: sentiment appended in place (data_transformer.py:150).
-        gold = enrich_sentiments(batch, client_factory).cache()
-        try:
+        with released(spark):
+            gold = share(enrich_sentiments(batch, client_factory), "persist")
             upsert_kpi_tables(spark, all_kpis(gold), kpi_dir)
             # overwrite, not append: batch_id makes the dir deterministic,
             # so a crash-replay of the same micro-batch rewrites it
             # idempotently instead of appending a duplicate copy.
             gold.write.mode("overwrite").json(f"{gold_dir}/batch_{batch_id}")
-        finally:
-            gold.unpersist()
 
     writer = silver.writeStream.option("checkpointLocation", checkpoint_dir)
     writer = writer.foreachBatch(process)
@@ -502,16 +500,17 @@ def documents_ingest_stream(
             survivors = survivors.join(
                 index_hits(live, probe), "doc_id", "left_anti"
             )
-        # pin: survivors feeds both the corpus write and the key
-        # append — one compute, and the hygiene knob applies
-        survivors = pin(survivors, eager=True)
-        survivors.write.mode("overwrite").parquet(
-            f"{out_dir}/batch_id={batch_id}"
-        )
-        accepted_keys = keyed.join(
-            survivors.select("doc_id"), "doc_id", "left_semi"
-        ).select("band", "band_sig")
-        append_corpus_keys(spark, corpus_index_dir, accepted_keys, token)
+        # checkpoint: survivors feeds both the corpus write and the key
+        # append — one compute, and the reliable-checkpoint knob applies
+        with released(spark):
+            survivors = share(survivors, "checkpoint")
+            survivors.write.mode("overwrite").parquet(
+                f"{out_dir}/batch_id={batch_id}"
+            )
+            accepted_keys = keyed.join(
+                survivors.select("doc_id"), "doc_id", "left_semi"
+            ).select("band", "band_sig")
+            append_corpus_keys(spark, corpus_index_dir, accepted_keys, token)
 
     writer = deduped.writeStream.option("checkpointLocation", checkpoint_dir)
     writer = writer.foreachBatch(process)

@@ -251,23 +251,18 @@ def _isolate_one(name: str) -> None:
     number holds its anchor while its in-suite number drifted is
     machine state, not a plan regression (memory:
     bench-noise-discipline)."""
+    from ai_powered_e_commerce_analytics_spark.functions.core import released
     from ai_powered_e_commerce_analytics_spark.plans import query_map
-    from ai_powered_e_commerce_analytics_spark.plans.quantiles import (
-        release_arranged_cache,
-    )
     from ai_powered_e_commerce_analytics_spark.session import get_spark
 
     spark = get_spark(app_name=f"bench-isolate-{name}")
     queries = query_map()
 
     def run(q: str) -> None:
-        queries[q](spark, SF_DIR).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            rdd.unpersist(False)
-        spark.catalog.clearCache()
-        release_arranged_cache()
+        with released(spark):
+            queries[q](spark, SF_DIR).write.format("noop").mode(
+                "overwrite"
+            ).save()
 
     try:
         run("tpch_q1_pricing_summary")  # JVM + parquet-footer warmup
@@ -350,10 +345,8 @@ def isolate_main(names: list[str]) -> None:
 
 
 def main() -> None:
+    from ai_powered_e_commerce_analytics_spark.functions.core import released
     from ai_powered_e_commerce_analytics_spark.plans import query_map
-    from ai_powered_e_commerce_analytics_spark.plans.quantiles import (
-        release_arranged_cache,
-    )
     from ai_powered_e_commerce_analytics_spark.session import get_spark
 
     probe = cpu_probe_s()  # host-state datum, BEFORE the JVM spins up
@@ -361,35 +354,15 @@ def main() -> None:
     queries = query_map()
 
     def run(name: str) -> None:
-        df = queries[name](spark, SF_DIR)
-        df.write.format("noop").mode("overwrite").save()
-        # localCheckpoint hygiene: iterative queries (CC, k-means,
-        # PageRank, RFM) pin materialized RDD blocks that outlive the
-        # query. Across a 50-query suite the leaked blocks crowd the
-        # unified memory region until broadcast builds fail and every
-        # later query slows down (observed: a mid-suite OOM degraded the
-        # whole tail by ~15%). Safe to drop HERE because the query's
-        # consumption is complete.
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            rdd.unpersist(False)
-        # Cache hygiene (optimization r16): the in-plan .persist()
-        # contractions register CacheManager entries keyed on the
-        # LOGICAL plan. The RDD sweep above already drops their blocks
-        # (no data survives between runs — every iteration recomputes
-        # from parquet), but a surviving ENTRY would substitute an
-        # InMemoryRelation into any LATER query containing an equal
-        # sub-plan, changing that query's plan shape mid-suite vs
-        # isolated. clearCache() drops the entries so each query plans
-        # exactly as it does in a fresh session.
-        spark.catalog.clearCache()
-        # Broadcast hygiene (VERDICT r8): the quantile helper pins a
-        # rank-base broadcast per call; the RDD loop above covers its
-        # persisted frame but not the broadcast, whose driver-side
-        # metadata otherwise accumulates across the suite. The release
-        # destroys evicted broadcasts; safe here because the query's
-        # consumption is complete and every helper call in the NEXT
-        # iteration re-pins fresh artifacts.
-        release_arranged_cache()
+        # The scope frees what the query shared once its consumption is
+        # complete. Leaked checkpoint blocks crowd the unified memory
+        # region until broadcast builds fail (observed: a mid-suite OOM
+        # slowed the whole tail by ~15%), and a surviving CacheManager
+        # entry would swap an InMemoryRelation into a later query's equal
+        # sub-plan, so that query would plan unlike it does in isolation.
+        with released(spark):
+            df = queries[name](spark, SF_DIR)
+            df.write.format("noop").mode("overwrite").save()
 
     # Generated-class compilations (Janino), counted per iteration into
     # BENCH_DETAIL.json, and per query from the second iteration on

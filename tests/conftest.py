@@ -20,16 +20,16 @@ def spark():
 
 @pytest.fixture(autouse=True)
 def _checkpoint_hygiene(request):
-    """Drop localCheckpoint blocks left by iterative queries (CC,
-    k-means, PageRank, RFM) after each test — the session is shared
-    across ~200 tests and leaked blocks would otherwise crowd the
-    unified memory region (same hygiene as bench.py's per-query
-    unpersist). Only runs when the test actually used the session."""
-    yield
-    if "spark" in request.fixturenames:
-        spark = request.getfixturevalue("spark")
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            rdd.unpersist(False)
+    """Release what each test shared (the session is shared across ~600
+    tests, and leaked blocks would crowd the unified memory region), as
+    bench.py does per query. Only scopes tests that use the session."""
+    if "spark" not in request.fixturenames:
+        yield
+        return
+    from ai_powered_e_commerce_analytics_spark.functions.core import released
+
+    with released(request.getfixturevalue("spark")):
+        yield
 
 
 @pytest.fixture(scope="session")

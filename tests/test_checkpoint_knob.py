@@ -1,6 +1,6 @@
 """Reliable-checkpoint knob for the iterative trainers (VERDICT r10 #3).
 
-``functions.core.pin`` defaults to ``localCheckpoint`` (right for
+``share(df, "checkpoint")`` defaults to ``localCheckpoint`` (right for
 local[n]; lineage severed, unrecoverable after an executor loss) and
 switches to a reliable ``checkpoint(dir)`` when the session sets
 ``spark.graft.checkpointDir`` — the form a long training job needs on
@@ -17,7 +17,8 @@ import pytest
 
 from ai_powered_e_commerce_analytics_spark.functions.core import (
     RELIABLE_CHECKPOINT_CONF,
-    pin,
+    release,
+    share,
 )
 from ai_powered_e_commerce_analytics_spark.plans.pretrain import (
     bpe_merges_topn,
@@ -84,7 +85,7 @@ def test_cc_labels_identical_through_reliable_path(spark, reliable_dir):
 
 def test_pin_default_is_local(spark):
     # no conf set -> localCheckpoint semantics (no checkpoint dir needed)
-    df = pin(spark.range(5))
+    df = share(spark.range(5), "checkpoint")
     assert df.count() == 5
 
 
@@ -92,7 +93,7 @@ def test_semdedup_identical_through_reliable_path(spark, reliable_dir):
     """r12 (VERDICT r11 #5): semantic_dedup_semdedup's assignment
     materialization was a bare ``localCheckpoint`` — unrecoverable on a
     real cluster during the downstream pair join. Now routed through
-    ``pin``: the knob must cover it, results identical."""
+    ``share``: the knob must cover it, results identical."""
     from ai_powered_e_commerce_analytics_spark.plans.simsearch import (
         semantic_dedup_semdedup,
     )
@@ -112,28 +113,58 @@ def test_semdedup_identical_through_reliable_path(spark, reliable_dir):
 
 
 def test_no_bare_localcheckpoint_outside_pin():
-    """Every lineage-severing materialization must flow through ``pin``
-    so ``spark.graft.checkpointDir`` covers the whole family (VERDICT
-    r11 #5). Tokenize the package (comments/strings dropped) and assert
-    ``localCheckpoint`` appears in CODE only inside functions/core.py."""
+    """Every materialization and release flows through the sharing seam
+    (``share`` / ``release`` / ``released`` in functions/core.py), so
+    ``spark.graft.checkpointDir`` covers every checkpoint and a scope
+    frees every share (VERDICT r11 #5). Tokenize the package (comments
+    and strings dropped) and assert that no ``.persist(``, ``.cache(``,
+    ``.checkpoint(``, ``.localCheckpoint(`` or ``.unpersist(`` call and
+    no ``getPersistentRDDs`` appears in CODE outside that module."""
     import io
     import pathlib
     import tokenize
 
     import ai_powered_e_commerce_analytics_spark as pkg
 
+    calls = {"persist", "cache", "checkpoint", "localCheckpoint", "unpersist"}
     root = pathlib.Path(pkg.__file__).parent
     offenders = []
     for py in root.rglob("*.py"):
         if py.relative_to(root).as_posix() == "functions/core.py":
             continue
-        code_tokens = [
+        toks = [
             tok.string
             for tok in tokenize.generate_tokens(
                 io.StringIO(py.read_text()).readline
             )
-            if tok.type == tokenize.NAME
+            if tok.type in (tokenize.NAME, tokenize.OP)
         ]
-        if "localCheckpoint" in code_tokens:
-            offenders.append(str(py))
-    assert not offenders, f"bare localCheckpoint in: {offenders}"
+        for k, name in enumerate(toks):
+            if name == "getPersistentRDDs" or (
+                name in calls
+                and toks[k - 1] == "."
+                and toks[k + 1 : k + 2] == ["("]
+            ):
+                offenders.append(f"{py.relative_to(root)}: {name}")
+    assert not offenders, f"materialization outside the seam: {offenders}"
+
+
+def _persisted(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def test_release_frees_a_checkpoint_share(spark):
+    # unpersist() is a no-op on a checkpointed frame (it is not in the
+    # CacheManager); release() must free the RDD behind its root
+    before = _persisted(spark)
+    df = share(spark.range(5), "checkpoint")
+    assert len(_persisted(spark) - before) == 1
+    release(df)
+    assert _persisted(spark) == before
+
+
+def test_bpe_merges_leave_no_checkpoints(spark):
+    # every superseded training round and the final state are freed
+    before = _persisted(spark)
+    assert bpe_merges_topn(spark, SF_DIR).count() > 0
+    assert _persisted(spark) == before

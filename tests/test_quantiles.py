@@ -232,123 +232,60 @@ def test_counts_col_path_matches_raw_path(spark):
     _assert_same(pre, _exact(df, "v", ("g",)), ("g",))
 
 
-def test_interleaved_helper_calls_keep_both_persists(spark):
-    # ADVICE r7: the single-slot cache made call B evict call A's
-    # persist before A was consumed. The keyed bounded cache keeps both
-    # in-flight plans pinned; both must produce exact values.
-    from ai_powered_e_commerce_analytics_spark.plans import quantiles as Q
+def _persisted(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
 
-    Q.release_arranged_cache()
+
+def test_interleaved_helper_calls_keep_both_persists(spark):
+    # ADVICE r7: a second helper call must not free the first call's
+    # arrangement before it is consumed. Two in-flight helper plans in
+    # one scope are both exact; the scope frees both on exit.
+    from ai_powered_e_commerce_analytics_spark.functions.core import released
+
+    before = _persisted(spark)
     a = spark.createDataFrame([(i,) for i in range(101)], "v long")
     b = spark.createDataFrame([(i * 3,) for i in range(57)], "v long")
-    got_a = exact_percentiles_scalable(a, "v", QS, NAMES)  # build A
-    got_b = exact_percentiles_scalable(b, "v", QS, NAMES)  # build B
-    assert len(Q._ARRANGED_CACHE) == 2
-    # optimization r16: the arranged frame is an eager CHECKPOINT (so
-    # AQE sizes its partitions), not a .persist() — storageLevel on the
-    # returned frame reads NONE, but the materialization guarantee is
-    # strictly stronger: the plan root is the already-computed RDD
-    # itself, so call A's arrangement can never be silently re-run
-    for df, _ in Q._ARRANGED_CACHE.snapshot():
-        assert df._jdf.queryExecution().analyzed().toString().startswith(
-            "LogicalRDD"
-        )
-    # consume A AFTER B was built — its persist must still be live
-    _assert_same(got_a, _exact(a, "v"))
-    _assert_same(got_b, _exact(b, "v"))
-    Q.release_arranged_cache()
-    assert len(Q._ARRANGED_CACHE) == 0
+    with released(spark):
+        got_a = exact_percentiles_scalable(a, "v", QS, NAMES)  # build A
+        got_b = exact_percentiles_scalable(b, "v", QS, NAMES)  # build B
+        # optimization r16: each arranged frame is an eager CHECKPOINT
+        # (so AQE sizes its partitions), already materialized at build
+        assert len(_persisted(spark) - before) == 2
+        # consume A AFTER B was built — its arrangement must still be live
+        _assert_same(got_a, _exact(a, "v"))
+        _assert_same(got_b, _exact(b, "v"))
+    assert _persisted(spark) == before
 
 
-def test_cache_capacity_bounds_pinned_frames(spark):
-    from ai_powered_e_commerce_analytics_spark.plans import quantiles as Q
+def test_evicted_broadcasts_are_destroyed(spark):
+    # VERDICT r8: unpersist alone leaves driver-side broadcast metadata
+    # alive until GC. Scope exit must destroy shared broadcasts without
+    # blocking, and free shared frames, persisted and checkpointed.
+    from pyspark import StorageLevel
 
-    Q.release_arranged_cache()
-    frames = []
-    for k in range(Q._ARRANGED_CACHE.capacity + 2):
-        df = spark.createDataFrame([(i + k,) for i in range(10)], "v long")
-        frames.append((df, exact_percentiles_scalable(df, "v", QS, NAMES)))
-    assert len(Q._ARRANGED_CACHE) == Q._ARRANGED_CACHE.capacity
-    # VERDICT r8 hygiene changed the eviction contract: an evicted
-    # entry's BROADCAST is destroyed (not just unpersisted), so the
-    # evicted plans fail LOUDLY on consumption instead of silently
-    # re-running their arrangement; live entries compute exactly.
-    n_evicted = len(frames) - Q._ARRANGED_CACHE.capacity
-    for df, got in frames[n_evicted:]:
-        _assert_same(got, _exact(df, "v"))
-    for df, got in frames[:n_evicted]:
-        with pytest.raises(Exception, match="(?i)broadcast"):
-            got.collect()
-    Q.release_arranged_cache()
-
-
-def test_evicted_broadcasts_are_destroyed():
-    # VERDICT r8: unpersist alone leaves driver-side broadcast
-    # metadata alive until GC; eviction must also destroy items that
-    # expose destroy(), and must NOT try to destroy plain persists.
-    from ai_powered_e_commerce_analytics_spark.plans.pincache import (
-        PinnedPlanCache,
+    from ai_powered_e_commerce_analytics_spark.functions.core import (
+        released,
+        share,
     )
 
     class FakeBroadcast:
-        unpersisted = destroyed = False
-
-        def unpersist(self):
-            self.unpersisted = True
+        blocking = None
 
         def destroy(self, blocking=True):
-            assert blocking is False  # never stall eviction
-            self.destroyed = True
+            self.blocking = blocking
 
-    class FakePersist:
-        unpersisted = False
-
-        def unpersist(self):
-            self.unpersisted = True
-
-    cache = PinnedPlanCache(capacity=1)
-    df, bc = FakePersist(), FakeBroadcast()
-    cache.pin(df, bc)
-    df2, bc2 = FakePersist(), FakeBroadcast()
-    cache.pin(df2, bc2)  # evicts (df, bc)
-    assert df.unpersisted and bc.unpersisted and bc.destroyed
-    assert not df2.unpersisted and not bc2.destroyed
-    cache.release()
-    assert df2.unpersisted and bc2.unpersisted and bc2.destroyed
-
-
-def test_eviction_of_broadcast_logs_actionable_warning(caplog):
-    # ADVICE r9: the first symptom of destroy-on-evict is Spark's bare
-    # 'Broadcast destroyed' on a much-later action — eviction must leave
-    # the actionable cause (release_arranged_cache / capacity knob) in
-    # the log, and a release() (deliberate teardown) must NOT warn.
-    import logging
-
-    from ai_powered_e_commerce_analytics_spark.plans.pincache import (
-        PinnedPlanCache,
-    )
-
-    class FakeBroadcast:
-        def unpersist(self):
-            pass
-
-        def destroy(self, blocking=True):
-            pass
-
-    cache = PinnedPlanCache(capacity=1, name="test-cache")
-    with caplog.at_level(logging.WARNING):
-        cache.pin(FakeBroadcast())
-        assert not caplog.records  # under capacity: silent
-        cache.pin(FakeBroadcast())  # evicts the first
-    msgs = [r.getMessage() for r in caplog.records]
-    assert any(
-        "SPARK_GRAFT_PINCACHE_CAPACITY" in m and "release_arranged_cache" in m
-        for m in msgs
-    )
-    caplog.clear()
-    with caplog.at_level(logging.WARNING):
-        cache.release()
-    assert not caplog.records
+    before = _persisted(spark)
+    with released(spark):
+        fake = share(FakeBroadcast(), "persist")
+        bc = share(spark.sparkContext.broadcast({1: 2}), "persist")
+        kept = share(spark.range(10), "persist")
+        kept.count()
+        share(spark.range(10), "checkpoint")
+        assert len(_persisted(spark) - before) == 2
+    assert fake.blocking is False  # never stall the scope's exit
+    assert not bc._jbroadcast.isValid()
+    assert kept.storageLevel == StorageLevel.NONE
+    assert _persisted(spark) == before
 
 
 def test_grain_guard_raises_on_high_cardinality(spark):

@@ -13,6 +13,7 @@ import duckdb
 import pandas as pd
 import pytest
 
+from ai_powered_e_commerce_analytics_spark.functions.core import released
 from ai_powered_e_commerce_analytics_spark.plans import QUERIES
 from ai_powered_e_commerce_analytics_spark.schemas import TESTDATA_TABLES
 
@@ -67,9 +68,21 @@ def frames_equal(a: pd.DataFrame, b: pd.DataFrame) -> list[str]:
     return errs
 
 
+def _shares(spark) -> tuple[set[int], bool]:
+    """The session's persisted RDD ids and whether its CacheManager is
+    empty: what a query shared and did not release shows in one."""
+    return (
+        set(spark.sparkContext._jsc.getPersistentRDDs().keys()),
+        spark._jsparkSession.sharedState().cacheManager().isEmpty(),
+    )
+
+
 @pytest.mark.parametrize("spec", QUERIES, ids=lambda s: s.name)
 def test_query_matches_oracle(spark, oracle, spec):
-    got = spec.spark(spark, SF_DIR).toPandas()
+    before = _shares(spark)
+    with released(spark):
+        got = spec.spark(spark, SF_DIR).toPandas()
+    assert _shares(spark) == before, f"{spec.name} left shares behind"
     if spec.oracle is None:
         assert len(got) >= 0  # rows-only check (driver's weak gate)
         return

@@ -687,7 +687,11 @@ def test_pretrain_pipeline_end_to_end(spark, tmp_path):
     from ai_powered_e_commerce_analytics_spark.pipeline import run_pretrain_pipeline
 
     out = str(tmp_path / "prep")
+    before = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
     stats = run_pretrain_pipeline(spark, "/root/testdata/sf0.001", out)
+    # the run releases what it and the stages it composes shared
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keys()) == before
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
     assert stats["total_docs"] == 500
     # each gate can only shrink the set; the composition is the smallest
