@@ -9,8 +9,17 @@ operator's 25-row LLM contract (SURVEY.md §2.10 F1).
 
 from __future__ import annotations
 
+import atexit
+import contextlib
+import hashlib
+import json
 import os
+import re
+import shutil
+import subprocess
 
+from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
 #: The reference pins 25-row batches end-to-end into the LLM
@@ -36,6 +45,174 @@ LOCAL_CHECKPOINT_MANAGER = (
     "FileSystemBasedCheckpointFileManager"
 )
 
+#: (gateway process, archive) of each driver JVM this process launched to
+#: record a class-data-sharing archive, until the archive is sealed.
+_RECORDING: list[tuple[subprocess.Popen, str]] = []
+
+
+def class_archive_dir() -> str:
+    """Where the driver JVM's class-data-sharing archive lives (see the note
+    in get_spark)."""
+    cache = os.environ.get("XDG_CACHE_HOME") or os.path.join(os.path.expanduser("~"), ".cache")
+    return os.path.join(cache, "ai_powered_e_commerce_analytics_spark")
+
+
+def _stat(path: str) -> list[int] | None:
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    return [st.st_ino, st.st_size, st.st_mtime_ns]
+
+
+def _sealed(archive: str) -> bool:
+    """Whether ``archive`` is the file its recording JVM wrote, untouched
+    since: the JVM maps an archive without checking its length, and one cut
+    short crashes it at launch."""
+    try:
+        with open(archive + ".seal") as fh:
+            return json.load(fh) == _stat(archive)
+    except (OSError, ValueError):
+        return False
+
+
+def _seal_recorded(wait: bool = False) -> None:
+    """Seal each archive whose recording JVM has exited; with ``wait``, make
+    the JVMs exit first (the process is exiting) and wait for their dumps."""
+    for proc, archive in list(_RECORDING):
+        if wait:
+            proc.stdin.close()  # the gateway JVM exits at EOF on its stdin
+            with contextlib.suppress(subprocess.TimeoutExpired):
+                proc.wait(timeout=600)
+        if proc.poll() is None:
+            continue
+        _RECORDING.remove((proc, archive))
+        if proc.returncode == 0 and os.path.isfile(archive):
+            tmp = f"{archive}.{os.getpid()}.tmp"
+            with contextlib.suppress(OSError):  # unsealed: recorded again
+                with open(tmp, "w") as fh:
+                    json.dump(_stat(archive), fh)
+                os.replace(tmp, archive + ".seal")
+
+
+atexit.register(_seal_recorded, wait=True)
+
+
+def _over_32g(memory: str) -> bool:
+    """Whether a JVM heap of ``memory`` (Spark's notation: "8g", "2048m";
+    MiB without a unit) is too large for compressed oops."""
+    m = re.fullmatch(r"(\d+)([bkmgtp]?)b?", memory.strip().lower())
+    return bool(m) and int(m[1]) * 1024 ** "bkmgtp".index(m[2] or "m") >= 32 * 1024**3
+
+
+def class_archive_launch(conf: dict[str, str]) -> tuple[str, str | None, str | None]:
+    """The class-data-sharing flag of a driver JVM about to launch with the
+    caller's ``conf``, its archive, and the empty ``SPARK_CONF_DIR`` to
+    launch it with; ``("", None, None)`` when it launches without an
+    archive (see the note in get_spark)."""
+    if "spark.driver.defaultJavaOptions" in conf:
+        return "", None, None
+    spark_home = _find_spark_home()
+    conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
+    if os.path.isdir(conf_dir) and any(
+        not name.endswith(".template") for name in os.listdir(conf_dir)
+    ):
+        return "", None, None
+    classpath = [
+        entry
+        for value in (
+            conf.get("spark.driver.extraClassPath"),
+            os.environ.get("HADOOP_CONF_DIR"),
+            os.environ.get("YARN_CONF_DIR"),
+            os.environ.get("SPARK_DIST_CLASSPATH"),
+        )
+        if value
+        for entry in value.split(os.pathsep)
+    ]
+    if any(os.path.isdir(entry) and os.listdir(entry) for entry in classpath):
+        return "", None, None
+    java_home = os.environ.get("JAVA_HOME")
+    java = os.path.join(java_home, "bin", "java") if java_home else shutil.which("java")
+    jars = os.path.join(spark_home, "jars")
+    if not java or not os.path.isdir(jars):
+        return "", None, None
+    java = os.path.realpath(java)
+    key = hashlib.sha256(json.dumps([
+        java,
+        _stat(java),
+        _stat(os.path.join(os.path.dirname(os.path.dirname(java)), "lib", "modules")),
+        [(name, _stat(os.path.join(jars, name))) for name in sorted(os.listdir(jars))],
+        classpath,
+        _over_32g(conf.get("spark.driver.memory", "1g")),
+    ]).encode()).hexdigest()[:16]
+    cache = class_archive_dir()
+    empty_conf = os.path.join(cache, "empty-conf")
+    try:
+        os.makedirs(empty_conf, exist_ok=True)
+    except OSError:
+        return "", None, None
+    if not os.access(cache, os.W_OK):
+        return "", None, None
+    archive = os.path.join(cache, f"{key}.jsa")
+    if _sealed(archive):
+        return f'-XX:SharedArchiveFile="{archive}"', archive, empty_conf
+    for name in os.listdir(cache):  # older keys' archives, and an unsealed one
+        if name.endswith((".jsa", ".seal")):
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(os.path.join(cache, name))
+    # -Xlog:cds=error: the dump warns on stdout about each class it skips.
+    return f'-Xlog:cds=error -XX:ArchiveClassesAtExit="{archive}"', archive, empty_conf
+
+
+def diagnostic_command(spark: SparkSession, operation: str) -> str:
+    """Run one of jcmd's diagnostic commands, named as the DiagnosticCommand
+    MBean names it (``"vmInfo"``, ``"compilerDirectivesPrint"``), in the
+    session's driver JVM and return its output."""
+    jvm, gateway = spark.sparkContext._jvm, spark.sparkContext._gateway
+
+    def array(cls, *items):
+        out = gateway.new_array(cls, len(items))
+        for i, item in enumerate(items):
+            out[i] = item
+        return out
+
+    # The platform MBeanServer's class is not exported to py4j, so its
+    # invoke is called through the public interface.
+    cls = jvm.java.lang.Class.forName
+    invoke = cls("javax.management.MBeanServerConnection").getMethod("invoke", array(
+        jvm.java.lang.Class, cls("javax.management.ObjectName"), cls("java.lang.String"),
+        cls("[Ljava.lang.Object;"), cls("[Ljava.lang.String;"),
+    ))
+    return invoke.invoke(
+        jvm.java.lang.management.ManagementFactory.getPlatformMBeanServer(),
+        array(
+            jvm.java.lang.Object,
+            jvm.javax.management.ObjectName("com.sun.management:type=DiagnosticCommand"),
+            operation, None, None,
+        ),
+    )
+
+
+def class_archive(spark: SparkSession) -> str:
+    """What the session's driver JVM does with a class-data-sharing archive:
+    ``"mapped"`` (it loads classes from one), ``"recorded"`` (it writes one
+    when it exits) or ``"off"``."""
+    args = list(
+        spark.sparkContext._jvm.java.lang.management.ManagementFactory
+        .getRuntimeMXBean().getInputArguments()
+    )
+    if any(a.startswith("-XX:ArchiveClassesAtExit=") for a in args):
+        return "recorded"
+    if not any(a.startswith("-XX:SharedArchiveFile=") for a in args):
+        return "off"
+    # [base, end of the JDK's own archive, end of the last archive): the two
+    # ends differ when a dynamic archive is mapped on top.
+    m = re.search(
+        r"CDS archive\(s\) mapped at: \[(\w+)-(\w+)-(\w+)\)",
+        diagnostic_command(spark, "vmInfo"),
+    )
+    return "mapped" if m and m[2] != m[3] else "off"
+
 
 def get_spark(
     app_name: str = "ai-powered-e-commerce-analytics-spark",
@@ -53,6 +230,15 @@ def get_spark(
     shuffle_partitions = shuffle_partitions or int(
         os.environ.get("SPARK_SHUFFLE_PARTITIONS", "32")
     )
+    extra_conf = extra_conf or {}
+    memory = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
+    # -- Class-data sharing: see the note at spark.driver.defaultJavaOptions.
+    archive_flag, archive, empty_conf = "", None, None
+    if SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
+        _seal_recorded()  # a JVM this process stopped may have recorded one
+        archive_flag, archive, empty_conf = class_archive_launch(
+            {"spark.driver.memory": memory, **extra_conf}
+        )
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -62,10 +248,7 @@ def get_spark(
         # broadcast build and localCheckpoint block. Size it like the
         # single combined executor it actually is (env-overridable; no
         # effect if a JVM already exists in-process).
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
-        )
+        .config("spark.driver.memory", memory)
         # -- Adaptive execution: runtime coalescing, skew-join splitting.
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -169,7 +352,61 @@ def get_spark(
         # caller's confs come after this one, so a caller who sets
         # spark.driver.defaultJavaOptions replaces it; spark-submit appends
         # spark.driver.extraJavaOptions (perfbench's fixed heap) after it.
-        .config("spark.driver.defaultJavaOptions", DRIVER_JIT_OPTIONS)
+        # -- Class-data sharing (class_archive_launch). A driver JVM spends
+        # much of its launch finding and parsing classes: in a JFR sample
+        # of a queries-light cold pass, 51 of 270 Java-thread samples were
+        # class loading, 38 of them jar-entry lookups across Spark's 287
+        # jars. HotSpot's dynamic AppCDS archive keeps those classes
+        # parsed and verified in one file the JVM maps at launch. The
+        # first launch records it (-XX:ArchiveClassesAtExit: the JVM
+        # writes it when it exits, and the process's exit waits for that
+        # dump); later ones map it (-XX:SharedArchiveFile). The flag
+        # joins DRIVER_JIT_OPTIONS above.
+        # File: <key>.jsa in class_archive_dir(), that is
+        # ${XDG_CACHE_HOME:-~/.cache}/ai_powered_e_commerce_analytics_spark/.
+        # The key covers what the archive depends on: the JDK the launcher
+        # runs (JAVA_HOME, else java on PATH), every classpath input
+        # ($SPARK_HOME/jars names, inodes, sizes and mtimes,
+        # spark.driver.extraClassPath, HADOOP_CONF_DIR, YARN_CONF_DIR,
+        # SPARK_DIST_CLASSPATH) and whether compressed oops are on (off
+        # at a 32g driver heap or more). Recording a new key deletes the
+        # other keys' archives. A <key>.jsa.seal file holds the inode,
+        # size and mtime the archive had when its JVM exited: the JVM
+        # checks neither the length nor a checksum of an archive, and
+        # one cut to half its size crashed it at launch, so an archive
+        # that does not match its seal is deleted and recorded again.
+        # After a launch that maps an archive, the DiagnosticCommand
+        # MBean's VM.info shows whether the JVM took it; one it refused
+        # is deleted, and the next launch records a fresh one.
+        # Cost, once per JDK and Spark install: 141-189 MB of disk (it
+        # holds the classes the recording session loaded; 141 MB for a
+        # bare session, 189 MB for a perfbench medallion-stream one), a
+        # 9-12 s dump at that JVM's exit, and 1.3-5.7 s more on that
+        # session's start (8.8 s bare, 14.7 s perfbench set-up). Clear it
+        # by deleting the directory.
+        # JDK 17 refuses to archive classes when a non-empty directory
+        # precedes their jar on the classpath, and Spark's launcher puts
+        # $SPARK_CONF_DIR (default $SPARK_HOME/conf) first. So when that
+        # directory is missing, empty or holds only *.template files,
+        # the JVM launches with SPARK_CONF_DIR set to an empty directory
+        # next to the archive (in os.environ only around getOrCreate);
+        # nothing it would read is lost.
+        # Skipped, launching exactly as without an archive, when: the
+        # conf dir holds a real file, the caller sets
+        # spark.driver.defaultJavaOptions, another non-empty directory is
+        # on the classpath, the cache directory cannot be written, or a
+        # JVM already runs in this process.
+        # Measured (4 cores, perfbench, 10 pairs per workload against the
+        # tree without the archive, after one recording run): setup_s
+        # median 9.30 -> 4.56 s on medallion-stream and 10.17 -> 5.82 s on
+        # queries-light, lower in 10 of 10 pairs on each; a traced run's
+        # session.start_s 5.74 -> 2.95 s. scaled_cpu_s -4.2% and -0.0%,
+        # peak_rss_mb -0.4% and +0.5% (the mapped archive's pages).
+        # Driver only: a cluster's executor JVMs launch as before.
+        .config(
+            "spark.driver.defaultJavaOptions",
+            f"{DRIVER_JIT_OPTIONS} {archive_flag}".rstrip(),
+        )
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.parquet.int96RebaseModeInRead", "CORRECTED")
         # -- Keep driver logs quiet in tests/bench.
@@ -184,10 +421,26 @@ def get_spark(
     # plans already hint shuffle_hash explicitly (PageRank), which also
     # keeps the SHJ build-side-fits-memory risk scoped instead of
     # global.
-    for k, v in (extra_conf or {}).items():
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    saved_conf_dir = os.environ.get("SPARK_CONF_DIR")
+    if empty_conf:
+        os.environ["SPARK_CONF_DIR"] = empty_conf
+    try:
+        spark = builder.getOrCreate()
+    finally:
+        if empty_conf:
+            del os.environ["SPARK_CONF_DIR"]
+            if saved_conf_dir is not None:
+                os.environ["SPARK_CONF_DIR"] = saved_conf_dir
     spark.sparkContext.setLogLevel("WARN")
+    if archive and "-XX:ArchiveClassesAtExit" in archive_flag:
+        _RECORDING.append((spark.sparkContext._gateway.proc, archive))
+    elif archive and class_archive(spark) != "mapped":
+        # The JVM refused the archive: the next launch records a fresh one.
+        for path in (archive, archive + ".seal"):
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(path)
     # -- Streaming checkpoint renames. Every offset, commit and state-store
     # delta file is written to a temp file and renamed into place, which
     # is what makes a micro-batch's commit atomic. Spark's default manager

@@ -253,9 +253,11 @@ def _isolate_one(name: str) -> None:
     bench-noise-discipline)."""
     from ai_powered_e_commerce_analytics_spark.functions.core import released
     from ai_powered_e_commerce_analytics_spark.plans import query_map
-    from ai_powered_e_commerce_analytics_spark.session import get_spark
+    from ai_powered_e_commerce_analytics_spark.session import class_archive, get_spark
 
+    start = time.perf_counter()
     spark = get_spark(app_name=f"bench-isolate-{name}")
+    session_start_s = round(time.perf_counter() - start, 3)
     queries = query_map()
 
     def run(q: str) -> None:
@@ -284,6 +286,8 @@ def _isolate_one(name: str) -> None:
         "name": name, "times": times, "err": err,
         "jit_compile_ms": jit_compile_ms(jvm) - jit0,
         "code_heap_mb": code_heap_mb(jvm)["total"],
+        "session_start_s": session_start_s,
+        "class_archive": class_archive(spark),
     }))
     spark.stop()
 
@@ -301,6 +305,8 @@ def isolate_main(names: list[str]) -> None:
     medians: dict[str, float] = {}
     jit_ms: dict[str, int] = {}
     code_heap: dict[str, float] = {}
+    session_start: dict[str, float] = {}
+    archive: dict[str, str] = {}
     errors: dict[str, str] = dict.fromkeys(unknown, "not in HEADLINE")
     for name in names:
         if name in errors:
@@ -323,6 +329,8 @@ def isolate_main(names: list[str]) -> None:
             continue
         jit_ms[name] = res["jit_compile_ms"]
         code_heap[name] = res["code_heap_mb"]
+        session_start[name] = res["session_start_s"]
+        archive[name] = res["class_archive"]
         if res.get("err"):
             errors[name] = res["err"]
         elif res["times"]:
@@ -341,16 +349,20 @@ def isolate_main(names: list[str]) -> None:
         "queries_median": medians,
         "jit_compile_ms": jit_ms,
         "code_heap_mb": code_heap,
+        "session_start_s": session_start,
+        "class_archive": archive,
     }))
 
 
 def main() -> None:
     from ai_powered_e_commerce_analytics_spark.functions.core import released
     from ai_powered_e_commerce_analytics_spark.plans import query_map
-    from ai_powered_e_commerce_analytics_spark.session import get_spark
+    from ai_powered_e_commerce_analytics_spark.session import class_archive, get_spark
 
     probe = cpu_probe_s()  # host-state datum, BEFORE the JVM spins up
+    start = time.perf_counter()
     spark = get_spark(app_name="bench")
+    session_start_s = round(time.perf_counter() - start, 3)
     queries = query_map()
 
     def run(name: str) -> None:
@@ -442,6 +454,10 @@ def main() -> None:
         codegen_recompiles={n: d for n, d in recompiles.items() if any(d)},
         jit_compile_ms=jit_ms,
         code_heap_mb=code_heap_mb(jvm),
+        # The JVM launch and session start, and whether the launch mapped
+        # the driver's class-data-sharing archive (session.class_archive).
+        session_start_s=session_start_s,
+        class_archive=class_archive(spark),
     )
     try:  # per-query detail for the judge; never let IO kill the run
         detail_path = os.path.join(

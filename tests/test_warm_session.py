@@ -9,7 +9,7 @@ import json
 
 from ai_powered_e_commerce_analytics_spark.plans import query_map
 from ai_powered_e_commerce_analytics_spark.plans.spec import t
-from ai_powered_e_commerce_analytics_spark.session import JIT_DIRECTIVES
+from ai_powered_e_commerce_analytics_spark.session import JIT_DIRECTIVES, diagnostic_command
 
 # In a fresh session these generate 174 distinct classes at sf0.001,
 # more than Spark's default cache of 100 holds.
@@ -105,29 +105,7 @@ def test_driver_jvm_keeps_one_off_code_out_of_c2(spark):
     """The JVM's own directive stack (jcmd Compiler.directives_print, read
     through the DiagnosticCommand MBean) holds the package's patterns with
     C2 excluded, ahead of the default directive."""
-    jvm, gateway = spark.sparkContext._jvm, spark.sparkContext._gateway
-
-    def array(cls, *items):
-        out = gateway.new_array(cls, len(items))
-        for i, item in enumerate(items):
-            out[i] = item
-        return out
-
-    # The platform MBeanServer's class is not exported to py4j, so its
-    # invoke is called through the public interface.
-    cls = jvm.java.lang.Class.forName
-    invoke = cls("javax.management.MBeanServerConnection").getMethod("invoke", array(
-        jvm.java.lang.Class, cls("javax.management.ObjectName"), cls("java.lang.String"),
-        cls("[Ljava.lang.Object;"), cls("[Ljava.lang.String;"),
-    ))
-    printed = invoke.invoke(
-        jvm.java.lang.management.ManagementFactory.getPlatformMBeanServer(),
-        array(
-            jvm.java.lang.Object,
-            jvm.javax.management.ObjectName("com.sun.management:type=DiagnosticCommand"),
-            "compilerDirectivesPrint", None, None,
-        ),
-    )
+    printed = diagnostic_command(spark, "compilerDirectivesPrint")
     ours = printed.split("Directive:")[1]
     matching = ours.split("matching: ")[1].split("\n")[0]
     (directive,) = json.load(open(JIT_DIRECTIVES))
