@@ -10,6 +10,7 @@ pipelines as one CLI over a base directory::
     python -m ai_powered_e_commerce_analytics_spark etl     --base /tmp/med
     python -m ai_powered_e_commerce_analytics_spark pretrain \
         --sf-dir /root/testdata/sf0.01 --out /tmp/corpus
+    python -m ai_powered_e_commerce_analytics_spark ledger
 
 Layout under ``--base``::
 
@@ -109,6 +110,8 @@ def main(argv: list[str] | None = None) -> int:
     c.add_argument(
         "--queries", help="comma-separated names (default: whole registry)"
     )
+
+    sub.add_parser("ledger", help="refresh PLAN_LEDGER.json (registry.refresh_ledger)")
 
     c = sub.add_parser(
         "compact-sketches",
@@ -276,6 +279,10 @@ def _run(spark, args) -> dict:
         return run_pretrain_pipeline(spark, args.sf_dir, args.out)
     if args.cmd == "audit":
         return _audit(spark, args)
+    if args.cmd == "ledger":
+        from .plans.registry import refresh_ledger
+
+        return refresh_ledger(spark)
     if args.cmd == "ann-index":
         return _ann_index(spark, args)
     if args.cmd == "corpus-index":
@@ -350,10 +357,11 @@ def _run(spark, args) -> dict:
     if args.cmd == "etl":
         return etl()
     # demo: the full medallion chain + a KPI readback proof
+    from .operators.kpis import KPI_KEYS
     from .sinks import read_upsert_table
 
     stats = {"collect": collect(), "review": review(), "etl": etl()}
-    for name in ("user_kpis", "shop_kpis", "date_kpis"):
+    for name in KPI_KEYS:
         stats[name] = read_upsert_table(spark, f"{d['kpis']}/{name}").count()
     return stats
 

@@ -225,8 +225,19 @@ RELIABLE_CHECKPOINT_CONF = "spark.graft.checkpointDir"
 
 log = logging.getLogger(__name__)
 
-#: The innermost :func:`released` scope's shares; None outside any.
-_SCOPE: ContextVar[list | None] = ContextVar("shares", default=None)
+
+class Scope:
+    """One :func:`released` scope: the shares it frees on exit, and the
+    analyzed plans its checkpoint shares cut off (for
+    ``probes.plan_fingerprint``)."""
+
+    def __init__(self):
+        self.shares: list = []
+        self.checkpointed: list = []
+
+
+#: The innermost :func:`released` scope; None outside any.
+_SCOPE: ContextVar[Scope | None] = ContextVar("shares", default=None)
 
 
 def share(df, how: str):
@@ -282,21 +293,25 @@ def share(df, how: str):
     """
     if how not in ("persist", "checkpoint"):
         raise ValueError(f"share: how must be persist or checkpoint: {how!r}")
+    scope = _SCOPE.get()
     if not isinstance(df, DataFrame):
         if how == "checkpoint":
             raise ValueError("share: a broadcast is shared with how='persist'")
     elif how == "persist":
         df = df.persist()
-    elif ckpt_dir := df.sparkSession.conf.get(RELIABLE_CHECKPOINT_CONF, None):
-        # setCheckpointDir is idempotent for the same path; cheap enough
-        # per call, and keeps the conf the single source of truth.
-        df.sparkSession.sparkContext.setCheckpointDir(ckpt_dir)
-        df = df.checkpoint(eager=True)
     else:
-        df = df.localCheckpoint(eager=True)
-    scope = _SCOPE.get()
+        if scope is not None:
+            # a py4j reference to the already-analyzed plan: no job, no text
+            scope.checkpointed.append(df._jdf.queryExecution().analyzed())
+        if ckpt_dir := df.sparkSession.conf.get(RELIABLE_CHECKPOINT_CONF, None):
+            # setCheckpointDir is idempotent for the same path; cheap
+            # enough per call, and keeps the conf the single source of truth.
+            df.sparkSession.sparkContext.setCheckpointDir(ckpt_dir)
+            df = df.checkpoint(eager=True)
+        else:
+            df = df.localCheckpoint(eager=True)
     if scope is not None:
-        scope.append(df)
+        scope.shares.append(df)
     return df
 
 
@@ -321,16 +336,20 @@ def release(x) -> None:
 def released(spark: SparkSession):
     """Scope the shares made inside it: on exit, on success or on error,
     every frame and broadcast :func:`share` registered here is released
-    (see :func:`release`). Scopes nest; a share joins the innermost. On
-    a stopped session the release is skipped, its blocks being gone."""
-    shares: list = []
-    token = _SCOPE.set(shares)
+    (see :func:`release`). Scopes nest; a share joins the innermost, and
+    on exit the enclosing scope inherits its checkpointed plans. On a
+    stopped session the release is skipped, its blocks being gone.
+    Yields the :class:`Scope`."""
+    outer, scope = _SCOPE.get(), Scope()
+    token = _SCOPE.set(scope)
     try:
-        yield
+        yield scope
     finally:
         _SCOPE.reset(token)
+        if outer is not None:
+            outer.checkpointed += scope.checkpointed
         if spark.sparkContext._jsc is not None:
-            for x in reversed(shares):
+            for x in reversed(scope.shares):
                 try:
                     release(x)
                 except Exception:  # noqa: BLE001 - never mask the body's error

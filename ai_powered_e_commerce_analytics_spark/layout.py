@@ -34,31 +34,6 @@ from pyspark.sql import functions as F
 _Z_BITS = 21   # bits per column in the Morton code (2 cols -> 42 bits)
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    key: str,
-    *,
-    n_buckets: int = 8,
-    mode: str = "overwrite",
-) -> None:
-    """Persist ``df`` as a bucketed+sorted parquet TABLE on ``key`` —
-    the pay-the-shuffle-once layout: every later equi-join or
-    aggregation on ``key`` between co-bucketed tables runs with NO
-    exchange (and no sort, thanks to ``sortBy``), which at 100 TB is
-    the single biggest shuffle-elimination lever for recurring star
-    joins. Bucketing requires the table catalog (``saveAsTable``);
-    plain ``.parquet(path)`` writes drop the bucket spec.
-    """
-    (
-        df.write.format("parquet")
-        .bucketBy(n_buckets, key)
-        .sortBy(key)
-        .mode(mode)
-        .saveAsTable(table)
-    )
-
-
 def morton_code(a: Column, b: Column, *, bits: int = _Z_BITS) -> Column:
     """Bit-interleaved Morton (Z-order) code of two non-negative longs.
 

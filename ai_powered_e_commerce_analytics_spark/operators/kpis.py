@@ -78,6 +78,10 @@ def date_kpis(gold: DataFrame, *, avg_col: str = "price") -> DataFrame:
     )
 
 
+#: Each KPI table's upsert key (main.py:53-55), keyed like :func:`all_kpis`.
+KPI_KEYS = {"user_kpis": "id", "shop_kpis": "shop_id", "date_kpis": "date"}
+
+
 def all_kpis(gold: DataFrame) -> dict[str, DataFrame]:
     """The reference's full KPI fan-out (main.py:53-55) off ONE cached
     enriched frame — the reference re-traverses it 4x (survey §4.1).

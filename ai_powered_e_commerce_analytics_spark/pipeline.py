@@ -245,7 +245,6 @@ def run_collector(
     list of dicts (or None for a failed pull) or an http(s) URL string,
     which is wrapped with :func:`make_http_fetch` (+ optional
     ``api_key``) — the reference's GET-poll workflow out of the box."""
-    cfg = config or EngineConfig()
     if isinstance(fetch, str):
         fetch = make_http_fetch(fetch, api_key)
     rows: list[dict] = []
@@ -253,8 +252,20 @@ def run_collector(
         rows.extend(fetch() or [])  # U1 vertical accumulation
     if not rows:
         return {"rows": 0}
-    base_schema = BRONZE_PRODUCTS
-    no_pool = [f for f in base_schema.fields if f.name not in ("id", "shop_id")]
+    from .sinks import write_bronze_batch
+
+    write_bronze_batch(bronze_from_pulls(spark, rows, config), bronze_new_dir)
+    return {"rows": len(rows)}
+
+
+def bronze_from_pulls(
+    spark: SparkSession, rows: list[dict], config: EngineConfig | None = None
+) -> DataFrame:
+    """Pulled product rows as a bronze frame: the API's columns plus the
+    seeded user (``id``) and shop (``shop_id``) pools the collector
+    assigns."""
+    cfg = config or EngineConfig()
+    no_pool = [f for f in BRONZE_PRODUCTS.fields if f.name not in ("id", "shop_id")]
     from pyspark.sql import types as T
 
     df = spark.createDataFrame(rows, T.StructType(no_pool))
@@ -273,11 +284,7 @@ def run_collector(
         order_by=["item_id"],
         seed=cfg.shop_pool_seed,
     )
-    df = df.drop("item_id")
-    from .sinks import write_bronze_batch
-
-    write_bronze_batch(df, bronze_new_dir)
-    return {"rows": len(rows)}
+    return df.drop("item_id")
 
 
 def run_pretrain_pipeline(

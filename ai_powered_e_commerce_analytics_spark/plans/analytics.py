@@ -1836,19 +1836,15 @@ ANALYTICS_SPECS = [
     QuerySpec("order_value_outliers_zscore", order_value_outliers_zscore,
               ORDER_VALUE_OUTLIERS_SQL, ("grouped-zscore-outliers",)),
     QuerySpec("order_value_mad_outliers", order_value_mad_outliers,
-              ORDER_VALUE_MAD_OUTLIERS_SQL, ("robust-mad-outliers",),
-              touched_round=16),  # r16: AUDIT row changed; r9 addition: composed-percentile robust stats
+              ORDER_VALUE_MAD_OUTLIERS_SQL, ("robust-mad-outliers",)),
     QuerySpec("rfm_customer_segments", rfm_customer_segments,
-              RFM_CUSTOMER_SEGMENTS_SQL, ("rfm-quartile-segmentation",),
-              touched_round=16),  # r16: AUDIT row changed; r7: exact_percentiles_scalable rework
+              RFM_CUSTOMER_SEGMENTS_SQL, ("rfm-quartile-segmentation",)),
     QuerySpec("monthly_revenue_mom", monthly_revenue_mom,
               MONTHLY_REVENUE_MOM_SQL, ("seasonality-mom-trailing",)),
     QuerySpec("customer_segment_scd2", customer_segment_scd2,
-              CUSTOMER_SEGMENT_SCD2_SQL, ("scd2-gaps-and-islands",),
-              touched_round=16),  # r16: AUDIT row changed; r7: exact_percentiles_scalable rework
+              CUSTOMER_SEGMENT_SCD2_SQL, ("scd2-gaps-and-islands",)),
     QuerySpec("referential_integrity_report", referential_integrity_report,
-              REFERENTIAL_INTEGRITY_SQL, ("dq-relationship-tests",),
-              touched_round=7),  # r7: fused one-scan-per-fact rewrite
+              REFERENTIAL_INTEGRITY_SQL, ("dq-relationship-tests",)),
     QuerySpec("monthly_first_vs_repeat", monthly_first_vs_repeat,
               MONTHLY_FIRST_VS_REPEAT_SQL, ("acquisition-retention-mix",)),
     QuerySpec("customer_clv_cohort", customer_clv_cohort,
@@ -1856,9 +1852,7 @@ ANALYTICS_SPECS = [
     QuerySpec("ship_delay_ols_slope", ship_delay_ols_slope,
               SHIP_DELAY_OLS_SQL, ("ols-sufficient-stats",)),
     QuerySpec("part_price_size_skyline", part_price_size_skyline,
-              PART_PRICE_SIZE_SKYLINE_SQL, ("skyline-pareto-frontier",),
-              touched_round=16),  # r16: AUDIT row changed; r10 addition: dominance via bucketed prefix max
+              PART_PRICE_SIZE_SKYLINE_SQL, ("skyline-pareto-frontier",)),
     QuerySpec("part_price_size_date_skyline", part_price_size_date_skyline,
-              PART_PRICE_SIZE_DATE_SKYLINE_SQL, ("skyline-3d-staircase",),
-              touched_round=16),  # r16: AUDIT row changed; r11 addition: k-D via level-exploded staircase
+              PART_PRICE_SIZE_DATE_SKYLINE_SQL, ("skyline-3d-staircase",)),
 ]

@@ -692,14 +692,12 @@ FILTERING_SPECS = [
         doc_unigram_surprisal,
         DOC_UNIGRAM_SURPRISAL_SQL,
         ("perplexity-filter-unigram",),
-        touched_round=16,  # r16: AUDIT row changed
     ),
     QuerySpec(
         "doc_bigram_surprisal",
         doc_bigram_surprisal,
         DOC_BIGRAM_SURPRISAL_SQL,
         ("perplexity-filter-bigram",),
-        touched_round=10,
     ),
     QuerySpec(
         "term_doc_frequency_curve",

@@ -270,8 +270,6 @@ MULTIMODAL_SPECS = [
     QuerySpec(
         "multimodal_dedup_phash", multimodal_dedup_phash,
         MULTIMODAL_DEDUP_PHASH_SQL, ("media-perceptual-dedup",),
-        touched_round=16,  # r16: AUDIT row changed; r14: hamming_band_pairs bucket-size skew
-        # guard — values unchanged below the cap, plan changed.
     ),
     QuerySpec(
         "multimodal_dedup_content_hash", multimodal_dedup_content_hash,

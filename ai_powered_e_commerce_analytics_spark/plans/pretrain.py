@@ -1590,14 +1590,12 @@ PRETRAIN_SPECS = [
         doc_unigram_perplexity,
         _doc_unigram_ppl_sql(),
         ("quality-lm-perplexity-filter",),
-        touched_round=16,  # r16: AUDIT row changed
     ),
     QuerySpec(
         "unigram_lm_em_round",
         unigram_lm_em_round,
         _unigram_sql(),
         ("tokenizer-unigram-lm-em",),
-        touched_round=16,  # r16: AUDIT row changed
     ),
     QuerySpec(
         "decontaminate_ngram_overlap",
@@ -1640,7 +1638,6 @@ PRETRAIN_SPECS = [
         source_temperature_mix,
         SOURCE_TEMPERATURE_MIX_SQL,
         ("mix-temperature-sampling",),
-        touched_round=16,  # r16: AUDIT row changed
     ),
     QuerySpec(
         "source_kl_divergence",
@@ -1653,7 +1650,6 @@ PRETRAIN_SPECS = [
         tokenizer_vocab_coverage,
         TOKENIZER_VOCAB_COVERAGE_SQL,
         ("vocab-oov-coverage",),
-        touched_round=7,  # r7: vocab via TakeOrderedAndProject rewrite
     ),
     QuerySpec(
         "decontaminate_embedding_cosine",
@@ -1666,13 +1662,11 @@ PRETRAIN_SPECS = [
         bpe_merges_topn,
         _bpe_sql(),
         ("bpe-merge-training",),
-        touched_round=11,  # r11: oracle gains the exhausted-merge LEFT JOIN guard
     ),
     QuerySpec(
         "bpe_token_counts",
         bpe_token_counts,
         _bpe_token_counts_sql(),
         ("bpe-token-report",),
-        touched_round=11,  # r11: oracle gains the exhausted-merge LEFT JOIN guard
     ),
 ]

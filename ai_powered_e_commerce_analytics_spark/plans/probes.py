@@ -19,6 +19,9 @@ for these names and marks the row ``"probe": true``.
 
 from __future__ import annotations
 
+import hashlib
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -279,3 +282,31 @@ def executing_plan_census(df: DataFrame) -> dict:
         "cached_relations": len(seen_caches),
         "scan_sources": sources,
     }
+
+
+#: Session counters in an analyzed plan's text: expression ids, the
+#: suffix of a lambda variable (``x_123``), and an observation's random
+#: name and frame id. A ``LogicalRDD`` keeps its output columns: they are
+#: all a driver-built frame shows.
+_PLAN_NOISE = (
+    (re.compile(r"#\d+"), "#"),
+    (re.compile(r"(lambda \w+?)_\d+\b"), r"\1"),
+    (re.compile(r"CollectMetrics \S+, (.*), \d+$", re.M), r"CollectMetrics \1"),
+)
+
+
+def plan_fingerprint(df: DataFrame, scope) -> str:
+    """16-hex sha256 of the sorted, distinct, normalized ANALYZED plans
+    of ``df`` and of every frame a checkpoint share materialized in the
+    ``released`` ``scope`` that built it, so an edit below a build-time
+    checkpoint shows too. Optimized plans would not do: cached ones
+    carry the shuffle-partition count, and ``RewriteDistinctAggregates``
+    orders its groups per JVM. Runs no job."""
+    plans = {df._jdf.queryExecution().analyzed().toString()}
+    plans.update(p.toString() for p in scope.checkpointed)
+    normalized = set()
+    for text in plans:
+        for pattern, repl in _PLAN_NOISE:
+            text = pattern.sub(repl, text)
+        normalized.add(text)
+    return hashlib.sha256("\0".join(sorted(normalized)).encode()).hexdigest()[:16]

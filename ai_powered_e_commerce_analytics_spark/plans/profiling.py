@@ -2226,10 +2226,6 @@ PROFILING_SPECS = [
         llm_judge_bradley_terry,
         _bt_sql(),
         ("llm-judge-bradley-terry",),
-        touched_round=14,  # r14: single-collect rewrite (VERDICT r13
-        # #2) — one (winner, loser)-grain action; wins + symmetric
-        # pair counts fold driver-side. Values identical by long
-        # arithmetic; the corpus join now executes once.
     ),
     QuerySpec(
         "doc_pii_scan",
@@ -2254,7 +2250,6 @@ PROFILING_SPECS = [
         order_value_winsorized_stats,
         ORDER_VALUE_WINSORIZED_SQL,
         ("winsorized-robust-stats",),
-        touched_round=16,  # r16: AUDIT row changed
     ),
     QuerySpec(
         "join_key_skew_profile",
@@ -2267,7 +2262,6 @@ PROFILING_SPECS = [
         join_size_estimate_events_orders,
         JOIN_SIZE_ESTIMATE_SQL,
         ("join-size-estimate",),
-        touched_round=10,
     ),
     QuerySpec(
         "incremental_daily_revenue",
@@ -2292,7 +2286,6 @@ PROFILING_SPECS = [
         shipping_sla_percentiles,
         SHIPPING_SLA_PERCENTILES_SQL,
         ("sla-delay-percentiles",),
-        touched_round=16,  # r16: AUDIT row changed; r7: exact_percentiles_scalable rework
     ),
     QuerySpec(
         "customer_order_value_quartiles",
@@ -2302,14 +2295,12 @@ PROFILING_SPECS = [
         # r9 addition (window-regime percentile query); r10: oracle CTE
         # filters NULL prices so n_orders counts the same population as
         # the helper's count_col (ADVICE r9) — re-gate the pairing
-        touched_round=10,
     ),
     QuerySpec(
         "order_value_quantile_bins",
         order_value_quantile_bins,
         ORDER_VALUE_QUANTILE_BINS_SQL,
         ("quantile-discretizer-bins",),
-        touched_round=16,  # r16: AUDIT row changed; r10 addition: equal-frequency binning
     ),
     QuerySpec(
         "dataset_card_documents",
@@ -2328,21 +2319,18 @@ PROFILING_SPECS = [
         customer_l_diversity,
         CUSTOMER_L_DIVERSITY_SQL,
         ("privacy-l-diversity",),
-        touched_round=9,  # r9 addition
     ),
     QuerySpec(
         "daily_revenue_ewma",
         daily_revenue_ewma,
         DAILY_REVENUE_EWMA_SQL,
         ("ewma-sequential-recurrence",),
-        touched_round=9,  # r9 addition
     ),
     QuerySpec(
         "customer_revenue_pareto",
         customer_revenue_pareto,
         CUSTOMER_REVENUE_PARETO_SQL,
         ("pareto-decile-share",),
-        touched_round=16,  # r16: AUDIT row changed; r7: exact_percentiles_scalable rework
     ),
     QuerySpec(
         "nation_revenue_hhi",

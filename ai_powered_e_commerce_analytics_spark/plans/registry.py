@@ -1,12 +1,11 @@
 """Assembled correctness-query registry (driver contract surface).
 
 The driver oracle-checks the first 50 entries of ``QUERIES`` each round,
-so the registry order is the evidence-rotation policy. Each query's
-last-verified round is derived from the driver's ``CORRECTNESS_r*.json``
-files at the repo root (see ``driver_verified_rounds``): a new round's
-file enters the rotation with no edit here. ``QuerySpec.touched_round``
-is still bumped by hand when a query's plan changes, until a generated
-plan-fingerprint ledger can derive it too.
+so the registry order is the evidence-rotation policy. Its inputs are
+committed files at the repo root: each query's last-verified round
+comes from the driver's ``CORRECTNESS_r*.json`` (``driver_verified_rounds``),
+the round its plan last changed in from ``PLAN_LEDGER.json``
+(``refresh_ledger``, the ``ledger`` CLI command).
 """
 
 from __future__ import annotations
@@ -32,6 +31,8 @@ from .relational_tpch2 import RELATIONAL_TPCH2_SPECS
 from .retrieval import RETRIEVAL_SPECS
 from .sampling import SAMPLING_SPECS
 from .simsearch import SIMSEARCH_SPECS
+from ..functions.core import released
+from .probes import plan_fingerprint
 from .spec import QuerySpec
 from .temporal import TEMPORAL_SPECS
 from .textops import TEXTOPS_SPECS
@@ -58,6 +59,18 @@ _ALL_SPECS: list[QuerySpec] = (
 #: Repo root, where the driver writes one ``CORRECTNESS_r{N}.json`` per round.
 _EVIDENCE_DIR = Path(__file__).resolve().parents[2]
 _GREEN_FLAGS = ("rows_match", "schema_match", "hash_match")
+#: Per-query plan fingerprints and the round each plan last changed in.
+LEDGER_PATH = _EVIDENCE_DIR / "PLAN_LEDGER.json"
+#: The ledger's scale, tier-1's (TESTDATA.md): two queries turn a driver
+#: collect into a plan literal, so a fingerprint holds for one sf only.
+LEDGER_SF_DIR = "/root/testdata/sf0.001"
+
+
+def _round_files(evidence_dir: Path):
+    """``(round, path)`` of every ``CORRECTNESS_r{N}.json`` in the dir."""
+    for path in evidence_dir.glob("CORRECTNESS_r*.json"):
+        if m := re.fullmatch(r"CORRECTNESS_r(\d+)\.json", path.name):
+            yield int(m.group(1)), path
 
 
 def driver_verified_rounds(evidence_dir: Path = _EVIDENCE_DIR) -> dict[str, int]:
@@ -69,18 +82,35 @@ def driver_verified_rounds(evidence_dir: Path = _EVIDENCE_DIR) -> dict[str, int]
     file present every query reads as never checked (round 0), so the
     rotation falls back to registration order."""
     last: dict[str, int] = {}
-    for path in evidence_dir.glob("CORRECTNESS_r*.json"):
-        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", path.name)
-        if m is None:
-            continue
-        rnd = int(m.group(1))
+    for rnd, path in _round_files(evidence_dir):
         for name, row in json.loads(path.read_text()).items():
             if row.get("err") is None and all(row.get(k) for k in _GREEN_FLAGS):
                 last[name] = max(last.get(name, 0), rnd)
     return last
 
 
+def read_ledger(path: Path = LEDGER_PATH) -> dict:
+    """``{"sf_dir": ..., "queries": {name: {"fingerprint": 16 hex,
+    "changed_round": N}}}``; no rows when the file is missing."""
+    if not path.exists():
+        return {"sf_dir": None, "queries": {}}
+    return json.loads(path.read_text())
+
+
+def ledger_rows(old: dict, fingerprints: dict[str, str], next_round: int) -> dict:
+    """Ledger rows for freshly computed ``fingerprints``: a query whose
+    fingerprint equals its ``old`` row keeps that row; a changed or new
+    one records ``next_round`` as the round its plan changed in."""
+    return {
+        name: old[name]
+        if old.get(name, {}).get("fingerprint") == fp
+        else {"fingerprint": fp, "changed_round": next_round}
+        for name, fp in fingerprints.items()
+    }
+
+
 _VERIFIED = driver_verified_rounds()
+_CHANGED = {n: r["changed_round"] for n, r in read_ledger()["queries"].items()}
 
 
 def _last_verified_round(name: str) -> int:
@@ -89,36 +119,18 @@ def _last_verified_round(name: str) -> int:
     return _VERIFIED.get(name, 0)
 
 
-# Order matters: the external driver verifies the FIRST 50 entries against
-# the DuckDB oracle each round, least-recently-verified first. The
-# ordering is PLAN-AWARE (VERDICT r7 finding #1): a query whose
-# implementation was materially rewritten AFTER its last driver check
-# (QuerySpec.touched_round > last verified round) carries stale
-# evidence, so it jumps the queue alongside never-checked additions
-# instead of coasting on a pre-rewrite green row. Partition order:
-#
-#   1. never driver-checked (new additions)           -> key 0
-#   2. plan touched since last driver verification    -> key 1
-#   3. by last-verified round ascending (oldest first) -> key 2 + round
-#
-# touched_round EXEMPTION RULE (VERDICT r12 finding #2): a wrapper or
-# shared-helper sweep that is PROVEN plan-identical — the query's
-# AUDIT.json row (physical-plan feature counts) is unchanged before and
-# after the edit, and the executed plan is bit-identical under the
-# driver's configuration — is exempt from the "shared-helper rewrites
-# count" rule and need not bump touched_round. Anything short of that
-# proof (reasoning alone, "should be identical") must bump it. The r12
-# pin() routing sweep (semdedup, BPE vocab frame, graph loops) used
-# this exemption: pin() is the identity transformation when
-# spark.graft.checkpointDir is unset, which is the driver's
-# configuration, and the AUDIT rows were regenerated unchanged.
-def _staleness(q: QuerySpec) -> float:
-    verified = _last_verified_round(q.name)
+def staleness(verified: int, changed: int) -> int:
+    """Rotation key, least-recently-verified first: 0 for a query never
+    driver-checked, 1 for one whose plan changed after its last green
+    check (its evidence is stale), else 2 + that round, oldest first.
+    Without a ledger every ``changed`` reads 0: the order is age-only."""
     if verified == 0:
         return 0
-    if q.touched_round > verified:
-        return 1
-    return 2 + verified
+    return 1 if changed > verified else 2 + verified
+
+
+def _staleness(q: QuerySpec) -> int:
+    return staleness(_last_verified_round(q.name), _CHANGED.get(q.name, 0))
 
 
 QUERIES: list[QuerySpec] = sorted(_ALL_SPECS, key=_staleness)
@@ -133,3 +145,29 @@ def query_map() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 def oracle_sql_map() -> dict[str, str]:
     return {q.name: q.oracle for q in QUERIES if q.oracle is not None}
+
+
+def refresh_ledger(
+    spark: SparkSession,
+    names: set[str] | None = None,
+    path: Path = LEDGER_PATH,
+) -> dict[str, int]:
+    """Rebuild the named queries (default: all) at ``LEDGER_SF_DIR``,
+    fingerprint each (``probes.plan_fingerprint``) and rewrite the
+    ledger by ``ledger_rows``, a changed plan taking the newest
+    CORRECTNESS round + 1. Unnamed rows are kept; a full refresh drops
+    rows of queries no longer registered. Returns the rows that changed
+    as ``{name: changed_round}``."""
+    old = read_ledger(path)["queries"]
+    fingerprints = {}
+    for q in QUERIES:
+        if names is None or q.name in names:
+            with released(spark) as scope:
+                fp = plan_fingerprint(q.spark(spark, LEDGER_SF_DIR), scope)
+            fingerprints[q.name] = fp
+    newest = max((rnd for rnd, _ in _round_files(_EVIDENCE_DIR)), default=0)
+    rows = ledger_rows(old, fingerprints, newest + 1)
+    kept = {} if names is None else old
+    ledger = {"sf_dir": LEDGER_SF_DIR, "queries": dict(sorted({**kept, **rows}.items()))}
+    path.write_text(json.dumps(ledger, indent=1) + "\n")
+    return {n: r["changed_round"] for n, r in rows.items() if old.get(n) != r}

@@ -1583,14 +1583,12 @@ RELATIONAL_SPECS = [
         copurchase_pagerank,
         COPURCHASE_PAGERANK_SQL,
         ("graph-pagerank-iterative",),
-        touched_round=16,  # r16: AUDIT row changed
     ),
     QuerySpec(
         "events_active_users",
         events_active_users,
         EVENTS_ACTIVE_USERS_SQL,
         ("dau-wau-mau",),
-        touched_round=16,  # r16: AUDIT row changed
     ),
     QuerySpec(
         "events_hourly_gapfill",
@@ -1622,6 +1620,5 @@ RELATIONAL_SPECS = [
         bloom_pruned_part_revenue,
         BLOOM_PRUNED_PART_REVENUE_SQL,
         ("bloom-runtime-filter",),
-        touched_round=8,
     ),
 ]

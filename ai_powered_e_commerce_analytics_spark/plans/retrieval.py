@@ -45,8 +45,7 @@ def _bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     contraction + payload join) and :func:`retrieval_ndcg_mrr` (whose
     judgment contract thresholds raw corpus-wide scores, so it cannot
     start from the top-K frame). Extracted r14 expression-for-
-    expression — the registry's touched_round exemption rule applies
-    to the two prior consumers: their AUDIT rows are unchanged.
+    expression: the two prior consumers' AUDIT rows are unchanged.
 
     ``score(d) = Σ_t ln(1 + (N − df_t + 0.5)/(df_t + 0.5))
                   · tf_td·(k1+1) / (tf_td + k1·(1 − b + b·dl_d/avgdl))``
@@ -909,7 +908,6 @@ RETRIEVAL_SPECS = [
         retrieval_ndcg_mrr,
         RETRIEVAL_NDCG_MRR_SQL,
         ("retrieval-quality-eval",),
-        touched_round=16,  # r16: AUDIT row changed
     ),
     QuerySpec(
         "retrieval_rank_overlap_rbo",
@@ -919,6 +917,5 @@ RETRIEVAL_SPECS = [
         # Implemented + cross-engine-tested r14
         # (tests/test_retrieval.py); registered r15 per VERDICT r14
         # next-round #2 after being queued for window-budget reasons.
-        touched_round=16,  # r16: AUDIT row changed
     ),
 ]

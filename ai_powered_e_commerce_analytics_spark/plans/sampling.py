@@ -636,21 +636,18 @@ SAMPLING_SPECS = [
         weighted_sample_aes,
         WEIGHTED_SAMPLE_AES_SQL,
         ("sample-weighted-without-replacement",),
-        touched_round=10,  # r10 addition: A-ES exponential clocks
     ),
     QuerySpec(
         "weighted_sample_allocated",
         weighted_sample_allocated,
         WEIGHTED_SAMPLE_ALLOCATED_SQL,
         ("sample-neyman-allocation",),
-        touched_round=16,  # r16: AUDIT row changed; r11 addition: largest-remainder Neyman budget
     ),
     QuerySpec(
         "train_test_split_leakage_safe",
         train_test_split_leakage_safe,
         _leakage_safe_sql(),
         ("train-test-split-cluster-integral",),
-        touched_round=11,  # r11 addition: near-dup-atomic split gate
     ),
     QuerySpec(
         "token_budget_curriculum",

@@ -3308,21 +3308,18 @@ SIMSEARCH_SPECS = [
         embedding_pq_codebook,
         EMBEDDING_PQ_CODEBOOK_SQL,
         ("embedding-product-quantization",),
-        touched_round=12,  # r12: _pq_sub_frame explode keeps emb (join removed)
     ),
     QuerySpec(
         "simsearch_ivfpq_topk",
         simsearch_ivfpq_topk,
         SIMSEARCH_IVFPQ_SQL,
         ("ann-ivfpq-adc",),
-        touched_round=12,  # r12: _pq_sub_frame explode keeps emb (join removed)
     ),
     QuerySpec(
         "simsearch_ivfpq_recall",
         simsearch_ivfpq_recall,
         SIMSEARCH_IVFPQ_RECALL_SQL,
         ("ann-ivfpq-recall-monitor",),
-        touched_round=12,  # r12: rerank twin added; _pq_sub_frame join removed
     ),
     QuerySpec(
         "simsearch_ivfpq_rerank",
@@ -3347,14 +3344,12 @@ SIMSEARCH_SPECS = [
         embedding_kcenter_coreset,
         EMBEDDING_KCENTER_SQL,
         ("coreset-kcenter-greedy",),
-        touched_round=11,  # r11 addition: farthest-point diversity trace
     ),
     QuerySpec(
         "embedding_covariance",
         embedding_covariance,
         EMBEDDING_COVARIANCE_SQL,
         ("embedding-covariance-whitening",),
-        touched_round=11,  # r11 addition: exact fixed-point cov contraction
     ),
     QuerySpec(
         "embedding_drift_psi",
@@ -3367,8 +3362,5 @@ SIMSEARCH_SPECS = [
         embedding_corr_drift,
         _corr_drift_sql(),
         ("embedding-rotation-drift-monitor",),
-        touched_round=14,  # r14: one-scan rewrite (VERDICT r13 #1) —
-        # single groupBy(grp,i,j) carries sxy/si/sj/sxx/sjj/n, zero
-        # joins; oracle unchanged (identical IEEE operands).
     ),
 ]

@@ -40,12 +40,6 @@ class QuerySpec:
     oracle: str | None
     #: Which SURVEY.md §2 operators / north-star ops this covers.
     covers: tuple[str, ...] = field(default=())
-    #: Round in which this query's PLAN was last materially rewritten.
-    #: Bump manually when a rewrite lands so the driver-rotation treats
-    #: the query as unverified until a driver window re-checks it —
-    #: age-only staleness would otherwise let a rewrite coast on stale
-    #: green evidence for two rounds (VERDICT r7 finding #1).
-    touched_round: int = 0
 
 
 def cents(col) -> "Column":  # noqa: F821

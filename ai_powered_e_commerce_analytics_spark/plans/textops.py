@@ -2237,80 +2237,67 @@ TEXTOPS_SPECS = [
         contrastive_pair_mining,
         CONTRASTIVE_PAIR_MINING_SQL,
         ("contrastive-pair-mining",),
-        touched_round=16,  # r16: AUDIT row changed
     ),
     QuerySpec("doc_novelty_profile", doc_novelty_profile,
-              DOC_NOVELTY_PROFILE_SQL, ("corpus-novelty-curve",),
-              touched_round=11),  # r11 addition: first-occurrence shingles
+              DOC_NOVELTY_PROFILE_SQL, ("corpus-novelty-curve",)),
     QuerySpec("text_quality", text_quality, TEXT_QUALITY_SQL, ("text-quality",)),
     QuerySpec("lang_id_heuristic", lang_id_heuristic, LANG_ID_SQL, ("lang-id",)),
     QuerySpec("token_stats_by_source", token_stats_by_source, TOKEN_STATS_SQL, ("token-count",)),
     QuerySpec("doc_fingerprint", doc_fingerprint, DOC_FINGERPRINT_SQL, ("fingerprint",)),
-    QuerySpec("tfidf_top_terms", tfidf_top_terms, TFIDF_TOP_TERMS_SQL, ("tfidf",), touched_round=16),
+    QuerySpec("tfidf_top_terms", tfidf_top_terms, TFIDF_TOP_TERMS_SQL, ("tfidf",)),
     QuerySpec("doc_repetition_stats", doc_repetition_stats, DOC_REPETITION_SQL, ("repetition-quality",)),
     QuerySpec("boilerplate_shingle_ratio", boilerplate_shingle_ratio, BOILERPLATE_SQL, ("boilerplate-df",)),
     QuerySpec("dedup_exact", dedup_exact, DEDUP_EXACT_SQL, ("dedup-exact",)),
     QuerySpec("dedup_ngram_jaccard", dedup_ngram_jaccard, DEDUP_NGRAM_JACCARD_SQL, ("dedup-jaccard",)),
-    QuerySpec("dedup_minhash_lsh", dedup_minhash_lsh, DEDUP_MINHASH_LSH_SQL, ("dedup-minhash-lsh",), touched_round=16),
-    QuerySpec("dedup_simhash", dedup_simhash, DEDUP_SIMHASH_SQL, ("dedup-simhash",), touched_round=16),
+    QuerySpec("dedup_minhash_lsh", dedup_minhash_lsh, DEDUP_MINHASH_LSH_SQL, ("dedup-minhash-lsh",)),
+    QuerySpec("dedup_simhash", dedup_simhash, DEDUP_SIMHASH_SQL, ("dedup-simhash",)),
     QuerySpec(
         "dedup_simhash64", dedup_simhash64, DEDUP_SIMHASH64_SQL,
         ("dedup-simhash-banded",),
-        touched_round=16,  # r16: AUDIT row changed; r14: bucket-size skew guard in
-        # hamming_band_pairs (count + raise_error tripwire ahead of
-        # the pair explosion) — values unchanged below the cap, plan
-        # changed. (r13: core factored into hamming_band_pairs.)
     ),
     QuerySpec(
         "dedup_near_dup_survivors",
         dedup_near_dup_survivors,
         DEDUP_NEAR_DUP_SURVIVORS_SQL,
         ("dedup-survivors",),
-        touched_round=16,  # r16: AUDIT row changed
     ),
-    QuerySpec("dedup_components", dedup_components, DEDUP_COMPONENTS_SQL, ("dedup-components",), touched_round=16),
-    QuerySpec("dedup_survivors_cc", dedup_survivors_cc, DEDUP_SURVIVORS_CC_SQL, ("dedup-survivors-transitive",), touched_round=16),
+    QuerySpec("dedup_components", dedup_components, DEDUP_COMPONENTS_SQL, ("dedup-components",)),
+    QuerySpec("dedup_survivors_cc", dedup_survivors_cc, DEDUP_SURVIVORS_CC_SQL, ("dedup-survivors-transitive",)),
     QuerySpec(
         "cross_source_neardup_matrix",
         cross_source_neardup_matrix,
         CROSS_SOURCE_NEARDUP_SQL,
         ("dedup-analytics",),
-        touched_round=16,  # r16: AUDIT row changed
     ),
     QuerySpec(
         "dedup_containment",
         dedup_containment,
         DEDUP_CONTAINMENT_SQL,
         ("dedup-containment",),
-        touched_round=16,  # r16: AUDIT row changed
     ),
     QuerySpec(
         "dedup_edit_distance_verify",
         dedup_edit_distance_verify,
         DEDUP_EDIT_DISTANCE_SQL,
         ("dedup-edit-distance",),
-        touched_round=16,  # r16: AUDIT row changed
     ),
     QuerySpec(
         "lsh_candidate_efficiency",
         lsh_candidate_efficiency,
         LSH_CANDIDATE_EFFICIENCY_SQL,
         ("lsh-precision-metric",),
-        touched_round=16,  # r16: AUDIT row changed
     ),
     QuerySpec(
         "minhash_estimate_error",
         minhash_estimate_error,
         MINHASH_ESTIMATE_ERROR_SQL,
         ("minhash-estimator-quality",),
-        touched_round=16,  # r16: AUDIT row changed
     ),
     QuerySpec(
         "neardup_threshold_sweep",
         neardup_threshold_sweep,
         NEARDUP_THRESHOLD_SWEEP_SQL,
         ("dedup-threshold-sweep",),
-        touched_round=16,  # r16: AUDIT row changed
     ),
     QuerySpec(
         "dedup_cluster_size_histogram",
@@ -2323,7 +2310,6 @@ TEXTOPS_SPECS = [
         term_cooccurrence_pmi,
         TERM_COOCCURRENCE_PMI_SQL,
         ("collocation-pmi",),
-        touched_round=16,  # r16: AUDIT row changed
     ),
     QuerySpec(
         "lang_id_confusion",

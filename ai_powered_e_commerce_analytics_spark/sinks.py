@@ -39,6 +39,7 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from .functions.core import released, share
+from .operators.kpis import KPI_KEYS
 
 
 def write_gold_snapshot(df: DataFrame, gold_dir: str, *, fmt: str = "json") -> str:
@@ -791,15 +792,12 @@ def upsert_kpi_tables(
     spark: SparkSession,
     kpis: dict[str, DataFrame],
     base_dir: str,
-    keys: dict[str, str] | None = None,
 ) -> None:
     """M2: the reference upserts the three KPI tables concurrently
     (data_loader.py:63-65); Spark jobs already parallelize internally, so
-    these run sequentially driver-side — table/key triples from
-    main.py:53-55."""
-    keys = keys or {"user_kpis": "id", "shop_kpis": "shop_id", "date_kpis": "date"}
+    these run sequentially driver-side, each on its ``KPI_KEYS`` key."""
     for name, df in kpis.items():
-        upsert_parquet(spark, df, f"{base_dir}/{name}", keys[name])
+        upsert_parquet(spark, df, f"{base_dir}/{name}", KPI_KEYS[name])
 
 
 def upsert_dbapi(
@@ -928,15 +926,13 @@ def upsert_kpi_tables_dbapi(
     spark: SparkSession,
     kpis: dict[str, DataFrame],
     connection_factory,
-    keys: dict[str, str] | None = None,
 ) -> None:
     """M2 twin of :func:`upsert_kpi_tables` targeting a relational DB —
     the reference's actual fan-out (data_loader.py:63-65: three
-    concurrent Supabase upserts). Table/key triples from main.py:53-55;
-    each table's write already parallelizes across executors."""
-    keys = keys or {"user_kpis": "id", "shop_kpis": "shop_id", "date_kpis": "date"}
+    concurrent Supabase upserts), each on its ``KPI_KEYS`` key; each
+    table's write already parallelizes across executors."""
     for name, df in kpis.items():
-        upsert_dbapi(spark, df, name, keys[name], connection_factory)
+        upsert_dbapi(spark, df, name, KPI_KEYS[name], connection_factory)
 
 
 def compact_parquet_dir(

@@ -1250,14 +1250,14 @@ def collector_stream(
     *,
     rows_per_second: int = 10,
     pulls_per_file: int = 10,
-    available_now: bool = False,
 ):
     """ST1: the collector loop (collector.py:110-128) as a streaming job.
 
     The reference polls an HTTP API; here a rate source drives the
     cadence and ``fetch_batch(n)`` performs the pull (driver-side, like
     the reference), with pool enrichment applied in the batch body and
-    one bronze file per ``pulls_per_file`` accumulated pulls.
+    one bronze file per ``pulls_per_file`` accumulated pulls. No
+    ``availableNow``: the rate source has no rows at its start offset.
     """
     rate = spark.readStream.format("rate").option(
         "rowsPerSecond", rows_per_second
@@ -1270,17 +1270,18 @@ def collector_stream(
         rows = fetch_batch(n)
         if not rows:
             return
-        df = spark.createDataFrame(rows, BRONZE_PRODUCTS)
-        df.write.mode("append").json(f"{bronze_new_dir}/pull_{batch_id}")
+        from ..pipeline import bronze_from_pulls
 
-    writer = (
+        bronze_from_pulls(spark, rows).write.mode("append").json(
+            f"{bronze_new_dir}/pull_{batch_id}"
+        )
+
+    return (
         rate.writeStream.option("checkpointLocation", checkpoint_dir)
         .trigger(processingTime=f"{pulls_per_file} seconds")
         .foreachBatch(process)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def cms_counters_stream(

@@ -50,6 +50,42 @@ def test_cli_audit_reports_plan_shapes(spark):
     assert "error" not in out["tpch_q1_pricing_summary"]
 
 
+def test_cli_ledger_refresh_keeps_unchanged_and_records_changed(
+    spark, tmp_path
+):
+    """``refresh_ledger`` on two queries, one of them built on a
+    build-time checkpoint (``events_active_users``): a row whose
+    fingerprint matches keeps its round, a changed or missing row takes
+    the newest CORRECTNESS round + 1, and every other row is kept."""
+    import json
+
+    from ai_powered_e_commerce_analytics_spark.plans import registry
+
+    committed = registry.read_ledger()
+    rows = committed["queries"]
+    names = {"events_active_users", "tpch_q1_pricing_summary"}
+    path = tmp_path / "PLAN_LEDGER.json"
+    path.write_text(json.dumps(committed))
+    assert registry.refresh_ledger(spark, names, path) == {}
+    assert path.read_text() == registry.LEDGER_PATH.read_text()
+
+    stale = dict(rows, events_active_users={
+        "fingerprint": "0" * 16, "changed_round": 3,
+    })
+    del stale["tpch_q1_pricing_summary"]
+    path.write_text(json.dumps({**committed, "queries": stale}))
+    newest = max(rnd for rnd, _ in registry._round_files(registry._EVIDENCE_DIR))
+    assert registry.refresh_ledger(spark, names, path) == dict.fromkeys(
+        names, newest + 1
+    )
+    got = registry.read_ledger(path)["queries"]
+    for n in names:
+        assert got[n]["fingerprint"] == rows[n]["fingerprint"]
+    assert {n: r for n, r in got.items() if n not in names} == {
+        n: r for n, r in rows.items() if n not in names
+    }
+
+
 def test_registry_specs_declare_coverage():
     from ai_powered_e_commerce_analytics_spark.plans import QUERIES
 

@@ -81,36 +81,6 @@ def test_read_pruned_empty_range_is_schema_correct(spark, tmp_path):
     assert out.columns == li.columns
 
 
-def test_bucketed_tables_join_without_exchange(spark, tmp_path):
-    # Pay-the-shuffle-once: two tables co-bucketed+sorted on the join key
-    # sort-merge-join with NO Exchange (and no per-query Sort) in the
-    # executed plan — the recurring-star-join layout for big tables.
-    from ai_powered_e_commerce_analytics_spark.layout import write_bucketed
-
-    o = spark.read.parquet(f"{SF_DIR}/orders.parquet")
-    li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet").withColumnRenamed(
-        "l_orderkey", "o_orderkey"
-    )
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        # force a real join (broadcast would hide the exchange question)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        write_bucketed(o, "bkt_orders", "o_orderkey", n_buckets=4)
-        write_bucketed(li, "bkt_lineitem", "o_orderkey", n_buckets=4)
-        j = spark.table("bkt_orders").join(
-            spark.table("bkt_lineitem"), "o_orderkey"
-        )
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan
-        # same answer as the plain (exchange-paying) join
-        assert j.count() == li.join(o, "o_orderkey").count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS bkt_orders")
-        spark.sql("DROP TABLE IF EXISTS bkt_lineitem")
-
-
 def test_morton_code_roundtrip_bijection(spark):
     # The interleave must be a bijection on (a, b) within the bit budget:
     # decode z back to (a, b) in plain Python over a deterministic sample

@@ -73,8 +73,8 @@ def test_openai_client_falls_back_to_shim():
 
 def test_bucketed_join_has_no_shuffle(spark, tmp_path):
     # Co-located join: two tables bucketed by the same key/count must
-    # merge-join with ZERO shuffle exchanges, and results must match the
-    # plain join.
+    # sort-merge-join with ZERO shuffle exchanges, and results must
+    # match the plain join.
     from ai_powered_e_commerce_analytics_spark.sources import (
         bucketed_join,
         write_bucketed,
@@ -95,6 +95,7 @@ def test_bucketed_join_has_no_shuffle(spark, tmp_path):
         plan = joined._sc._jvm.PythonSQLUtils.explainString(
             joined._jdf.queryExecution(), "formatted"
         )
+        assert "SortMergeJoin" in plan, plan
         assert "Exchange" not in plan, plan
         want = (
             lineitem.join(

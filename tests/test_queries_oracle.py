@@ -1,5 +1,7 @@
 """DuckDB-oracle equality for every registry query (mirrors the driver's
 t2 gate: row-count + schema-shape + order-insensitive value equality).
+At the ledger's scale each query's plan fingerprint must also equal its
+``PLAN_LEDGER.json`` row, so a plan edit is recorded for the rotation.
 
 Runs at sf0.001 by default for speed; set SPARK_GRAFT_TEST_SF_DIR to
 /root/testdata/sf0.01 to reproduce the driver's exact scale.
@@ -15,6 +17,8 @@ import pytest
 
 from ai_powered_e_commerce_analytics_spark.functions.core import released
 from ai_powered_e_commerce_analytics_spark.plans import QUERIES
+from ai_powered_e_commerce_analytics_spark.plans.probes import plan_fingerprint
+from ai_powered_e_commerce_analytics_spark.plans.registry import read_ledger
 from ai_powered_e_commerce_analytics_spark.schemas import TESTDATA_TABLES
 
 from conftest import SF_DIR
@@ -77,12 +81,25 @@ def _shares(spark) -> tuple[set[int], bool]:
     )
 
 
+LEDGER = read_ledger()
+
+
 @pytest.mark.parametrize("spec", QUERIES, ids=lambda s: s.name)
 def test_query_matches_oracle(spark, oracle, spec):
     before = _shares(spark)
-    with released(spark):
-        got = spec.spark(spark, SF_DIR).toPandas()
+    with released(spark) as scope:
+        df = spec.spark(spark, SF_DIR)
+        fingerprint = plan_fingerprint(df, scope)
+        got = df.toPandas()
     assert _shares(spark) == before, f"{spec.name} left shares behind"
+    if SF_DIR == LEDGER["sf_dir"]:
+        recorded = LEDGER["queries"].get(spec.name, {}).get("fingerprint")
+        assert fingerprint == recorded, (
+            f"{spec.name}: plan fingerprint {fingerprint} is not the one "
+            f"PLAN_LEDGER.json records ({recorded}); if the plan change is "
+            "meant, record it with "
+            "`python -m ai_powered_e_commerce_analytics_spark ledger`"
+        )
     if spec.oracle is None:
         assert len(got) >= 0  # rows-only check (driver's weak gate)
         return

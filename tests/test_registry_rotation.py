@@ -1,11 +1,11 @@
-"""Driver-rotation invariants (pure Python — no SparkSession needed).
+"""Driver-rotation invariants (pure Python but for one fingerprint test).
 
 The external driver oracle-checks the FIRST 50 registry entries each
 round, so the ordering IS the evidence-freshness policy. Verification
-history is derived from the committed ``CORRECTNESS_r*.json`` files;
-the rotation is plan-aware via ``QuerySpec.touched_round`` (VERDICT r7
-finding #1: age-only staleness let plan rewrites coast on old green
-rows).
+history is derived from the committed ``CORRECTNESS_r*.json`` files,
+and the round each plan last changed in from the generated
+``PLAN_LEDGER.json`` (VERDICT r7 finding #1: age-only staleness let plan
+rewrites coast on old green rows).
 """
 
 from __future__ import annotations
@@ -86,16 +86,141 @@ def test_driver_verified_rounds_from_synthetic_evidence(tmp_path):
     assert registry.driver_verified_rounds(tmp_path / "empty") == {}
 
 
+def test_ledger_rows_keep_unchanged_and_bump_changed(tmp_path):
+    """An unchanged fingerprint keeps its row's round; a changed or new
+    one records the newest CORRECTNESS round + 1."""
+    for rnd in (3, 12):
+        (tmp_path / f"CORRECTNESS_r{rnd}.json").write_text("{}")
+    (tmp_path / "CORRECTNESS_r12_c8.json").write_text("{}")
+    newest = max(rnd for rnd, _ in registry._round_files(tmp_path))
+    old = {
+        "same": {"fingerprint": "aa", "changed_round": 5},
+        "edited": {"fingerprint": "bb", "changed_round": 9},
+        "gone": {"fingerprint": "cc", "changed_round": 2},
+    }
+    got = registry.ledger_rows(
+        old, {"same": "aa", "edited": "b2", "new": "dd"}, newest + 1
+    )
+    assert got == {
+        "same": {"fingerprint": "aa", "changed_round": 5},
+        "edited": {"fingerprint": "b2", "changed_round": 13},
+        "new": {"fingerprint": "dd", "changed_round": 13},
+    }
+
+
+def test_rotation_from_synthetic_ledger_and_evidence(tmp_path):
+    """A query whose plan changed after its last green round leads the
+    ones verified since; with no ledger the order is age-only."""
+    green = {
+        "rows_match": True, "schema_match": True, "hash_match": True,
+        "err": None,
+    }
+    (tmp_path / "CORRECTNESS_r1.json").write_text(
+        json.dumps({"old": green, "edited": green})
+    )
+    (tmp_path / "CORRECTNESS_r2.json").write_text(
+        json.dumps({"fresh": green, "edited": green})
+    )
+    ledger = tmp_path / "PLAN_LEDGER.json"
+    ledger.write_text(json.dumps({"sf_dir": "x", "queries": {
+        "edited": {"fingerprint": "aa", "changed_round": 3},
+        "fresh": {"fingerprint": "bb", "changed_round": 2},
+        "old": {"fingerprint": "cc", "changed_round": 0},
+    }}))
+    verified = registry.driver_verified_rounds(tmp_path)
+
+    def order(ledger_path):
+        changed = {
+            n: r["changed_round"]
+            for n, r in registry.read_ledger(ledger_path)["queries"].items()
+        }
+        return sorted(
+            ["fresh", "edited", "old", "never"],
+            key=lambda n: registry.staleness(
+                verified.get(n, 0), changed.get(n, 0)
+            ),
+        )
+
+    assert order(ledger) == ["never", "edited", "old", "fresh"]
+    assert registry.read_ledger(tmp_path / "missing.json")["queries"] == {}
+    assert order(tmp_path / "missing.json") == [
+        "never", "old", "fresh", "edited",
+    ]
+
+
+def test_fingerprint_sees_below_checkpoint_not_python_structure(spark):
+    """A filter constant edited BELOW a checkpoint share changes the
+    fingerprint, though the returned plan starts at the checkpoint's
+    LogicalRDD either way; the same frame built through differently
+    structured Python does not. A nested scope hands its checkpointed
+    plans to the enclosing one."""
+    from pyspark.sql import functions as F
+
+    from ai_powered_e_commerce_analytics_spark.functions.core import (
+        Scope,
+        released,
+        share,
+    )
+    from ai_powered_e_commerce_analytics_spark.plans.probes import (
+        plan_fingerprint,
+    )
+    from ai_powered_e_commerce_analytics_spark.plans.spec import t
+
+    from conftest import SF_DIR
+
+    def inline(min_price):
+        with released(spark) as scope:
+            big = share(
+                t(spark, SF_DIR, "orders")
+                .where(F.col("o_totalprice") > min_price)
+                .select("o_custkey", "o_totalprice"),
+                "checkpoint",
+            )
+            out = big.groupBy("o_custkey").agg(
+                F.sum("o_totalprice").alias("spend")
+            )
+            return plan_fingerprint(out, scope), plan_fingerprint(out, Scope())
+
+    def composed(min_price):
+        cols = ["o_custkey", "o_totalprice"]
+
+        def expensive(df):
+            return df.where(F.col("o_totalprice") > min_price).select(*cols)
+
+        def per_customer(df):
+            return df.groupBy(cols[0]).agg(F.sum(cols[1]).alias("spend"))
+
+        with released(spark) as outer:
+            with released(spark):
+                big = share(expensive(t(spark, SF_DIR, "orders")), "checkpoint")
+            assert len(outer.checkpointed) == 1
+            return plan_fingerprint(per_customer(big), outer)
+
+    fp, returned_only = inline(1000.0)
+    edited, edited_returned_only = inline(2000.0)
+    assert fp != edited
+    assert returned_only == edited_returned_only
+    assert composed(1000.0) == fp
+
+
 def test_plan_touched_queries_lead_next_window():
-    """Any query rewritten after its last driver check must re-enter the
-    upcoming 50-query window — stale green evidence is not evidence."""
+    """Any query whose plan changed after its last driver check must
+    re-enter the upcoming 50-query window — stale green evidence is not
+    evidence."""
     window = {q.name for q in registry.QUERIES[:WINDOW]}
     for q in registry.QUERIES:
-        if q.touched_round > registry._last_verified_round(q.name) > 0:
+        changed = registry._CHANGED.get(q.name, 0)
+        if changed > registry._last_verified_round(q.name) > 0:
             assert q.name in window, (
-                f"{q.name} was plan-touched in round {q.touched_round} "
+                f"{q.name}'s plan changed in round {changed} "
                 f"but is outside the driver window"
             )
+
+
+def test_ledger_has_one_row_per_query():
+    ledger = registry.read_ledger()
+    assert ledger["sf_dir"] == registry.LEDGER_SF_DIR
+    assert set(ledger["queries"]) == {q.name for q in registry.QUERIES}
 
 
 def test_window_orders_by_staleness():
@@ -105,10 +230,10 @@ def test_window_orders_by_staleness():
 
 def test_window_composition_and_band_structure():
     """The derived rotation after the round-16 evidence: the upcoming
-    window is led by the 36 queries whose plans round 16 changed and
-    its driver window did not re-check, then filled from the oldest
-    (r12) band. Four r16-touched queries were green in r16 itself and
-    correctly stay out of the head."""
+    window is led by the 36 queries whose plans round 16 changed (per
+    PLAN_LEDGER.json) and its driver window did not re-check, then
+    filled from the oldest (r12) band. Four r16-changed queries were
+    green in r16 itself and correctly stay out of the head."""
     from collections import Counter
 
     names = [q.name for q in registry.QUERIES]
@@ -116,13 +241,14 @@ def test_window_composition_and_band_structure():
     assert Counter(registry._last_verified_round(n) for n in names) == {
         16: 50, 14: 50, 13: 46, 12: 50,
     }
-    touched = [
-        q.name for q in registry.QUERIES
-        if q.touched_round == 16 and registry._last_verified_round(q.name) < 16
+    changed = [
+        n for n in names
+        if registry._CHANGED.get(n, 0) == 16
+        and registry._last_verified_round(n) < 16
     ]
-    assert len(touched) == 36
+    assert len(changed) == 36
     window = names[:WINDOW]
-    assert window[:36] == touched
+    assert window[:36] == changed
     assert all(registry._last_verified_round(n) == 12 for n in window[36:])
     for n in (
         "events_dwell_percentiles",

@@ -9,10 +9,14 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
-from ai_powered_e_commerce_analytics_spark.schemas import SILVER_REVIEWS
+from ai_powered_e_commerce_analytics_spark.schemas import (
+    BRONZE_PRODUCTS,
+    SILVER_REVIEWS,
+)
 from ai_powered_e_commerce_analytics_spark.sinks import read_upsert_table
 from ai_powered_e_commerce_analytics_spark.streaming.jobs import (
     bronze_to_silver_stream,
+    collector_stream,
     dedup_stream,
     events_hourly_stream,
     interval_join_stream,
@@ -66,6 +70,41 @@ def test_file_session_checkpoints_through_filesystem_manager(spark, tmp_path):
         "org.apache.spark.sql.execution.streaming.checkpointing."
         "FileSystemBasedCheckpointFileManager"
     )
+
+
+def test_collector_stream_lands_bronze_files(spark, tmp_path):
+    # ST1: the rate-driven collector loop pulls API-shaped rows through
+    # fetch_batch on its processing-time trigger and lands bronze JSON
+    # with BRONZE_PRODUCTS' columns: the user and shop pools filled in,
+    # as the batch twin run_collector does.
+    pulls = []
+
+    def fetch_batch(n):
+        pulls.append(n)
+        return [
+            {k: v for k, v in r.items() if k not in ("id", "shop_id")}
+            for r in _bronze_rows(5)
+        ]
+
+    bronze = tmp_path / "bronze_new"
+    q = collector_stream(
+        spark, fetch_batch, str(bronze), str(tmp_path / "ckpt"),
+        rows_per_second=5, pulls_per_file=1,
+    )
+    try:
+        deadline = time.monotonic() + 120
+        while not list(bronze.glob("pull_*/_SUCCESS")):
+            assert q.exception() is None, q.exception()
+            assert time.monotonic() < deadline, "no bronze file in 120 s"
+            time.sleep(0.5)
+    finally:
+        q.stop()
+    assert pulls and all(n > 0 for n in pulls)
+    batch = next(bronze.glob("pull_*/_SUCCESS")).parent
+    got = spark.read.json(str(batch))
+    assert sorted(got.columns) == sorted(BRONZE_PRODUCTS.fieldNames())
+    assert got.count() == 5
+    assert got.where(F.col("id").isNull() | F.col("shop_id").isNull()).count() == 0
 
 
 def test_bronze_to_silver_stream(spark, tmp_path):
