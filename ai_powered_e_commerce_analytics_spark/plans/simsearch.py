@@ -841,22 +841,6 @@ def _sqdist(a: Column, b: Column) -> Column:
     )
 
 
-def _argmin_struct(cents_list) -> Column:
-    """Nearest-centroid assignment as a pure per-row expression over the
-    K centroid vectors inlined as literals (argmin via ``least`` on
-    (dist, cid) structs — cid breaks exact ties)."""
-    structs = []
-    for cid, vec in cents_list:
-        lit = F.array(*[F.lit(v) for v in vec])
-        structs.append(
-            F.struct(
-                _sqdist(F.col("emb"), lit).alias("d"),
-                F.lit(cid).cast("long").alias("cid"),
-            )
-        )
-    return F.least(*structs)
-
-
 def _assign_batched(
     df: DataFrame,
     vec_col: str,

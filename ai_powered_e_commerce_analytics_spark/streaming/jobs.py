@@ -9,15 +9,17 @@ data_loader.py:38-51, extractor.go:22-60, loader.go:116-154).
 
 On Spark ALL of that bookkeeping is the streaming file source: checkpoint
 tracking gives exactly-once file consumption (ST2), restart-safe progress
-(ST3), and ``cleanSource=archive`` replaces the manual move. Each job
-supports ``trigger(availableNow=True)`` for batch-parity runs (process
-everything pending, then stop).
+(ST3), and ``cleanSource=archive`` replaces the manual move. Every job
+but ``collector_stream`` starts through :func:`_start_available_now`:
+one run drains what is pending and stops, like one poll of the reference.
 
 ST4: the reference has no event-time semantics (per-date KPIs are string
 keys upserted per run, late rows silently rewrite the date's row). Parity
 is the foreachBatch+upsert path; ``events_hourly_stream`` is the
 documented extension with real watermarks, and ``sessionize_stream`` the
-custom stateful operator (applyInPandasWithState).
+custom stateful operator (applyInPandasWithState). State expires on
+event time, never on processing time, so a run ends by itself and its
+output does not depend on host speed.
 """
 
 from __future__ import annotations
@@ -77,6 +79,23 @@ def _file_stream(
     return reader.json(src_dir)
 
 
+def _start_available_now(
+    stream: DataFrame,
+    process: Callable[[DataFrame, int], None],
+    checkpoint_dir: str,
+    output_mode: str = "append",
+):
+    """Start ``process`` as the ``foreachBatch`` body of a query over
+    ``stream`` that processes everything pending, then stops."""
+    return (
+        stream.writeStream.option("checkpointLocation", checkpoint_dir)
+        .outputMode(output_mode)
+        .foreachBatch(process)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def bronze_to_silver_stream(
     spark: SparkSession,
     bronze_new_dir: str,
@@ -85,7 +104,6 @@ def bronze_to_silver_stream(
     *,
     archive_dir: str | None = None,
     client_factory: Callable[[], object] = StubLLMClient,
-    available_now: bool = True,
 ):
     """The Go review-generation pipeline (survey §3.2) as one streaming
     job: bronze JSON files → item_id assignment → LLM review generation →
@@ -106,11 +124,7 @@ def bronze_to_silver_stream(
         # batch_id-keyed dir => crash-replay rewrites, never duplicates.
         write_silver_chunks(silver, silver_dir, batch_id=batch_id)
 
-    writer = bronze.writeStream.option("checkpointLocation", checkpoint_dir)
-    writer = writer.foreachBatch(process)
-    if available_now:
-        return writer.trigger(availableNow=True).start()
-    return writer.start()
+    return _start_available_now(bronze, process, checkpoint_dir)
 
 
 def silver_to_gold_stream(
@@ -122,7 +136,6 @@ def silver_to_gold_stream(
     *,
     archive_dir: str | None = None,
     client_factory: Callable[[], object] = StubLLMClient,
-    available_now: bool = True,
 ):
     """The Python ETL pipeline (survey §3.1) as one streaming job:
     silver files → sentiment LLM (gold = silver + sentiment) → 3 KPI
@@ -145,11 +158,7 @@ def silver_to_gold_stream(
             # idempotently instead of appending a duplicate copy.
             gold.write.mode("overwrite").json(f"{gold_dir}/batch_{batch_id}")
 
-    writer = silver.writeStream.option("checkpointLocation", checkpoint_dir)
-    writer = writer.foreachBatch(process)
-    if available_now:
-        return writer.trigger(availableNow=True).start()
-    return writer.start()
+    return _start_available_now(silver, process, checkpoint_dir)
 
 
 def dedup_stream(
@@ -315,7 +324,6 @@ def documents_ingest_stream(
     *,
     watermark: str = "2 hours",
     archive_dir: str | None = None,
-    available_now: bool = True,
     quality_gate: bool = False,
     corpus_index_dir: str | None = None,
     index_compact_every: int | None = None,
@@ -512,11 +520,7 @@ def documents_ingest_stream(
             ).select("band", "band_sig")
             append_corpus_keys(spark, corpus_index_dir, accepted_keys, token)
 
-    writer = deduped.writeStream.option("checkpointLocation", checkpoint_dir)
-    writer = writer.foreachBatch(process)
-    if available_now:
-        return writer.trigger(availableNow=True).start()
-    return writer.start()
+    return _start_available_now(deduped, process, checkpoint_dir)
 
 
 def near_dedup_survivors(band_batch: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
@@ -592,6 +596,10 @@ _SESSION_OUT = T.StructType(
 )
 
 SESSION_GAP_US = 1800 * 1_000_000  # 30 min, matches the batch query
+# Lateness allowance of the event-time watermarks the two expiring
+# stateful operators derive themselves (sessionize_stream,
+# debounce_stream) and session_window_stream's default.
+LATENESS = "1 hour"
 
 
 def _session_row(user_id, start, last, n, cents):
@@ -651,13 +659,16 @@ def _session_fn(
         n += 1
         cents += c
     state.update((start, last, n, cents))
-    state.setTimeoutDuration(60 * 60 * 1000)  # close idle sessions after 1h
+    # Close once the watermark passes last + 2·gap: every later non-late
+    # row then has ts + gap > watermark, so ts > last + gap, and would
+    # have started a new session anyway.
+    state.setTimeoutTimestamp((last + 2 * SESSION_GAP_US) // 1000)
     if closed:
         yield pd.DataFrame(closed)
 
 
 def session_window_stream(
-    events: DataFrame, *, watermark: str = "1 hour"
+    events: DataFrame, *, watermark: str = LATENESS
 ) -> DataFrame:
     """Gap-based sessionization via Spark's BUILT-IN ``session_window``
     — the Catalyst-native declarative twin of :func:`sessionize_stream`
@@ -690,8 +701,7 @@ def session_window_stream(
 
     Input: (user_id, ts[, event_type, value]) with ``ts`` a timestamp
     column; in streaming mode closed sessions emit once the event-time
-    watermark (default 1 h, matching the stateful twin's processing-
-    time timeout) passes the session end.
+    watermark (default ``LATENESS``) passes the session end.
     """
     has_rev = "event_type" in events.columns and "value" in events.columns
     rev_c = (
@@ -725,25 +735,48 @@ def session_window_stream(
     )
 
 
+def _gap_end_watermarked(
+    events: DataFrame, cols: list[str], gap_us: int
+) -> DataFrame:
+    """``events[cols]`` plus ``__gap_end`` = ``ts_us + gap_us`` as the
+    event-time column, watermarked ``LATENESS`` behind its maximum: a
+    row ``LATENESS`` or more older than the newest event of an earlier
+    micro-batch is dropped as late.
+
+    The gap end is the time ``session_window`` itself watermarks. It
+    also keeps epoch-0 rows: Spark's first watermark is 0 and a row is
+    late when its event time is ``<=`` the watermark, so a plain
+    ``ts_us`` column would drop them. The column must flow INTO the
+    stateful operator; projecting it away detaches the watermark."""
+    gap_end = F.timestamp_micros(F.col("ts_us") + F.lit(gap_us))
+    return events.select(*cols, gap_end.alias("__gap_end")).withWatermark(
+        "__gap_end", LATENESS
+    )
+
+
 def sessionize_stream(events: DataFrame) -> DataFrame:
     """Gap-based sessionization (with per-session revenue attribution
     when ``event_type``/``value`` columns are present) over a stream of
     (user_id, ts_us[, event_type, value]) rows —
-    ``applyInPandasWithState`` custom stateful operator."""
+    ``applyInPandasWithState`` custom stateful operator.
+
+    A session closes when its user's next event is more than
+    ``SESSION_GAP_US`` later, or once the watermark
+    (:func:`_gap_end_watermarked`) passes ``last + 2·SESSION_GAP_US``."""
     cols = [
         c
         for c in ("user_id", "ts_us", "event_type", "value")
         if c in events.columns
     ]
     return (
-        events.select(*cols)
+        _gap_end_watermarked(events, cols, SESSION_GAP_US)
         .groupBy("user_id")
         .applyInPandasWithState(
             _session_fn,
             outputStructType=_SESSION_OUT,
             stateStructType=_SESSION_STATE,
             outputMode="append",
-            timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+            timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
     )
 
@@ -758,7 +791,6 @@ def hourly_anomaly_stream(
     watermark: str = "2 hours",
     window_hours: int = 7,
     z_threshold: float = 2.0,
-    available_now: bool = True,
 ):
     """Streaming rate-anomaly monitor: watermarked hourly event counts
     upsert into a keyed state table, and every micro-batch re-scores
@@ -802,11 +834,7 @@ def hourly_anomaly_stream(
         ).select("hour", "n_events", "z", "is_anomaly")
         flags.write.mode("overwrite").parquet(flags_dir)
 
-    writer = hourly.writeStream.option("checkpointLocation", checkpoint_dir)
-    writer = writer.outputMode("update").foreachBatch(process)
-    if available_now:
-        return writer.trigger(availableNow=True).start()
-    return writer.start()
+    return _start_available_now(hourly, process, checkpoint_dir, "update")
 
 
 def cdc_apply_stream(
@@ -819,7 +847,6 @@ def cdc_apply_stream(
     schema: T.StructType,
     seq_col: str = "seq",
     archive_dir: str | None = None,
-    available_now: bool = True,
 ):
     """Streaming CDC consumer: JSON change files (op I/U/D + ``seq_col``)
     stream into :func:`~..sinks.apply_cdc_parquet` per micro-batch —
@@ -844,11 +871,7 @@ def cdc_apply_stream(
             return
         apply_cdc_parquet(spark, batch, table_path, key, seq_col=seq_col)
 
-    writer = stream.writeStream.option("checkpointLocation", checkpoint_dir)
-    writer = writer.foreachBatch(process)
-    if available_now:
-        return writer.trigger(availableNow=True).start()
-    return writer.start()
+    return _start_available_now(stream, process, checkpoint_dir)
 
 
 _DEBOUNCE_STATE = T.StructType([T.StructField("last_ts_us", T.LongType())])
@@ -876,20 +899,11 @@ def _debounce_fn(
     a late event landing in a later micro-batch is judged against the
     newest ts already seen (the batch twin would judge it against its
     true predecessor) — re-run the batch query at compaction time for
-    the exact-closure form."""
+    the exact-closure form. An event ``LATENESS`` or more late never
+    reaches this function: the watermark drops it."""
     user_id, event_type = key
     if state.hasTimedOut:
-        # Expiry bounds state to ACTIVE keys, not all keys ever. Under
-        # the in-order arrival contract (processing time tracks event
-        # time) it is also semantically safe: once idle past the window
-        # the next event would be kept regardless. CAVEAT — the timeout
-        # is PROCESSING-time, so after a >window processing-time idle
-        # gap that is NOT an event-time gap (restart, backfill, replay
-        # of historical timestamps) the dropped entry makes the next
-        # event be KEPT even though its event-time gap to its
-        # predecessor is inside the window — a divergence from the
-        # batch twin beyond the documented late-arrival caveat. Re-run
-        # the batch query at compaction time for exact closure.
+        # Expiry bounds state to ACTIVE keys, not all keys ever.
         state.remove()
         return
     (last,) = state.get if state.exists else (None,)
@@ -911,10 +925,10 @@ def _debounce_fn(
             )
         last = ts
     state.update((last,))
-    # Expire idle keys one window after their last event (processing
-    # time ~ event time under the in-order arrival contract) — keeps
-    # state at O(keys active within the window).
-    state.setTimeoutDuration(DEBOUNCE_WINDOW_US // 1000)
+    # Expire once the watermark passes last + 2·window: every later
+    # non-late row then has ts > last + window and is kept with or
+    # without the state, as the batch twin keeps it.
+    state.setTimeoutTimestamp((last + 2 * DEBOUNCE_WINDOW_US) // 1000)
     if kept:
         yield pd.DataFrame(kept)
 
@@ -924,16 +938,28 @@ def debounce_stream(events: DataFrame) -> DataFrame:
     ts_us) rows: suppress events arriving within DEBOUNCE_WINDOW_US of
     the previous same-key event. State is one long per live key —
     O(users × types), never O(events) — so it holds at any stream
-    volume; the batch twin is ``events_dedup_within_window``."""
+    volume; the batch twin is ``events_dedup_within_window``.
+
+    A key's state expires once the event-time watermark passes
+    ``last + 2·DEBOUNCE_WINDOW_US`` (see :func:`_gap_end_watermarked`).
+    Late rows: a row whose ``ts_us`` is ``LATENESS`` or more older than
+    the newest event of an earlier micro-batch is dropped, not judged
+    against the newest timestamp, and Spark counts it in
+    ``numRowsDroppedByWatermark``. A row less late than that is judged
+    against the newest ts its key has seen."""
     return (
-        events.select("user_id", "event_type", "event_id", "ts_us")
+        _gap_end_watermarked(
+            events,
+            ["user_id", "event_type", "event_id", "ts_us"],
+            DEBOUNCE_WINDOW_US,
+        )
         .groupBy("user_id", "event_type")
         .applyInPandasWithState(
             _debounce_fn,
             outputStructType=_DEBOUNCE_OUT,
             stateStructType=_DEBOUNCE_STATE,
             outputMode="append",
-            timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+            timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
     )
 
@@ -1289,8 +1315,6 @@ def cms_counters_stream(
     src_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    *,
-    available_now: bool = True,
 ):
     """Streaming count-min-sketch maintenance over a document stream:
     each micro-batch folds its tokens into (j, bucket) counter
@@ -1334,12 +1358,7 @@ def cms_counters_stream(
             .parquet(f"{out_dir}/batch_id={batch_id}")
         )
 
-    writer = stream.writeStream.option(
-        "checkpointLocation", checkpoint_dir
-    ).foreachBatch(process)
-    if available_now:
-        return writer.trigger(availableNow=True).start()
-    return writer.start()
+    return _start_available_now(stream, process, checkpoint_dir)
 
 
 def read_cms_counters(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -1368,8 +1387,6 @@ def value_histogram_stream(
     src_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    *,
-    available_now: bool = True,
 ):
     """Streaming mergeable value-histogram maintenance over an orders
     stream — the QUANTILE member of the streamed-sketch family
@@ -1428,12 +1445,7 @@ def value_histogram_stream(
             .parquet(f"{out_dir}/batch_id={batch_id}")
         )
 
-    writer = stream.writeStream.option(
-        "checkpointLocation", checkpoint_dir
-    ).foreachBatch(process)
-    if available_now:
-        return writer.trigger(availableNow=True).start()
-    return writer.start()
+    return _start_available_now(stream, process, checkpoint_dir)
 
 
 def read_streamed_percentiles(
@@ -1502,8 +1514,6 @@ def wau_sketches_stream(
     src_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    *,
-    available_now: bool = True,
 ):
     """Streaming twin of ``plans/approx.sliding_wau_hll_union``:
     maintains per-day HLL user sketches over an events stream. Each
@@ -1542,12 +1552,7 @@ def wau_sketches_stream(
             .parquet(f"{out_dir}/batch_id={batch_id}")
         )
 
-    writer = stream.writeStream.option(
-        "checkpointLocation", checkpoint_dir
-    ).foreachBatch(process)
-    if available_now:
-        return writer.trigger(availableNow=True).start()
-    return writer.start()
+    return _start_available_now(stream, process, checkpoint_dir)
 
 
 def read_wau_estimates(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -1571,8 +1576,6 @@ def covariance_sums_stream(
     src_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    *,
-    available_now: bool = True,
 ):
     """Streaming twin of ``plans/simsearch.embedding_covariance`` — the
     FIFTH member of the streamed-sketch family (frequencies / distincts
@@ -1619,12 +1622,7 @@ def covariance_sums_stream(
             .parquet(f"{out_dir}/batch_id={batch_id}")
         )
 
-    writer = stream.writeStream.option(
-        "checkpointLocation", checkpoint_dir
-    ).foreachBatch(process)
-    if available_now:
-        return writer.trigger(availableNow=True).start()
-    return writer.start()
+    return _start_available_now(stream, process, checkpoint_dir)
 
 
 def read_streamed_covariance(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -1721,7 +1719,6 @@ def weighted_sample_stream(
     checkpoint_dir: str,
     *,
     k: int = WSAMPLE_STREAM_K,
-    available_now: bool = True,
 ):
     """Streaming twin of ``plans/sampling.weighted_sample_aes``: a
     length-weighted without-replacement sample of K docs per source,
@@ -1768,12 +1765,7 @@ def weighted_sample_stream(
             f"{out_dir}/batch_id={batch_id}"
         )
 
-    writer = stream.writeStream.option(
-        "checkpointLocation", checkpoint_dir
-    ).foreachBatch(process)
-    if available_now:
-        return writer.trigger(availableNow=True).start()
-    return writer.start()
+    return _start_available_now(stream, process, checkpoint_dir)
 
 
 def read_streamed_weighted_sample(
@@ -2104,7 +2096,6 @@ def rotate_bloom_first_seen(
     bits_per_shard: int = BLOOM_SEEN_BITS_PER_SHARD,
     k: int = BLOOM_SEEN_K,
     fill_warn: float = BLOOM_SEEN_FILL_WARN,
-    available_now: bool = True,
 ):
     """The SCALE.md saturation playbook's ROTATE step, as one call
     (VERDICT r9 #5 — the playbook was documentation + alarm only):
@@ -2161,12 +2152,7 @@ def rotate_bloom_first_seen(
         k=k,
         fill_warn=fill_warn,
     )
-    writer = gated.writeStream.foreachBatch(sink).option(
-        "checkpointLocation", new_checkpoint_dir
-    )
-    if available_now:
-        return writer.trigger(availableNow=True).start()
-    return writer.start()
+    return _start_available_now(gated, sink, new_checkpoint_dir)
 
 
 def copurchase_counts_stream(
@@ -2174,8 +2160,6 @@ def copurchase_counts_stream(
     src_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    *,
-    available_now: bool = True,
 ):
     """Streamed co-purchase sufficient statistics — the SIXTH member of
     the mergeable-sketch family (frequencies / distincts / percentiles
@@ -2238,12 +2222,7 @@ def copurchase_counts_stream(
             .parquet(f"{out_dir}/batch_id={batch_id}")
         )
 
-    writer = stream.writeStream.option(
-        "checkpointLocation", checkpoint_dir
-    ).foreachBatch(process)
-    if available_now:
-        return writer.trigger(availableNow=True).start()
-    return writer.start()
+    return _start_available_now(stream, process, checkpoint_dir)
 
 
 def read_streamed_rule_significance(

@@ -9,6 +9,7 @@ from ai_powered_e_commerce_analytics_spark.sinks import (
     read_upsert_table,
     upsert_parquet,
 )
+from tests.test_streaming import _await
 
 
 def _rows(spark, table):
@@ -211,7 +212,7 @@ def test_cdc_apply_stream_replicates_feed(spark, tmp_path):
             str(tmp_path / "c"),
             schema=schema,
         )
-        q.awaitTermination(120)
+        _await(q)
 
     feed1 = [(1, "a", "I", 1), (2, "b", "I", 2), (2, "b2", "U", 3)]
     spark.createDataFrame(feed1, schema).coalesce(1).write.mode(
@@ -292,7 +293,7 @@ def test_cdc_apply_stream_restart_is_idempotent(spark, tmp_path):
         q = cdc_apply_stream(
             spark, src, table, "k", str(tmp_path / "c"), schema=schema
         )
-        q.awaitTermination(120)
+        _await(q)
 
     run()
     from ai_powered_e_commerce_analytics_spark.hadoop import hadoop_fs

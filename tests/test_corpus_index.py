@@ -28,6 +28,7 @@ from ai_powered_e_commerce_analytics_spark.plans.textops import (
     LSH_BANDS,
     doc_band_keys,
 )
+from tests.test_streaming import _await
 
 TEXT_A = (
     "optimistic concurrency control publishes a manifest generation and "
@@ -191,12 +192,6 @@ def test_operator_matches_oracle_gated_twin(spark, sf_dir, tmp_path):
     rejected = {r.doc_id for r in twin if not r.accepted}
     assert kept == accepted
     assert rejected, "fixture must exercise the rejection path"
-
-
-def _await(query, timeout=120):
-    query.awaitTermination(timeout)
-    if query.isActive:
-        query.stop()
 
 
 def _write_doc_file(spark, src, rows):

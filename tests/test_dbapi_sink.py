@@ -13,6 +13,7 @@ from ai_powered_e_commerce_analytics_spark.sinks import (
     upsert_dbapi,
     upsert_kpi_tables_dbapi,
 )
+from tests.test_streaming import _await
 
 
 def _factory(path: str):
@@ -141,7 +142,7 @@ def test_dbapi_sink_through_real_stream_with_replay(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        _await(q)
 
     drops = [
         [(1, 1.0), (2, 2.0)],

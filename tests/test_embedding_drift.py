@@ -40,6 +40,7 @@ from ai_powered_e_commerce_analytics_spark.plans.simsearch import (
 )
 
 from conftest import SF_DIR
+from tests.test_streaming import _await
 
 #: dims translated by the planted "model bump" and its size in σ units
 _PLANT_DIMS = 8
@@ -193,7 +194,7 @@ def test_drift_from_streamed_store_matches_batch(spark, tmp_path):
         spark.createDataFrame(chunk, schema).coalesce(1).write.mode(
             "overwrite"
         ).json(f"{src}/drop{i}")
-        covariance_sums_stream(spark, src, out, ckpt).awaitTermination(120)
+        _await(covariance_sums_stream(spark, src, out, ckpt))
 
     ref = drift_dim_sums(_xfp_frame(_emb(spark, SF_DIR)))
     streamed = sorted(

@@ -44,6 +44,7 @@ from ai_powered_e_commerce_analytics_spark.streaming.sketch_store import (
     load_manifest,
     wsample_topk_fold,
 )
+from tests.test_streaming import _await
 
 # Each store: (stream fn, compact fn, input schema, two file drops,
 # merge-on-read snapshot fn). Drops share keys across batches so the
@@ -178,7 +179,7 @@ def _drop_and_run(spark, stream_fn, schema, rows, src, out, ckpt, drop):
     spark.createDataFrame(rows, schema).coalesce(1).write.mode(
         "overwrite"
     ).json(f"{src}/drop{drop}")
-    stream_fn(spark, src, out, ckpt).awaitTermination(120)
+    _await(stream_fn(spark, src, out, ckpt))
 
 
 def _delete_last_commit(ckpt: str) -> str:
@@ -242,7 +243,7 @@ def test_compaction_bit_exact_and_replay_safe(spark, tmp_path, store):
     # keep every read result unchanged (the double-count this module
     # exists to prevent).
     _delete_last_commit(ckpt)
-    stream_fn(spark, src, out, ckpt).awaitTermination(120)
+    _await(stream_fn(spark, src, out, ckpt))
     assert os.path.isdir(
         f"{out}/batch_id=1"
     ), "rig must actually replay the compacted micro-batch"
@@ -295,7 +296,7 @@ def test_uncommitted_partition_is_never_folded(spark, tmp_path):
     assert snapshot(spark, out) == before
     # the restart re-runs batch 1 (rewrite-in-place), commits it, and
     # only THEN may compaction fold it
-    stream_fn(spark, src, out, ckpt).awaitTermination(120)
+    _await(stream_fn(spark, src, out, ckpt))
     assert snapshot(spark, out) == before
     stats = compact_fn(spark, out, ckpt)
     assert stats["folded"] == 1 and stats["watermark"] == 1

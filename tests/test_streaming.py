@@ -4,6 +4,8 @@ archival, crash-resume, stateful sessionization."""
 from __future__ import annotations
 
 import glob
+import json
+import os
 import time
 
 import pytest
@@ -28,33 +30,24 @@ from tests.test_sinks_pipeline import _bronze_rows
 
 
 def _await(query, timeout=120):
-    """Wait for an ``availableNow`` query to drain its input, then stop it.
-
-    A stream whose state uses a processing-time timeout
-    (``sessionize_stream``, ``debounce_stream``) never terminates under
-    ``availableNow``: Spark keeps planning no-data batches to fire the
-    timeouts. Such a query is drained once a batch with no new offsets
-    on any source completes after a batch that read rows (a restarted
-    query first re-runs its interrupted no-data batch, so that one alone
-    does not count). The deadline stays as the fallback. A query that
-    failed re-raises its error here, as ``awaitTermination`` does."""
-    deadline = time.monotonic() + timeout
-    while not query.awaitTermination(0.5):
-        if _drained(query.recentProgress) or time.monotonic() > deadline:
-            query.stop()
-            break
+    """Wait for an ``availableNow`` query to end by itself. One still
+    running after ``timeout`` seconds is stopped and fails the test; one
+    that failed re-raises its error here, as ``awaitTermination`` does."""
+    done = query.awaitTermination(timeout)
+    if not done:
+        query.stop()
+    assert done, f"query {query.id} still running after {timeout} s"
 
 
-def _drained(progress) -> bool:
-    read_rows = False
-    for p in progress:
-        if p["numInputRows"] > 0:
-            read_rows = True
-        elif read_rows and all(
-            s["startOffset"] == s["endOffset"] for s in p["sources"]
-        ):
-            return True
-    return False
+def _write_later_file(src, rows):
+    """Write ``rows`` (dicts) as one JSON file in ``src``, dated a second
+    after the newest file there, so a ``maxFilesPerTrigger=1`` stream
+    reads it in a micro-batch after every earlier file's."""
+    newest = max(os.path.getmtime(f) for f in glob.glob(f"{src}/*.json"))
+    path = f"{src}/later.json"
+    with open(path, "w") as fh:
+        fh.writelines(json.dumps(r) + "\n" for r in rows)
+    os.utime(path, (newest + 1, newest + 1))
 
 
 def test_file_session_checkpoints_through_filesystem_manager(spark, tmp_path):
@@ -590,7 +583,8 @@ def test_session_window_stream_emits_on_watermark(spark, tmp_path):
 
 def test_sessionize_stream_stateful(spark, tmp_path):
     # applyInPandasWithState: sessions close when a later event arrives
-    # beyond the gap (same 30-min rule as the batch query).
+    # beyond the gap (same 30-min rule as the batch query), or when the
+    # event-time watermark passes them.
     src = str(tmp_path / "sess")
     hour_us = 3600 * 1_000_000
     rows = [
@@ -601,7 +595,14 @@ def test_sessionize_stream_stateful(spark, tmp_path):
     spark.createDataFrame(rows, "user_id long, ts_us long").coalesce(
         1
     ).write.mode("overwrite").json(src)
-    stream = spark.readStream.schema("user_id long, ts_us long").json(src)
+    # a later micro-batch holds only user 8's event, 100 h on: it moves
+    # the watermark past user 7's open second session
+    _write_later_file(src, [{"user_id": 8, "ts_us": 100 * hour_us}])
+    stream = (
+        spark.readStream.schema("user_id long, ts_us long")
+        .option("maxFilesPerTrigger", 1)
+        .json(src)
+    )
     q = (
         sessionize_stream(stream)
         .writeStream.format("memory")
@@ -612,12 +613,16 @@ def test_sessionize_stream_stateful(spark, tmp_path):
         .start()
     )
     _await(q)
-    closed = spark.table("sessions").collect()
-    # the first session (3 events) closes when the post-gap event arrives
-    assert len(closed) == 1
-    assert (closed[0].n_events, closed[0].session_start_us, closed[0].session_end_us) == (
-        3, 0, 120_000_000,
+    closed = sorted(
+        (r.n_events, r.session_start_us, r.session_end_us)
+        for r in spark.table("sessions").collect()
     )
+    assert closed == [
+        # the second session closes from the watermark alone
+        (2, 2 * hour_us, 2 * hour_us + 1),
+        # the first session (3 events) closes when the post-gap event arrives
+        (3, 0, 120_000_000),
+    ]
 
 
 def test_documents_ingest_stream_job(spark, tmp_path):
@@ -962,7 +967,7 @@ def test_documents_ingest_stream_quality_gate(spark, tmp_path):
     src, out, ckpt = (str(tmp_path / d) for d in ("in", "corpus", "ck"))
     frame.coalesce(1).write.mode("overwrite").json(src)
     q = documents_ingest_stream(spark, src, out, ckpt, quality_gate=True)
-    q.awaitTermination(120)
+    _await(q)
     got = {r.doc_id for r in spark.read.parquet(out).collect()}
     assert got == expected == {1}
 
@@ -996,8 +1001,7 @@ def test_cms_counters_stream_merges_to_batch_sketch(spark, tmp_path):
         spark.createDataFrame(
             rows, "doc_id long, text string, ts string"
         ).coalesce(1).write.mode("overwrite").json(f"{src}/drop{i}")
-        q = cms_counters_stream(spark, src, out, ckpt)
-        q.awaitTermination(120)
+        _await(cms_counters_stream(spark, src, out, ckpt))
 
     streamed = {
         (r.j, r.bucket): r.c for r in read_cms_counters(spark, out).collect()
@@ -1041,7 +1045,7 @@ def test_ingest_then_compact_roundtrip(spark, tmp_path):
         spark.createDataFrame(
             rows, "doc_id long, text string, ts string"
         ).coalesce(1).write.mode("overwrite").json(f"{src}/drop{i}")
-        documents_ingest_stream(spark, src, out, ckpt).awaitTermination(120)
+        _await(documents_ingest_stream(spark, src, out, ckpt))
 
     before = sorted(
         (r.doc_id, r.text) for r in spark.read.parquet(out).collect()
@@ -1060,6 +1064,7 @@ def test_debounce_stream_matches_batch_rule(spark, tmp_path):
     # as the batch events_dedup_within_window query, with state carried
     # across micro-batches (id4's 1h gap is measured against id2 seen in
     # the PREVIOUS batch; id6 sits exactly on the inclusive >= boundary).
+    # A key's state expires once the event-time watermark passes it.
     from ai_powered_e_commerce_analytics_spark.streaming.jobs import (
         DEBOUNCE_WINDOW_US,
         debounce_stream,
@@ -1071,9 +1076,13 @@ def test_debounce_stream_matches_batch_rule(spark, tmp_path):
     out = str(tmp_path / "kept")
 
     def run_stream():
-        stream = spark.readStream.schema(
-            "user_id long, event_type string, event_id long, ts_us long"
-        ).json(src)
+        stream = (
+            spark.readStream.schema(
+                "user_id long, event_type string, event_id long, ts_us long"
+            )
+            .option("maxFilesPerTrigger", 1)
+            .json(src)
+        )
         q = (
             debounce_stream(stream)
             .writeStream.foreachBatch(
@@ -1084,6 +1093,7 @@ def test_debounce_stream_matches_batch_rule(spark, tmp_path):
             .start()
         )
         _await(q)
+        return q
 
     schema = "user_id long, event_type string, event_id long, ts_us long"
     batch1 = [
@@ -1109,10 +1119,26 @@ def test_debounce_stream_matches_batch_rule(spark, tmp_path):
     got = {r.event_id for r in spark.read.parquet(out).collect()}
     assert got == {1, 3, 5, 6}
 
-    # Batch twin on the union of both batches: identical kept set.
+    # A later file holds only user 3's event, 100h on. The watermark it
+    # moves expires (1, click), last seen at 13h, with no row of that
+    # key: one state row removed, user 3's alone left.
+    batch3 = [(3, "view", 7, 100 * H)]
+    _write_later_file(
+        src,
+        [dict(zip(("user_id", "event_type", "event_id", "ts_us"), r))
+         for r in batch3],
+    )
+    progress = run_stream().recentProgress
+    ops = [p["stateOperators"][0] for p in progress]
+    assert sum(op["numRowsRemoved"] for op in ops) == 1
+    assert ops[-1]["numRowsTotal"] == 1
+    got = {r.event_id for r in spark.read.parquet(out).collect()}
+    assert got == {1, 3, 5, 6, 7}
+
+    # Batch twin on the union of all batches: identical kept set.
     from pyspark.sql.window import Window
 
-    all_ev = spark.createDataFrame(batch1 + batch2, schema)
+    all_ev = spark.createDataFrame(batch1 + batch2 + batch3, schema)
     w = Window.partitionBy("user_id", "event_type").orderBy(
         "ts_us", "event_id"
     )
@@ -1328,8 +1354,7 @@ def test_wau_sketches_stream_matches_batch_estimates(spark, tmp_path):
         spark.createDataFrame(
             rows, "user_id long, ts string"
         ).coalesce(1).write.mode("overwrite").json(f"{src}/drop{i}")
-        q = wau_sketches_stream(spark, src, out, ckpt)
-        q.awaitTermination(120)
+        _await(wau_sketches_stream(spark, src, out, ckpt))
 
     streamed = {
         str(r.spine_day): r.wau_est
